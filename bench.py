@@ -6,10 +6,12 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
---scaling: runs the SAME extraction job at local[8] and local[32] (fresh
+--scaling: runs the SAME extraction job at local[N] and local[4N] (fresh
 JVM each, via subprocess) on the same deterministic synthetic pages table
 and reports throughput at both plus efficiency = rate(4N) / (4 * rate(N))
-— the sandbox proxy for the north rule's N -> 4N executor criterion.
+— the sandbox proxy for the north rule's N -> 4N executor criterion. The
+levels come from the CPU affinity mask (_scaling_pairs): 1 -> 4, plus
+nproc/4 -> nproc (8 -> 32 on a 32-core host).
 
 --extract-only: internal child mode for --scaling.
 """
@@ -454,7 +456,17 @@ def skew_ratio(spark, rows: int = 20000) -> dict:
     }
 
 
-def _mp_ceiling(procs_pairs=((1, 4), (8, 32))) -> dict:
+def _nproc() -> int:
+    return len(os.sched_getaffinity(0))
+
+
+def _scaling_pairs(nproc: int) -> list[tuple[int, int]]:
+    """N -> 4N levels that fit the host: 1 -> 4, plus nproc/4 -> nproc
+    when that is a different pair (top pair last)."""
+    return [(n, 4 * n) for n in sorted({1, max(nproc // 4, 1)})]
+
+
+def _mp_ceiling(procs_pairs: list[tuple[int, int]]) -> dict:
     """No-Spark multiprocessing throughput of the same per-doc extraction:
     the HARDWARE scaling ceiling of this VM for CPU-bound Python work.
     Any Spark number must be read against this (cloud vCPUs throttle
@@ -495,8 +507,9 @@ def _mp_work(args):
 
 
 def _scaling_bench(rows_per_cpu: int) -> dict:
+    pairs = _scaling_pairs(_nproc())
     results = {}
-    for cpus in (1, 4, 8, 32):
+    for cpus in sorted({c for pair in pairs for c in pair}):
         rows = rows_per_cpu * cpus
         out = subprocess.run(
             [sys.executable, __file__, "--extract-only", "--cpus", str(cpus), "--rows", str(rows)],
@@ -510,29 +523,31 @@ def _scaling_bench(rows_per_cpu: int) -> dict:
     def eff(n: int, n4: int, key: str = "docs_per_sec") -> float:
         return round(results[n4][key] / (4 * results[n][key]), 3)
 
-    ceiling = _mp_ceiling()
-    eff_8_32 = eff(8, 32, "udf_stage_docs_per_sec")
-    return {
-        "metric": "scaling_efficiency_local8_to_local32",
-        "value": eff_8_32,
+    ceiling = _mp_ceiling(pairs)
+    n, n4 = pairs[-1]
+    top = eff(n, n4, "udf_stage_docs_per_sec")
+    out = {
+        "metric": f"scaling_efficiency_local{n}_to_local{n4}",
+        "value": top,
         "unit": "ratio",
-        "efficiency_1to4_full": eff(1, 4),
-        "efficiency_8to32_full": eff(8, 32),
-        "efficiency_1to4_udf_stage": eff(1, 4, "udf_stage_docs_per_sec"),
-        "efficiency_8to32_udf_stage": eff_8_32,
-        "hardware_ceiling_no_spark": ceiling,
-        "relative_to_ceiling_8to32": round(
-            eff_8_32 / ceiling["8to32"]["efficiency"], 3
-        ),
-        "runs": {str(c): results[c] for c in results},
     }
+    for a, b in pairs:
+        out[f"efficiency_{a}to{b}_full"] = eff(a, b)
+    for a, b in pairs:
+        out[f"efficiency_{a}to{b}_udf_stage"] = eff(a, b, "udf_stage_docs_per_sec")
+    out["hardware_ceiling_no_spark"] = ceiling
+    out[f"relative_to_ceiling_{n}to{n4}"] = round(
+        top / ceiling[f"{n}to{n4}"]["efficiency"], 3
+    )
+    out["runs"] = {str(c): results[c] for c in results}
+    return out
 
 
 def main() -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--scaling", action="store_true")
     parser.add_argument("--extract-only", action="store_true")
-    parser.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    parser.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", _nproc())))
     parser.add_argument("--rows", type=int, default=60000)
     parser.add_argument("--rows-per-cpu", type=int, default=8000)
     args = parser.parse_args()

@@ -67,6 +67,37 @@ def test_extraction_has_exactly_one_exchange(spark):
     plan = plan_of(extracted)
     assert plan.count("Exchange") == 1  # only the salted repartition
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    # the Python stage is one task wave: each Python task pays a fixed
+    # worker set-up, so shuffle.partitions (32) tasks would cost 8 waves
+    assert (
+        extracted.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    )
+
+
+def test_extraction_wave_levels_a_hot_host(spark):
+    """One host owning 40% of the rows still spreads evenly over the
+    one-wave layout: the (host, salt) keys are fine-grained enough that
+    no task gets much more than its share."""
+    import statistics
+
+    ids = spark.range(4000)
+    host = F.when(
+        F.pmod(F.xxhash64("id"), F.lit(10)) < 4, F.lit("hot")
+    ).otherwise(F.concat(F.lit("h"), F.pmod("id", F.lit(50)).cast("string")))
+    pages = ids.select(
+        F.concat(F.lit("http://"), host, F.lit(".example/p"), F.col("id").cast("string"))
+        .alias("url"),
+        F.concat(F.lit("<t>"), F.col("id").cast("string"), F.lit("</t>"))
+        .cast("binary").alias("html"),
+    )
+    extracted = extract_pages(pages, mode="xpath-single", query="//t")
+    rows = [
+        r["count"]
+        for r in extracted.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    ]
+    assert len(rows) == spark.sparkContext.defaultParallelism
+    assert sum(rows) == 4000
+    assert max(rows) / statistics.median(rows) <= 1.5, rows
 
 
 def test_lineage_partial_aggregation(spark):

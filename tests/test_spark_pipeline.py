@@ -188,6 +188,33 @@ def test_multi_mb_pages_bounded_worker_memory(spark):
     assert max(peaks) < 2_000_000, peaks
 
 
+def test_arrow_batches_capped_by_bytes(spark):
+    """build_session caps Arrow batches at ARROW_BATCH_BYTES as well as
+    512 rows: one partition of 2,000 x 20 KB rows reaches mapInPandas in
+    ~4 MB batches, not 512-row (10 MB) ones. Spark closes a batch on the
+    first row that reaches the cap, so a batch overshoots it by less
+    than one row."""
+    from xqspark.pipeline import ARROW_BATCH_BYTES
+
+    row_bytes = 20 * 1024
+    df = spark.range(2000, numPartitions=1).select(
+        F.repeat(F.lit("x"), row_bytes).cast("binary").alias("html")
+    )
+
+    def sizes(batches):
+        import pandas as pd
+
+        for b in batches:
+            yield pd.DataFrame(
+                {"rows": [len(b)], "bytes": [int(sum(len(p) for p in b["html"]))]}
+            )
+
+    got = df.mapInPandas(sizes, "rows long, bytes long").collect()
+    assert sum(r["rows"] for r in got) == 2000
+    assert len(got) > 4  # 2,000 x 20 KB = ~40 MB cut by bytes, not by rows
+    assert all(r["bytes"] < ARROW_BATCH_BYTES + row_bytes for r in got), got
+
+
 def test_extraction_modes_dispatch(spark):
     payload = b"<html><body><p class='x'>hi</p></body></html>"
     df = spark.createDataFrame([("u", None, payload, "", "en")], PAGES_SCHEMA)

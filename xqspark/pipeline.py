@@ -7,7 +7,9 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
   Python-UDF compute (AQE splits shuffle partitions by bytes, not by
   UDF CPU cost, so explicit salting is required)
 - extraction runs in mapInPandas (iterator of Arrow batches — streaming,
-  never collected), one pure-Python core call per document
+  never collected), one pure-Python core call per document, in ONE task
+  wave (defaultParallelism partitions): every Python task pays ~0.19 s
+  of worker set-up on top of its rows, so the task count is the cost
 - per-partition lineage rows (part_key, docs, bytes, errors, checksum)
   are emitted alongside results and aggregated with a built-in hash agg
 - checkpointed resume: a completed-manifest table keyed by deterministic
@@ -17,8 +19,8 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
 Design notes for 1000-executor / 100 TB runs:
 - part_key = pmod(xxhash64(url), n_buckets) is deterministic across runs
   and cluster sizes -> replay-exact resume and stable lineage keys.
-- Arrow batch size is capped (multi-MB html blobs; default 10k rows/batch
-  would OOM Python workers).
+- Arrow batch size is capped by rows AND bytes (multi-MB html blobs;
+  default 10k rows/batch would OOM Python workers).
 - The html blob column is pruned immediately after extraction; lineage
   and metrics queries never read it (column pruning reaches the scan).
 - No Iceberg jar ships in this sandbox: catalog I/O falls back to an
@@ -45,6 +47,11 @@ PAGES_SCHEMA = T.StructType(
         T.StructField("lang", T.StringType(), True),
     ]
 )
+
+# Byte cap on an Arrow batch sent to a Python worker, beside the row cap
+# (build_session's arrow_batch): 512 rows of 2 MB html would be a 1 GB
+# batch, so rows alone do not bound worker memory on multi-MB pages.
+ARROW_BATCH_BYTES = 4 * 1024 * 1024
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -92,6 +99,7 @@ def build_session(
         # html blobs are multi-MB: keep Arrow batches small to bound
         # Python-worker memory (SURVEY.md §4.3)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -277,15 +285,23 @@ def extract_pages(
 
     Plan shape: scan(url, html) [column-pruned] -> salted repartition on
     (host, salt) -> ArrowEval mapInPandas -> project. Exactly one shuffle.
+
+    The repartition defaults to ``defaultParallelism`` partitions, one
+    task wave — the same rule as queries._spread. Do not raise it to
+    ``spark.sql.shuffle.partitions``: every Python task runs PySpark's
+    ``worker_util.setup_spark_files``, whose ``importlib.invalidate_caches()``
+    re-reads pyspark.zip's central directory once per cached zipimporter
+    (~190 ms a task on a 4-vCPU VM, Python 3.11), so 32 tasks on 4 cores
+    pay that 8 times a pass where one wave pays it once (the JVM-only
+    task floor of ~9 ms does not apply here). AQE does not help either:
+    a repartition to a fixed count is never coalesced.
     """
     df = with_part_key(pages, n_buckets)
     if repartition_to is None or repartition_to > 0:
         df = with_host_salt(df, salts)
         df = df.select("url", "html", "host", "salt", "part_key")
-        nparts = repartition_to or df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"
-        )
-        df = df.repartition(int(nparts), "host", "salt")
+        nparts = repartition_to or df.sparkSession.sparkContext.defaultParallelism
+        df = df.repartition(nparts, "host", "salt")
     # repartition_to == 0: caller already partitioned the input (e.g. the
     # steady-state bench times the UDF stage without the one-time exchange,
     # and streaming avoids a per-microbatch stateful exchange) — host/salt
