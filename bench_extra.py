@@ -9,7 +9,7 @@ plans dumped without running the whole bench:
   python bench_extra.py --queries simhash --explain-dir plans/r06 --suffix after
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and
-$SPARK_GRAFT_CPUS (default 32) like bench.py.
+$SPARK_GRAFT_CPUS (default: the cores this process may run on) like bench.py.
 """
 
 from __future__ import annotations
@@ -85,7 +85,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from xqspark.pipeline import build_session
     from xqspark.queries import QUERIES

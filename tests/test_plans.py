@@ -56,6 +56,27 @@ def test_broadcast_join_for_small_dimension(spark):
     assert "BroadcastHashJoin" in plan_of(df)
 
 
+def test_session_leaves_join_and_split_to_spark(spark, monkeypatch):
+    """build_session overrides neither join strategy nor input split
+    size: an unbounded join too big to broadcast gets Spark's default
+    sort-merge join (which can spill), and no env var moves the scan
+    split size away from Spark's default."""
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try:
+        plan = plan_of(spark.range(100_000).join(spark.range(1_000), "id"))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "SortMergeJoin" in plan and "ShuffledHashJoin" not in plan, plan
+
+    key = "spark.sql.files.maxPartitionBytes"
+    monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m")
+    try:
+        got = build_session(cpus=4).conf.get(key)
+    finally:
+        spark.conf.unset(key)
+    assert got == spark.conf.get(key), got  # unset reads back the default
+
+
 def test_ann_broadcasts_query_side(spark):
     df = QUERIES["ann_topk"](spark, SF_DIR)
     assert "Broadcast" in plan_of(df)

@@ -190,11 +190,13 @@ def test_multi_mb_pages_bounded_worker_memory(spark):
 
 def test_arrow_batches_capped_by_bytes(spark):
     """build_session caps Arrow batches at ARROW_BATCH_BYTES as well as
-    512 rows: one partition of 2,000 x 20 KB rows reaches mapInPandas in
-    ~4 MB batches, not 512-row (10 MB) ones. Spark closes a batch on the
-    first row that reaches the cap, so a batch overshoots it by less
-    than one row."""
-    from xqspark.pipeline import ARROW_BATCH_BYTES
+    ARROW_BATCH_ROWS: one partition of 2,000 x 20 KB rows reaches
+    mapInPandas in ~4 MB batches, not 512-row (10 MB) ones. Spark closes
+    a batch on the first row that reaches the cap, so a batch overshoots
+    it by less than one row."""
+    import math
+
+    from xqspark.pipeline import ARROW_BATCH_BYTES, ARROW_BATCH_ROWS
 
     row_bytes = 20 * 1024
     df = spark.range(2000, numPartitions=1).select(
@@ -211,7 +213,9 @@ def test_arrow_batches_capped_by_bytes(spark):
 
     got = df.mapInPandas(sizes, "rows long, bytes long").collect()
     assert sum(r["rows"] for r in got) == 2000
-    assert len(got) > 4  # 2,000 x 20 KB = ~40 MB cut by bytes, not by rows
+    # 2,000 x 20 KB = ~40 MB cut by bytes, not by rows
+    assert ARROW_BATCH_ROWS * row_bytes > ARROW_BATCH_BYTES
+    assert len(got) > math.ceil(2000 / ARROW_BATCH_ROWS)
     assert all(r["bytes"] < ARROW_BATCH_BYTES + row_bytes for r in got), got
 
 

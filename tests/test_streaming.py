@@ -234,42 +234,6 @@ def test_dedup_stream_ttl_expiry_under_available_now(spark):
     assert run(0, "off") == 40  # control: no TTL -> replays dropped
 
 
-@pytest.mark.skipif(
-    not __import__("xqspark.streaming", fromlist=["_tws_available"])._tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf (absent here)",
-)
-def test_dedup_stream_tws_engine(spark):
-    """When protobuf is present, the transformWithStateInPandas engine
-    must produce the same dedup output as the apply engine."""
-    from xqspark.streaming import dedup_stream
-
-    base = tempfile.mkdtemp(prefix="xq_dedup_tws_")
-    src, ckpt = f"{base}/src", f"{base}/ckpt"
-    try:
-        pages = synthesize_pages(spark, n_rows=100, n_hosts=5)
-        pages.coalesce(1).write.parquet(src)
-        pages.limit(30).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(pages.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            dedup_stream(stream, engine="tws")
-            .writeStream.format("memory")
-            .queryName("dedup_tws")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-        urls = [r["url"] for r in spark.sql("select url from dedup_tws").collect()]
-        assert len(urls) == len(set(urls)) == 100
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_bloom_indexes_support_any_k():
     from xqspark.streaming import _bloom_indexes
 

@@ -48,9 +48,10 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# Byte cap on an Arrow batch sent to a Python worker, beside the row cap
-# (build_session's arrow_batch): 512 rows of 2 MB html would be a 1 GB
-# batch, so rows alone do not bound worker memory on multi-MB pages.
+# Arrow batches sent to a Python worker are capped by rows AND bytes:
+# 512 rows of 2 MB html would be a 1 GB batch, so rows alone do not
+# bound worker memory on multi-MB pages.
+ARROW_BATCH_ROWS = 512
 ARROW_BATCH_BYTES = 4 * 1024 * 1024
 
 EXTRACT_SCHEMA = T.StructType(
@@ -64,11 +65,7 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def build_session(
-    cpus: int | None = None,
-    app: str = "xqspark",
-    arrow_batch: int = 512,
-) -> SparkSession:
+def build_session(cpus: int | None = None, app: str = "xqspark") -> SparkSession:
     master = f"local[{cpus}]" if cpus else "local[*]"
     shuffle_parts = str(max(32, (cpus or os.cpu_count() or 8)))
     return (
@@ -77,28 +74,9 @@ def build_session(
         .config("spark.sql.shuffle.partitions", shuffle_parts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r6 (guide §3.1/§9): allow shuffled-hash joins when a build
-        # side fits — the capped pair joins (band_cap/fp_cap/word_cap
-        # bound every build partition) were paying sort-merge sorts for
-        # nothing; measured -0.2..-0.5 s per pair query at sf1.0
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
-        )
-        # r6 (guide §6): row-group-sized input splits so a multi-row-
-        # group file (sf1.0 lineitem: 6 x ~22 MB) scans in parallel
-        # without a shuffle. Parameterised: on a production cluster
-        # with many files per scan, set 512m-1g (guide §6) — splits
-        # only need to be small where files are few relative to cores
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # html blobs are multi-MB: keep Arrow batches small to bound
-        # Python-worker memory (SURVEY.md §4.3)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

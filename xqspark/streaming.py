@@ -15,12 +15,8 @@ state is evicted at scale.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger("xqspark")
 
 from .pipeline import PAGES_SCHEMA, extract_pages, with_host_salt, with_part_key
 
@@ -93,30 +89,15 @@ def _bloom_add(buf: bytearray, idxs) -> None:
         buf[i >> 3] |= 1 << (i & 7)
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas' Python state server speaks protobuf;
-    containers without google.protobuf can only run the
-    applyInPandasWithState engine (import-try gate, not a version
-    check: pyspark 4 is present either way)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _OUT_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, lang string"
 _STATE_SCHEMA_DDL = "cur binary, prev binary, n_cur long, last_ms long"
 
 
 def _bloom_state_fns(bloom_bits: int, bloom_hashes: int, ttl_ms: int):
-    """(load, filter_batch, pack) closures shared by both streaming
-    engines — the Bloom-generation dedup logic and the READ-TIME TTL
-    rule live here once, so engine choice cannot change semantics.
+    """(load, filter_batch, pack) closures holding the Bloom-generation
+    dedup logic and the READ-TIME TTL rule.
 
-    TTL is enforced on state READ (the same rule transformWithState's
-    native ttlDurationMs applies): state older than ttl_ms reads back
+    TTL is enforced on state READ: state older than ttl_ms reads back
     as absent. No processing-time TIMERS anywhere — timer cleanup
     batches are what made applyInPandasWithState + ProcessingTimeTimeout
     never terminate under trigger(availableNow); read-time expiry
@@ -165,7 +146,6 @@ def dedup_stream(
     ttl_minutes: float = 0,
     bloom_bits: int = 1 << 20,
     bloom_hashes: int = 4,
-    engine: str | None = None,
 ) -> DataFrame:
     """Custom stateful operator: cross-microbatch first-seen URL dedup,
     keyed by url-host.
@@ -181,13 +161,7 @@ def dedup_stream(
     trade (0.2% loss for O(1) state on a 10^8-url host) is the standard
     one. For exact small-scale dedup use batch `dedup_groups`.
 
-    ``engine`` (r5): ``"tws"`` = Spark 4 transformWithStateInPandas
-    (RocksDB state store; requires google.protobuf for the Python state
-    server), ``"apply"`` = applyInPandasWithState, ``None`` = tws when
-    protobuf is importable else apply. Both engines run the SAME
-    closures from _bloom_state_fns, so results are identical.
-
-    ttl_minutes > 0 is whole-state READ-TIME expiry in BOTH engines: a
+    ttl_minutes > 0 is whole-state READ-TIME expiry: a
     host whose state wasn't updated within the TTL reads back as absent
     and its URLs re-pass. No processing-time timers — the old
     ProcessingTimeTimeout path kept scheduling "no new data" cleanup
@@ -197,67 +171,11 @@ def dedup_stream(
 
     UPGRADE NOTE: checkpoint state is NOT portable — the r5 state tuple
     gained ``last_ms`` (old (cur, prev, n_cur) checkpoints are
-    incompatible, as was the r2 array->Bloom change), and the two
-    engines' state layouts differ from each other. Discard the
-    checkpoint directory and reprocess when switching."""
+    incompatible, as was the r2 array->Bloom change). Discard the
+    checkpoint directory and reprocess when upgrading."""
     ttl_ms = int(ttl_minutes * 60 * 1000) if ttl_minutes > 0 else 0
     load, filter_batch, pack = _bloom_state_fns(bloom_bits, bloom_hashes, ttl_ms)
-    if engine is None:
-        engine = "tws" if _tws_available() else "apply"
     keyed = with_host_salt(pages).select("host", "url", "warc_ts", "html", "lang")
-
-    if engine == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class _BloomDedup(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                # TTL is applied by load() at read time (identical rule
-                # to native ttlDurationMs, shared with the apply engine)
-                self._bloom = handle.getValueState("bloom", _STATE_SCHEMA_DDL)
-
-            def handleInputRows(self, key, rows, timer_values):
-                cur, prev, n_cur = load(self._bloom.get())
-                for batch in rows:
-                    fresh, cur, prev, n_cur = filter_batch(
-                        batch, cur, prev, n_cur
-                    )
-                    if len(fresh):
-                        yield fresh
-                self._bloom.update(pack(cur, prev, n_cur))
-
-            def close(self) -> None:
-                pass
-
-        # transformWithState runs on the RocksDB state store only.
-        # SESSION-WIDE side effect (r6 advisor note): this changes the
-        # state store provider for every OTHER streaming query started
-        # on the same session afterwards. Only set it when the caller
-        # has not already configured a provider, so an explicit choice
-        # is never silently overridden; callers running mixed streaming
-        # workloads should set the provider themselves per query.
-        conf = pages.sparkSession.conf
-        if conf.get("spark.sql.streaming.stateStore.providerClass", None) is None:
-            _LOG.info(
-                "dedup_stream(tws): setting session state store provider"
-                " to RocksDB (required by transformWithState)"
-            )
-            conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        return keyed.groupBy("host").transformWithStateInPandas(
-            _BloomDedup(),
-            outputStructType=_OUT_SCHEMA_DDL,
-            outputMode="append",
-            timeMode="None",
-        )
-
-    if engine != "apply":
-        raise ValueError(f"dedup_stream engine must be tws|apply|None: {engine}")
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
