@@ -331,9 +331,10 @@ def _warm_python_workers(spark, cpus: int) -> None:
     # also warm the ArrowEvalPython (scalar pandas_udf) path + core imports
     from pyspark.sql import functions as F
 
-    from xqspark.udfs import make_beautify_udf
+    from xqspark.core.api import beautify
+    from xqspark.udfs import doc_udf
 
-    udf = make_beautify_udf()
+    udf = doc_udf(beautify)
     (
         spark.range(cpus * 4)
         .repartition(cpus)

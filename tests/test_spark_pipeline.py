@@ -8,6 +8,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from xqspark.core.api import beautify
+from xqspark.core.fmt_xml import format_xml
 from xqspark.pipeline import (
     PAGES_SCHEMA,
     build_session,
@@ -19,9 +21,9 @@ from xqspark.pipeline import (
 )
 from xqspark.udfs import (
     content_type_col,
-    make_beautify_udf,
+    doc_udf,
     make_css_values_udf,
-    make_format_xml_udf,
+    make_robots_udf,
     make_xpath_values_udf,
 )
 
@@ -53,7 +55,7 @@ def fixture_pages(spark):
 
 
 def test_beautify_udf_matches_goldens(spark, fixture_pages):
-    fmt = make_format_xml_udf("  ")
+    fmt = doc_udf(lambda p: format_xml(p, "  "))
     result = {
         r["url"]: r["out"]
         for r in fixture_pages.select("url", fmt(F.col("html")).alias("out")).collect()
@@ -117,6 +119,35 @@ def test_malformed_rows_contained(spark):
     assert got["ok"]["error"] is None
     assert got["bad"]["error"] is not None
     assert got["empty"]["error"] == "empty"
+    # the same containment at the column-UDF boundary: NULL, not a task failure
+    pretty = {
+        r["url"]: r["pretty"]
+        for r in df.select("url", doc_udf(beautify)("html").alias("pretty")).collect()
+    }
+    assert isinstance(pretty["ok"], str)
+    assert pretty["bad"] is None
+    assert pretty["empty"] is None
+
+
+def test_robots_udf_contains_bad_rows(spark):
+    """One bad row must not abort the job: a NULL paths array gives NULL
+    for that row, while a NULL robots text still allows every path."""
+    rows = [
+        ("ok", "User-agent: *\nDisallow: /private\n", ["/private/x", "/public"]),
+        ("no_paths", "User-agent: *\nDisallow: /\n", None),
+        ("no_robots", None, ["/private/x", "/public"]),
+    ]
+    df = spark.createDataFrame(rows, "id string, robots string, paths array<string>")
+    check = make_robots_udf("xqbot")
+    got = {
+        r["id"]: r["allowed"]
+        for r in df.select("id", check("robots", "paths").alias("allowed")).collect()
+    }
+    assert got == {
+        "ok": [False, True],
+        "no_paths": None,
+        "no_robots": [True, True],
+    }
 
 
 def test_skew_salting(spark):

@@ -82,6 +82,21 @@ def _go_percent_0f(v: float) -> str:
     return f"{v:.0f}"
 
 
+def xpath_values(val) -> list[str]:
+    """The lines -x prints for an evaluated XPath result, one trimmed
+    string each (utils.go:246-260): a node-set gives one string-value per
+    node, a scalar gives a single line."""
+    if isinstance(val, bool):
+        return ["true" if val else "false"]
+    if isinstance(val, float):
+        return [_go_percent_0f(val)]
+    if isinstance(val, str):
+        return [go_trim_space(val)]
+    if isinstance(val, list):
+        return [go_trim_space(string_value(n)) for n in val]
+    raise XPathError(f"unknown type error: {val!r}")
+
+
 def xpath_query(
     data: bytes | str,
     query: str,
@@ -103,16 +118,7 @@ def xpath_query(
             _print_node_content(n, True, indent) for n in expr.select(doc)
         )
 
-    val = expr.evaluate(doc)
-    if isinstance(val, bool):
-        return ("true" if val else "false") + "\n"
-    if isinstance(val, float):
-        return _go_percent_0f(val) + "\n"
-    if isinstance(val, str):
-        return go_trim_space(val) + "\n"
-    if isinstance(val, list):
-        return "".join(go_trim_space(string_value(n)) + "\n" for n in val)
-    raise XPathError(f"unknown type error: {val!r}")
+    return "".join(v + "\n" for v in xpath_values(expr.evaluate(doc)))
 
 
 def css_query(
@@ -123,7 +129,7 @@ def css_query(
     indent: str = "  ",
 ) -> str:
     """CSSQuery (utils.go:283-315): -q / -a / -q -n modes."""
-    from .css import compile_css
+    from .css import _attr_value, compile_css
     from .fmt_html import format_html
     from .htmltree import parse_html, serialize_html
 
@@ -132,12 +138,7 @@ def css_query(
     out: list[str] = []
     for item in selector.select(doc):
         if attr != "":
-            value = ""
-            for a in item.attrs:
-                if a.local == attr:
-                    value = a.value
-                    break
-            out.append(go_trim_space(value) + "\n")
+            out.append(go_trim_space(_attr_value(item, attr) or "") + "\n")
         elif with_tags:
             attrs_str = "".join(
                 " " + a.local + '="' + escape_text(a.value) + '"' for a in item.attrs

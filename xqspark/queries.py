@@ -118,9 +118,10 @@ def _page_html(doc_col="text", title_col="source"):
 
 
 def q_xpath_title(spark, sf_dir):
-    from xqspark.udfs import make_xpath_output_udf
+    from xqspark.core.api import xpath_query
+    from xqspark.udfs import doc_udf
 
-    udf = make_xpath_output_udf("//title", single=True)
+    udf = doc_udf(lambda p: xpath_query(p, "//title", single_node=True))
     return _docs(spark, sf_dir).select(
         "doc_id",
         F.regexp_replace(udf(_page_html().cast("binary")), "\\n$", "").alias("title"),
@@ -171,9 +172,10 @@ def q_css_lang_attr_sql():
 
 
 def q_beautify_xml(spark, sf_dir):
-    from xqspark.udfs import make_format_xml_udf
+    from xqspark.core.fmt_xml import format_xml
+    from xqspark.udfs import doc_udf
 
-    udf = make_format_xml_udf("  ")
+    udf = doc_udf(format_xml)
     return _docs(spark, sf_dir).select(
         "doc_id", udf(_page_html().cast("binary")).alias("pretty")
     )
@@ -190,9 +192,10 @@ def q_beautify_xml_sql():
 
 
 def q_xml2json_doc(spark, sf_dir):
-    from xqspark.udfs import make_xml_to_json_udf
+    from xqspark.core.api import to_json
+    from xqspark.udfs import doc_udf
 
-    udf = make_xml_to_json_udf()
+    udf = doc_udf(to_json)
     return _docs(spark, sf_dir).select(
         "doc_id", udf(_page_html().cast("binary")).alias("json_out")
     )
@@ -212,9 +215,10 @@ def q_xml2json_doc_sql():
 def q_xpath_count(spark, sf_dir):
     """count() scalar printing: %.0f (utils.go:248). Payload has
     doc_id % 5 + 1 <li> elements."""
-    from xqspark.udfs import make_xpath_output_udf
+    from xqspark.core.api import xpath_query
+    from xqspark.udfs import doc_udf
 
-    udf = make_xpath_output_udf("count(//li)")
+    udf = doc_udf(lambda p: xpath_query(p, "count(//li)"))
     li = F.repeat(F.lit("<li>x</li>"), (F.pmod(F.col("doc_id"), F.lit(5)) + 1).cast("int"))
     html = F.concat(F.lit("<ul>"), li, F.lit("</ul>"))
     return _docs(spark, sf_dir).select(
@@ -229,9 +233,10 @@ def q_xpath_count_sql():
 
 def q_xpath_boolean(spark, sf_dir):
     """boolean() printing: true|false (utils.go:250)."""
-    from xqspark.udfs import make_xpath_output_udf
+    from xqspark.core.api import xpath_query
+    from xqspark.udfs import doc_udf
 
-    udf = make_xpath_output_udf("boolean(//title)")
+    udf = doc_udf(lambda p: xpath_query(p, "boolean(//title)"))
     html = F.when(
         F.pmod(F.col("doc_id"), F.lit(2)) == 0,
         F.concat(F.lit("<doc><title>"), F.col("source"), F.lit("</title></doc>")),
@@ -251,9 +256,10 @@ def q_xpath_boolean_sql():
 def q_xpath_node_mode(spark, sf_dir):
     """-x QUERY -n: matched node re-serialized through FormatXml
     (printNodeContent, utils.go:273-277)."""
-    from xqspark.udfs import make_xpath_output_udf
+    from xqspark.core.api import xpath_query
+    from xqspark.udfs import doc_udf
 
-    udf = make_xpath_output_udf("//title", single=True, with_tags=True)
+    udf = doc_udf(lambda p: xpath_query(p, "//title", single_node=True, with_tags=True))
     return _docs(spark, sf_dir).select(
         "doc_id",
         F.regexp_replace(udf(_page_html().cast("binary")), "\\n$", "").alias("node_out"),
@@ -268,9 +274,10 @@ def q_xpath_node_mode_sql():
 
 def q_css_node_mode(spark, sf_dir):
     """-q SEL -n: outer HTML rebuilt + FormatHtml (utils.go:293-307)."""
-    from xqspark.udfs import make_css_output_udf
+    from xqspark.core.api import css_query
+    from xqspark.udfs import doc_udf
 
-    udf = make_css_output_udf("body > p", with_tags=True)
+    udf = doc_udf(lambda p: css_query(p, "body > p", with_tags=True))
     html = F.concat(
         F.lit('<html><body><p class="c">'),
         F.col("source"),
@@ -290,9 +297,10 @@ def q_css_node_mode_sql():
 
 
 def q_beautify_html(spark, sf_dir):
-    from xqspark.udfs import make_format_html_udf
+    from xqspark.core.fmt_html import format_html
+    from xqspark.udfs import doc_udf
 
-    udf = make_format_html_udf("  ")
+    udf = doc_udf(format_html)
     html = F.concat(
         F.lit("<html><body><p>"), F.trim(F.col("text")), F.lit("</p></body></html>")
     )
@@ -311,9 +319,10 @@ def q_beautify_html_sql():
 
 
 def q_beautify_json(spark, sf_dir):
-    from xqspark.udfs import make_format_json_udf
+    from xqspark.core.fmt_json import format_json
+    from xqspark.udfs import doc_udf
 
-    udf = make_format_json_udf("  ")
+    udf = doc_udf(format_json)
     payload = F.concat(
         F.lit('{"src": "'),
         F.col("source"),
@@ -539,7 +548,8 @@ def q_main_content(spark, sf_dir):
     path), score candidates by text density minus link density, and
     return exactly the main block's normalized text. The oracle states
     the expected text directly. See xqspark/core/maincontent.py."""
-    from xqspark.udfs import make_main_content_udf
+    from xqspark.core.maincontent import main_text
+    from xqspark.udfs import doc_udf
 
     html = F.concat(
         F.lit(
@@ -553,7 +563,7 @@ def q_main_content(spark, sf_dir):
             ' <a href="/t">Terms</a> copyright</div></body></html>'
         ),
     )
-    udf = make_main_content_udf()
+    udf = doc_udf(main_text)
     return _docs(spark, sf_dir).select(
         "doc_id", udf(html.cast("binary")).alias("main_text")
     )
@@ -2897,9 +2907,10 @@ def q_beautify_auto(spark, sf_dir):
     """xq's DEFAULT behavior end-to-end: per-document format detection
     (cmd/root.go:247-270) routes each payload to the JSON, HTML, or XML
     beautifier — one mixed-content column, three formatters, one UDF."""
-    from xqspark.udfs import make_beautify_udf
+    from xqspark.core.api import beautify
+    from xqspark.udfs import doc_udf
 
-    udf = make_beautify_udf("  ")
+    udf = doc_udf(beautify)
     m = F.pmod(F.col("doc_id"), F.lit(3))
     payload = (
         F.when(m == 0, F.concat(F.lit('{"a": '), F.col("doc_id"), F.lit("}")))

@@ -1,13 +1,15 @@
-"""Vectorized Arrow/pandas UDFs wrapping the pure-Python core.
+"""Vectorized pandas UDFs over the pure-Python core.
 
-Per the input_hint contract: pandas/Arrow UDFs throughout, never per-row
-Python UDFs. Queries (XPath/CSS) compile ONCE per UDF instantiation —
-hoisted out of the per-row path exactly like the reference compiles before
-iterating (internal/utils/utils.go:239-244).
+Vectorized UDFs throughout, never per-row Python UDFs. ``doc_udf(fn, return_type)`` is the one per-document
+boundary: ``fn(payload)`` runs once per document inside each Arrow batch,
+e.g. ``doc_udf(beautify)`` or ``doc_udf(lambda p: xpath_query(p, q))``.
+The value factories build on it and compile their XPath/CSS query ONCE, at
+factory time, shipping it in the closure exactly like the reference
+compiles before iterating (internal/utils/utils.go:239-244).
 
-Per-document errors are contained (lenient parsing + try/except -> None /
-error string), never task failures — the Spark analog of the reference's
-recover() on XPath panics (utils.go:211-215) at 10^12-document scale.
+Per-document errors are contained (lenient parsing + try/except -> NULL),
+never task failures — the Spark analog of the reference's recover() on
+XPath panics (utils.go:211-215) at 10^12-document scale.
 """
 
 from __future__ import annotations
@@ -17,11 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from xqspark.core.api import beautify, css_query, to_json, xpath_query
+from xqspark.core.api import xpath_values
 from xqspark.core.dom import parse_dom
-from xqspark.core.fmt_html import format_html
-from xqspark.core.fmt_json import format_json
-from xqspark.core.fmt_xml import format_xml
 from xqspark.core.textutil import go_trim_space
 from xqspark.core.xpath import compile_xpath, string_value
 
@@ -49,81 +48,28 @@ def _series_map(series: pd.Series, fn) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def make_format_xml_udf(indent: str = "  "):
-    @pandas_udf(T.StringType())
-    def fmt(html: pd.Series) -> pd.Series:
-        return _series_map(html, lambda p: format_xml(p, indent))
+def doc_udf(fn, return_type=T.StringType()):
+    """Per-document UDF over one payload column: NULL in gives NULL out,
+    and an exception in ``fn`` gives NULL for that row."""
 
-    return fmt
+    @pandas_udf(return_type)
+    def per_doc(payload: pd.Series) -> pd.Series:
+        return _series_map(payload, fn)
 
-
-def make_format_html_udf(indent: str = "  "):
-    @pandas_udf(T.StringType())
-    def fmt(html: pd.Series) -> pd.Series:
-        return _series_map(html, lambda p: format_html(p, indent))
-
-    return fmt
-
-
-def make_format_json_udf(indent: str = "  "):
-    @pandas_udf(T.StringType())
-    def fmt(payload: pd.Series) -> pd.Series:
-        return _series_map(payload, lambda p: format_json(p, indent))
-
-    return fmt
-
-
-def make_beautify_udf(indent: str = "  "):
-    """Format-sniffing beautifier (processContent, cmd/root.go:272-294)."""
-
-    @pandas_udf(T.StringType())
-    def fmt(payload: pd.Series) -> pd.Series:
-        return _series_map(payload, lambda p: beautify(p, indent))
-
-    return fmt
+    return per_doc
 
 
 def make_xpath_values_udf(query: str):
     """extract_xpath: ArrayType(StringType) — one trimmed string-value per
     matched node (utils.go:253-260); a scalar result (count()/boolean()/
-    string()) becomes a 1-element list printed with the same rules as the
-    -x output (utils.go:246-251). The query compiles ONCE here, at factory
-    time, and ships to every worker inside the UDF closure (the analog of
-    the reference compiling before iterating, utils.go:239-244) — not once
-    per Arrow batch."""
-    from xqspark.core.api import _go_percent_0f
-
+    string()) becomes a 1-element list; both are the lines -x prints
+    (``core.api.xpath_values``, utils.go:246-251)."""
     expr = compile_xpath(query)
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def extract(html: pd.Series) -> pd.Series:
-        def one(payload):
-            doc = parse_dom(payload, strict=False)
-            val = expr.evaluate(doc)
-            if isinstance(val, list):
-                return [go_trim_space(string_value(n)) for n in val]
-            if isinstance(val, bool):
-                return ["true" if val else "false"]
-            if isinstance(val, float):
-                return [_go_percent_0f(val)]
-            return [go_trim_space(str(val))]
+    def one(payload):
+        return xpath_values(expr.evaluate(parse_dom(payload, strict=False)))
 
-        return _series_map(html, one)
-
-    return extract
-
-
-def make_xpath_output_udf(query: str, single: bool = False, with_tags: bool = False,
-                          indent: str = "  "):
-    """Full xq-printed output for -x/-e/-n (byte-identical text column)."""
-
-    @pandas_udf(T.StringType())
-    def extract(html: pd.Series) -> pd.Series:
-        return _series_map(
-            html, lambda p: xpath_query(p, query, single, with_tags, indent)
-        )
-
-    return extract
+    return doc_udf(one, T.ArrayType(T.StringType()))
 
 
 def make_xpath_spans_udf(query: str):
@@ -148,73 +94,68 @@ def make_xpath_spans_udf(query: str):
         )
     )
 
-    @pandas_udf(out_type)
-    def extract(html: pd.Series) -> pd.Series:
-        def one(payload):
-            text = decode_payload(payload) if isinstance(payload, bytes) else payload
-            doc = parse_dom(payload, strict=False)
-            val = expr.evaluate(doc)
-            if not isinstance(val, list):
-                return []
-            out = []
-            cursor = 0
-            for node in val:
-                sv = go_trim_space(string_value(node))
-                idx = text.find(sv, cursor) if sv else -1
-                if idx == -1:
-                    out.append((sv, -1, -1))
-                else:
-                    out.append((sv, idx, idx + len(sv)))
-                    cursor = idx + len(sv)
-            return out
+    def one(payload):
+        text = decode_payload(payload) if isinstance(payload, bytes) else payload
+        doc = parse_dom(payload, strict=False)
+        val = expr.evaluate(doc)
+        if not isinstance(val, list):
+            return []
+        out = []
+        cursor = 0
+        for node in val:
+            sv = go_trim_space(string_value(node))
+            idx = text.find(sv, cursor) if sv else -1
+            if idx == -1:
+                out.append((sv, -1, -1))
+            else:
+                out.append((sv, idx, idx + len(sv)))
+                cursor = idx + len(sv)
+        return out
 
-        return _series_map(html, one)
-
-    return extract
+    return doc_udf(one, out_type)
 
 
 def make_css_values_udf(selector: str, attr: str = ""):
     """extract_css / extract_css_attr: ArrayType(StringType). The selector
-    compiles ONCE at factory time and ships in the closure — not per batch."""
-    from xqspark.core.css import compile_css
+    compiles ONCE at factory time and ships in the closure."""
+    from xqspark.core.css import _attr_value, compile_css
     from xqspark.core.htmltree import parse_html
 
     sel = compile_css(selector)
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def extract(html: pd.Series) -> pd.Series:
-        def one(payload):
-            doc = parse_html(payload)
-            out = []
-            for item in sel.select(doc):
-                if attr:
-                    value = ""
-                    for a in item.attrs:
-                        if a.local == attr:
-                            value = a.value
-                            break
-                    out.append(go_trim_space(value))
-                else:
-                    out.append(go_trim_space(item.inner_text()))
-            return out
+    def one(payload):
+        doc = parse_html(payload)
+        out = []
+        for item in sel.select(doc):
+            if attr:
+                out.append(go_trim_space(_attr_value(item, attr) or ""))
+            else:
+                out.append(go_trim_space(item.inner_text()))
+        return out
 
-        return _series_map(html, one)
-
-    return extract
+    return doc_udf(one, T.ArrayType(T.StringType()))
 
 
 def make_robots_udf(user_agent: str = "xqbot"):
     """RFC 9309 decisions: (robots_txt string, paths array) -> aligned
     array<boolean>. The robots text is parsed ONCE per row and applied
-    to every path (crawl frontiers check many URLs per host)."""
+    to every path (crawl frontiers check many URLs per host). A NULL
+    robots text allows everything (RFC 9309 §2.3.1.3); a NULL paths
+    array or any per-row error gives NULL for that row."""
     from xqspark.core.robots import parse_robots
+
+    def one(text, paths):
+        rules = parse_robots(text or "")
+        return [rules.is_allowed(user_agent, p) for p in paths]
 
     @pandas_udf(T.ArrayType(T.BooleanType()))
     def check(robots: pd.Series, paths: pd.Series) -> pd.Series:
         out = []
         for text, ps in zip(robots, paths):
-            rules = parse_robots(text or "")
-            out.append([rules.is_allowed(user_agent, p) for p in ps])
+            try:
+                out.append(one(text, ps))
+            except Exception:
+                out.append(None)
         return pd.Series(out, index=robots.index, dtype="object")
 
     return check
@@ -226,7 +167,7 @@ def make_link_pairs_udf(selector: str = "a", attr: str = "href"):
     selector matches, in document order. Selector compiles at factory
     time; output array<struct> keeps the pair aligned without a second
     parse (two separate css UDF calls would parse the page twice)."""
-    from xqspark.core.css import compile_css
+    from xqspark.core.css import _attr_value, compile_css
     from xqspark.core.htmltree import parse_html
 
     sel = compile_css(selector)
@@ -239,56 +180,17 @@ def make_link_pairs_udf(selector: str = "a", attr: str = "href"):
         )
     )
 
-    @pandas_udf(out_type)
-    def extract(html: pd.Series) -> pd.Series:
-        def one(payload):
-            doc = parse_html(payload)
-            out = []
-            for item in sel.select(doc):
-                value = ""
-                for a in item.attrs:
-                    if a.local == attr:
-                        value = a.value
-                        break
-                out.append(
-                    (go_trim_space(value), go_trim_space(item.inner_text()))
-                )
-            return out
+    def one(payload):
+        doc = parse_html(payload)
+        return [
+            (
+                go_trim_space(_attr_value(item, attr) or ""),
+                go_trim_space(item.inner_text()),
+            )
+            for item in sel.select(doc)
+        ]
 
-        return _series_map(html, one)
-
-    return extract
-
-
-def make_css_output_udf(selector: str, attr: str = "", with_tags: bool = False,
-                        indent: str = "  "):
-    @pandas_udf(T.StringType())
-    def extract(html: pd.Series) -> pd.Series:
-        return _series_map(
-            html, lambda p: css_query(p, selector, attr, with_tags, indent)
-        )
-
-    return extract
-
-
-def make_main_content_udf():
-    """Boilerplate-stripping main-content extraction (DOM text-density
-    heuristic, xqspark/core/maincontent.py) as a vectorized pandas UDF."""
-    from xqspark.core.maincontent import main_text
-
-    @pandas_udf(T.StringType())
-    def extract(html: pd.Series) -> pd.Series:
-        return _series_map(html, main_text)
-
-    return extract
-
-
-def make_xml_to_json_udf(depth: int = -1, compact: bool = False):
-    @pandas_udf(T.StringType())
-    def convert(payload: pd.Series) -> pd.Series:
-        return _series_map(payload, lambda p: to_json(p, depth, compact))
-
-    return convert
+    return doc_udf(one, out_type)
 
 
 def content_type_col(col):
