@@ -379,18 +379,48 @@ def test_winnow_fp_is_map_only_and_detects_shared_passages(spark):
     assert not (sets[0] & sets[2]) and not (sets[1] & sets[2])
 
 
-def test_winnow_pairs_fps_not_inlined_into_scan_filter(spark):
-    """r5 regression guard (44x): explode over the fps array must NOT
-    let Catalyst infer a size(fps) > 0 filter and push it to the scan —
-    the pushed filter inlines the whole fps expression, and inside the
-    inlined window lambda the k-gram md5 transform re-evaluates PER
-    WINDOW (quadratic per doc; measured 59 s at sf0.01). With the
-    explode_outer fix, no scan DataFilter may contain md5."""
-    from xqspark.queries import winnow_pairs
+def test_catalog_plans_evaluate_each_udf_once(spark):
+    """Catalog-wide gate for the inferred-generator-filter hazard
+    (queries._explode_nonempty): over a plain explode/posexplode of a
+    computed array, Catalyst infers ``size(arr) > 0 AND isnotnull(arr)``
+    and pushes it below the input spread, inlining the array's whole
+    expression there. Found three times: link_graph and sitemap_urls
+    evaluated their parse UDF twice (two ArrowEvalPython nodes), and
+    winnow_pairs pushed its fps expression into the scan, where the
+    k-gram md5 re-ran per window (quadratic per doc; 59 s at sf0.01).
+    For every executed plan: no Python UDF call is evaluated twice, no
+    inferred generator filter appears, and no scan DataFilter holds md5
+    or a Python UDF."""
+    import re
 
-    plan = plan_of(winnow_pairs(spark, SF_DIR))
-    for seg in plan.split("DataFilters:")[1:]:
-        assert "md5" not in seg.split("]")[0], seg[:400]
+    def norm(s):
+        return re.sub(r"#\d+L?", "#N", s)
+
+    udf_node = re.compile(r"(?:Arrow|Batch)EvalPython \[(.*)\], \[pythonUDF")
+    inferred = re.compile(r"\(size\((.+?), (?:true|false)\) > 0\) AND isnotnull\(\1\)")
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")  # DataFilters print in full
+    try:
+        for name, q in QUERIES.items():
+            plan = norm(plan_of(q(spark, SF_DIR)))
+            calls = [
+                c
+                for m in udf_node.finditer(plan)
+                for c in re.split(r"(?<=\)#N), (?=\w+\()", m.group(1))
+            ]
+            dup = {c for c in calls if calls.count(c) > 1}
+            assert not dup, (name, sorted(dup)[0][:300])
+            m = inferred.search(plan)
+            assert m is None, (name, m and m.group(0)[:300])
+            for seg in plan.split("DataFilters:")[1:]:
+                filters = seg.split(", Format:")[0]
+                assert "md5" not in filters and "pythonUDF" not in filters, (
+                    name,
+                    filters[:300],
+                )
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_simhash_pairs_is_block_join_not_cross(spark):

@@ -65,18 +65,31 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _nopush(pred):
-    """AND a vacuously-true non-deterministic guard onto an expensive
-    predicate so Catalyst cannot push it below the input-spread
-    exchange into the scan, where the tokenize projection it references
-    would be inlined and re-evaluated per document on the scan's ONE
-    core (the serial sibling of the r5 winnow_pairs explode finding;
-    guide §4.4's non-determinism escape hatch applied to a JVM filter).
-    ``rand(0) >= 0`` is always true, so results are unchanged. The
-    guard must be the CASE-WHEN *condition*, not an AND-conjunct: the
-    optimizer splits conjunctions and pushes the deterministic half
-    anyway."""
-    return F.when(F.rand(0) >= 0, pred).otherwise(F.lit(False))
+def _explode_nonempty(df: DataFrame, arr, *names: str, keep=()) -> DataFrame:
+    """One row per element of the computed array ``arr``, carrying the
+    ``keep`` columns: ``explode`` for one name, ``posexplode`` for two
+    (position, element). Rows whose array is NULL or empty yield none.
+
+    The one guard against a Catalyst hazard: over a plain generator
+    the optimizer infers ``size(arr) > 0 AND isnotnull(arr)`` and
+    pushes it below the input spread, where it inlines the whole
+    expression that builds ``arr`` and evaluates it a second time on
+    the scan's task. Measured: link_graph and sitemap_urls got a second
+    ``ArrowEvalPython`` over their parse UDF (sitemap_urls
+    10.5 -> 1.3 s at 10x sf0.1); winnow_pairs' inlined window lambda
+    re-ran the k-gram md5 per window (59 -> 1.3 s at sf0.01). The
+    ``_outer`` generator infers no filter, and the null filter on the
+    first output column drops the one row it emits for an empty or
+    NULL array, so the result is the plain generator's (a one-name
+    explode also drops NULL elements; no caller's array holds any).
+    Generators over a fixed-length ``F.array(...)`` literal need no
+    guard: Spark infers nothing there. ``tests/test_plans.py`` audits
+    every catalog plan for the inferred filter and for a UDF evaluated
+    twice."""
+    gen = F.posexplode_outer(arr) if len(names) == 2 else F.explode_outer(arr)
+    return df.select(*keep, gen.alias(*names)).filter(
+        F.col(names[0]).isNotNull()
+    )
 
 
 def _docs(
@@ -887,7 +900,7 @@ def minhash_sig_df(
     docs = df.select(
         id_col, F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
     )
-    docs = docs.filter(_nopush(F.size("t") >= 3))
+    docs = docs.filter(F.size("t") >= 3)
     if n_hashes >= 8:
         # r6: at LSH slot counts the n_hashes separate
         # array_min(transform(...)) passes dominate (each allocates a
@@ -980,6 +993,24 @@ def q_minhash_sig_sql():
     return _MINHASH_SQL_BODY + "SELECT doc_id, mh1, mh2, mh3, mh4 FROM sig"
 
 
+def _report_hot(sized, count_col, cap, keys, on_dropped, cache_out):
+    """The pair-finders' no-silent-caps report: with an ``on_dropped``
+    callback, persist ``sized`` (it feeds the self-join too), hand it to
+    ``cache_out`` for the caller to unpersist, and call
+    ``on_dropped(n)`` with the number of distinct ``keys`` buckets whose
+    ``count_col`` exceeds ``cap`` — one extra action. Without a
+    callback, ``sized`` is returned as is."""
+    if on_dropped is None:
+        return sized
+    sized = sized.persist()
+    if cache_out is not None:
+        cache_out.append(sized)
+    on_dropped(
+        sized.filter(F.col(count_col) > cap).select(*keys).distinct().count()
+    )
+    return sized
+
+
 def lsh_pairs(
     spark,
     sf_dir,
@@ -1010,20 +1041,10 @@ def lsh_pairs(
     # '#' separator inside band_keys_df: mh values are variable-width
     # decimals, so plain concat would alias ("1","23") with ("12","3")
     bands = band_keys_df(sig, n_bands, n_rows)
-    sized = bands.withColumn(
-        "n_band", F.count("*").over(W.partitionBy("band"))
+    sized = _report_hot(
+        bands.withColumn("n_band", F.count("*").over(W.partitionBy("band"))),
+        "n_band", band_cap, ("band",), on_dropped, cache_out,
     )
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_band") > band_cap)
-            .select("band")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
     ok = sized.filter(F.col("n_band") <= band_cap).select("doc_id", "band")
     left = ok.alias("a")
     right = ok.alias("b")
@@ -1067,18 +1088,15 @@ def _shingles(docs: DataFrame) -> DataFrame:
     decontamination."""
     toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    ).filter(_nopush(F.size("t") >= 3))
-    return toks.select(
-        "doc_id",
-        # explode_outer: stop the inferred size>0 filter from inlining
-        # the shingle construction into the serial scan (r5 pattern);
-        # size(t) >= 3 guarantees a non-empty array, so no outer row
-        F.explode_outer(
-            F.expr(
-                "transform(sequence(0, size(t)-3), i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-            )
-        ).alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
+    ).filter(F.size("t") >= 3)
+    return _explode_nonempty(
+        toks,
+        F.expr(
+            "transform(sequence(0, size(t)-3), i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
+        ),
+        "shingle",
+        keep=("doc_id",),
+    )
 
 
 def q_decontaminate(spark, sf_dir):
@@ -1704,7 +1722,7 @@ def _doc_lines(spark, sf_dir, extra_cols: tuple = ()):
             *[e.alias(nm) for nm, e in extra_cols],
         )
         .withColumn("t", F.expr("filter(t, x -> x != '')"))
-        .filter(_nopush(F.size("t") >= 1))
+        .filter(F.size("t") >= 1)
     )
     nav = F.concat(
         F.lit("nav menu home about contact site "),
@@ -1759,13 +1777,7 @@ def line_dedup(
         raise ValueError(f"line_dedup mode must be inline|broadcast: {mode}")
     lines_df = _doc_lines(spark, sf_dir)
     counts = (
-        # explode_OUTER + isNotNull (r5 winnow_pairs pattern): plain
-        # explode lets Catalyst infer size(lines) > 0 and push it into
-        # the serial scan, re-evaluating the whole lines construction
-        # there (measured r6: 4.8 s -> ~1.2 s at sf1.0). lines always
-        # has nav+footer, so the outer row never appears.
-        lines_df.select(F.explode_outer("lines").alias("line"))
-        .filter(F.col("line").isNotNull())
+        _explode_nonempty(lines_df, "lines", "line")
         .select(F.md5(F.encode("line", "UTF-8")).alias("h"))
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1995,7 +2007,7 @@ def _winnow_fps(spark, sf_dir, k: int = 3, w: int = 4) -> DataFrame:
         _docs(spark, sf_dir)
         .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
         .withColumn("t", F.expr("filter(t, x -> x != '')"))
-        .filter(_nopush(F.size("t") >= k + w - 1))
+        .filter(F.size("t") >= k + w - 1)
         .select("doc_id", "t")
     )
     # r6: the window minima moved from per-row JVM HOFs to a vectorized
@@ -2064,33 +2076,14 @@ def winnow_pairs(
     ``on_dropped(n_hot_fps)`` / ``cache_out`` follow the lsh_pairs
     contract: no-silent-caps reporting of how many corpus-wide
     fingerprints the cap removed, at the cost of one extra action over
-    the persisted exploded stream.
-
-    explode_OUTER on purpose (r5, 44x): plain explode makes Catalyst
-    infer a ``size(fps) > 0`` pruning filter and push it to the scan,
-    INLINING the whole fps expression tree into the filter — and inside
-    the inlined window lambda the k-gram md5 transform is an outer
-    subexpression re-evaluated PER WINDOW, turning the per-doc cost
-    quadratic (measured 59 s -> 1.3 s at sf0.01). fps is never empty
-    for docs passing the >= w+k-1 token gate, so the cheap post-explode
-    null filter is semantically identical."""
-    ex = (
-        _winnow_fps(spark, sf_dir, k, w)
-        .select("doc_id", F.explode_outer("fps").alias("fp"))
-        .filter(F.col("fp").isNotNull())
+    the persisted exploded stream."""
+    ex = _explode_nonempty(
+        _winnow_fps(spark, sf_dir, k, w), "fps", "fp", keep=("doc_id",)
     )
-    sized = ex.withColumn("n_fp", F.count("*").over(W.partitionBy("fp")))
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_fp") > fp_cap)
-            .select("fp")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
+    sized = _report_hot(
+        ex.withColumn("n_fp", F.count("*").over(W.partitionBy("fp"))),
+        "n_fp", fp_cap, ("fp",), on_dropped, cache_out,
+    )
     ok = sized.filter(F.col("n_fp") <= fp_cap).select("doc_id", "fp")
     a = ok.select(F.col("doc_id").alias("doc_a"), "fp")
     b = ok.select(F.col("doc_id").alias("doc_b"), "fp")
@@ -2225,20 +2218,10 @@ def embedding_neardup(
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
-    sized = emb.withColumn(
-        "n_label", F.count("*").over(W.partitionBy("label"))
+    sized = _report_hot(
+        emb.withColumn("n_label", F.count("*").over(W.partitionBy("label"))),
+        "n_label", label_cap, ("label",), on_dropped, cache_out,
     )
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_label") > label_cap)
-            .select("label")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
     if n_sub is None:
         ok = sized.filter(F.col("n_label") <= label_cap).select(
             "vec_id", "v", "label"
@@ -3211,7 +3194,7 @@ def q_simhash(spark, sf_dir):
         _docs(spark, sf_dir)
         .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
         .withColumn("t", F.expr("filter(t, x -> x != '')"))
-        .filter(_nopush(F.size("t") >= 1))
+        .filter(F.size("t") >= 1)
         .select("doc_id", "t")
     )
     words = docs.select(
@@ -3284,26 +3267,14 @@ def simhash_pairs(
     melted = sig.select(
         "doc_id",
         *[F.col(f"simhash_w{w}") for w in range(4)],
-        F.posexplode_outer(
+        F.posexplode(
             F.array(*[F.col(f"simhash_w{w}") for w in range(4)])
         ).alias("wi", "wv"),
     )
-    sized = melted.withColumn(
-        "n_w", F.count("*").over(W.partitionBy("wi", "wv"))
+    sized = _report_hot(
+        melted.withColumn("n_w", F.count("*").over(W.partitionBy("wi", "wv"))),
+        "n_w", word_cap, ("wi", "wv"), on_dropped, cache_out,
     )
-    if on_dropped is not None:
-        # no-silent-caps: report how many (word_idx, word_val) buckets
-        # the cap removed (lsh_pairs on_dropped contract)
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_w") > word_cap)
-            .select("wi", "wv")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
     ok = sized.filter(F.col("n_w") <= word_cap).drop("n_w")
     a = ok.select(
         F.col("doc_id").alias("doc_a"),
@@ -3528,15 +3499,14 @@ def q_unigram_logprob(spark, sf_dir, vocab_k: int = 256):
         _docs(spark, sf_dir)
         .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
         .withColumn("t", F.expr("filter(t, x -> x != '')"))
-        .filter(_nopush(F.size("t") >= 1))
+        .filter(F.size("t") >= 1)
     )
     # one counting job, persisted: total and top-k are two bounded
     # driver fetches over the TINY (vocab-sized) counts table instead
     # of two full explode+groupBy passes over the token stream
     # (r6, guide §1.2: don't compute things twice)
     counts = (
-        toks.select(F.explode_outer("t").alias("tok"))
-        .filter(F.col("tok").isNotNull())
+        _explode_nonempty(toks, "t", "tok")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
         .persist()
@@ -3637,8 +3607,8 @@ def q_robots_check(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", paths.alias("paths"), udf(robots, paths).alias("allowed")
     )
-    zipped = docs.select(
-        "doc_id", F.posexplode(F.arrays_zip("paths", "allowed")).alias("rank", "z")
+    zipped = _explode_nonempty(
+        docs, F.arrays_zip("paths", "allowed"), "rank", "z", keep=("doc_id",)
     )
     return zipped.select(
         "doc_id",
@@ -3706,17 +3676,9 @@ def q_sitemap_urls(spark, sf_dir, k: int = 4):
             "i -> struct(v[2*i] as loc, v[2*i+1] as lastmod)))"
         ).alias("entries"),
     )
-    # posexplode_OUTER + isNotNull (r6 — the link_graph/winnow_pairs
-    # disease found here too): plain posexplode lets Catalyst infer
-    # size(entries) > 0 and push it below the spread exchange, where
-    # the inferred filter RE-EVALUATES the whole XML-build + XPath UDF
-    # on the serial scan (plan showed two ArrowEvalPython nodes;
-    # measured 10.5 -> 1.3 s at 10x sf0.1). entries is only empty if
-    # the parse-failure guard fired, and those rows are dropped by the
-    # null filter on both engines.
-    return paired.select(
-        "doc_id", F.posexplode_outer("entries").alias("rank", "e")
-    ).filter(F.col("e").isNotNull()).select(
+    return _explode_nonempty(
+        paired, "entries", "rank", "e", keep=("doc_id",)
+    ).select(
         "doc_id",
         F.col("rank").cast("int").alias("rank"),
         F.col("e.loc").alias("loc"),
@@ -3803,17 +3765,17 @@ def q_ngram_counts(spark, sf_dir, n: int = 2, k: int = 20):
     asc) so both engines cut the same k rows."""
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    ).filter(_nopush(F.size("t") >= n))
-    grams = toks.select(
-        F.explode_outer(
-            F.expr(
-                f"transform(sequence(0, size(t)-{n}), i -> "
-                + "concat_ws(' ', "
-                + ", ".join(f"t[i+{j}]" for j in range(n))
-                + "))"
-            )
-        ).alias("gram")
-    ).filter(F.col("gram").isNotNull())
+    ).filter(F.size("t") >= n)
+    grams = _explode_nonempty(
+        toks,
+        F.expr(
+            f"transform(sequence(0, size(t)-{n}), i -> "
+            + "concat_ws(' ', "
+            + ", ".join(f"t[i+{j}]" for j in range(n))
+            + "))"
+        ),
+        "gram",
+    )
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("gram")).limit(k)
 
@@ -3855,13 +3817,9 @@ def q_link_graph(spark, sf_dir, k: int = 5):
     docs = _docs(spark, sf_dir).select(
         "doc_id", udf(html.cast("binary")).alias("links")
     )
-    # posexplode_OUTER + isNotNull: plain posexplode makes Catalyst
-    # infer size(links) > 0 and evaluate the parse UDF TWICE (one
-    # ArrowEvalPython below the inferred filter, one for the
-    # projection — guide §4.4's duplication, seen live in the r6 plan)
-    return docs.select(
-        "doc_id", F.posexplode_outer("links").alias("rank", "link")
-    ).filter(F.col("rank").isNotNull()).select(
+    return _explode_nonempty(
+        docs, "links", "rank", "link", keep=("doc_id",)
+    ).select(
         "doc_id",
         F.col("rank").cast("int").alias("rank"),
         F.col("link.href").alias("href"),
