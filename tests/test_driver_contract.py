@@ -88,3 +88,70 @@ def test_queries_and_oracles_key_order_identical():
 
     assert list(QUERIES) == list(ORACLES)
     assert list(e.queries()) == list(e.oracle_sql())
+
+
+# Every token op, on texts whose whitespace edges Spark's split(trim(...))
+# turns into '' tokens: a leading newline, a trailing tab, empty text
+# (twice in a row, so jaccard_adjacent divides two empty sets).
+TOKEN_OPS = [
+    "dedup_groups", "minhash_sig", "lsh_pairs", "jaccard_adjacent",
+    "decontaminate", "repetition", "line_dedup", "winnow_fp",
+    "winnow_pairs", "simhash", "simhash_pairs", "dedup_clusters",
+    "dedup_keep", "link_graph", "c4_filter", "ngram_counts",
+    "unigram_logprob", "corpus_stats",
+]
+EDGE_TEXTS = [
+    "\nalpha beta gamma delta epsilon zeta eta theta",
+    "alpha beta gamma delta epsilon zeta eta theta\t",
+    "",
+    "",
+    "\n\tiota kappa lambda mu nu xi omicron pi rho\n",
+    "iota kappa lambda mu nu xi omicron pi sigma",
+    "one",
+    "  spaced  words  here and there  and here  ",
+    "\nalpha beta gamma delta",
+    "\nalpha beta zulu yankee xray",
+    "\nx y z x y z",
+    "\nsame three words",
+    "same three words",
+]
+
+
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("edge_docs")
+    n = len(EDGE_TEXTS)
+    table = pa.table(
+        {
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": EDGE_TEXTS,
+            "lang": ["en"] * n,
+            "source": [f"src{i % 3}" for i in range(n)],
+            "n_chars": pa.array([len(t) for t in EDGE_TEXTS], pa.int64()),
+        }
+    )
+    pq.write_table(table, d / "documents.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", TOKEN_OPS)
+def test_token_ops_match_oracles_on_whitespace_edges(spark, edge_dir, name):
+    from xqspark.queries import ORACLES, QUERIES
+
+    qdf = QUERIES[name](spark, edge_dir)
+    spark_cols = [c.lower() for c in qdf.columns]
+    spark_rows = [tuple(r) for r in qdf.collect()]
+
+    with duckdb.connect() as con:
+        con.sql(
+            f"CREATE VIEW documents AS FROM read_parquet('{edge_dir}/documents.parquet')"
+        )
+        rel = con.sql(ORACLES[name])
+        ddb_cols = [c.lower() for c in rel.columns]
+        ddb_rows = rel.fetchall()
+
+    assert sorted(spark_cols) == sorted(ddb_cols), name
+    assert _rows_to_set(spark_cols, spark_rows) == _rows_to_set(ddb_cols, ddb_rows), name

@@ -87,7 +87,7 @@ def test_extraction_has_exactly_one_exchange(spark):
     extracted = extract_pages(pages, mode="xpath", query="//title")
     plan = plan_of(extracted)
     assert plan.count("Exchange") == 1  # only the salted repartition
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     # the Python stage is one task wave: each Python task pays a fixed
     # worker set-up, so shuffle.partitions (32) tasks would cost 8 waves
     assert (

@@ -219,12 +219,14 @@ def test_multi_mb_pages_bounded_worker_memory(spark):
     assert max(peaks) < 2_000_000, peaks
 
 
-def test_arrow_batches_capped_by_bytes(spark):
+@pytest.mark.parametrize("api", ["mapInPandas", "mapInArrow"])
+def test_arrow_batches_capped_by_bytes(spark, api):
     """build_session caps Arrow batches at ARROW_BATCH_BYTES as well as
-    ARROW_BATCH_ROWS: one partition of 2,000 x 20 KB rows reaches
-    mapInPandas in ~4 MB batches, not 512-row (10 MB) ones. Spark closes
-    a batch on the first row that reaches the cap, so a batch overshoots
-    it by less than one row."""
+    ARROW_BATCH_ROWS, on both map APIs (extract_pages runs on
+    mapInArrow): one partition of 2,000 x 20 KB rows arrives in ~4 MB
+    batches, not 512-row (10 MB) ones. Spark closes a batch on the first
+    row that reaches the cap, so a batch overshoots it by less than one
+    row."""
     import math
 
     from xqspark.pipeline import ARROW_BATCH_BYTES, ARROW_BATCH_ROWS
@@ -236,18 +238,36 @@ def test_arrow_batches_capped_by_bytes(spark):
 
     def sizes(batches):
         import pandas as pd
+        import pyarrow as pa
 
         for b in batches:
-            yield pd.DataFrame(
-                {"rows": [len(b)], "bytes": [int(sum(len(p) for p in b["html"]))]}
-            )
+            html = b["html"] if api == "mapInPandas" else b.column("html").to_pylist()
+            stats = {"rows": [len(html)], "bytes": [sum(len(p) for p in html)]}
+            if api == "mapInPandas":
+                yield pd.DataFrame(stats)
+            else:
+                yield pa.RecordBatch.from_pydict(stats)
 
-    got = df.mapInPandas(sizes, "rows long, bytes long").collect()
+    got = getattr(df, api)(sizes, "rows long, bytes long").collect()
     assert sum(r["rows"] for r in got) == 2000
     # 2,000 x 20 KB = ~40 MB cut by bytes, not by rows
     assert ARROW_BATCH_ROWS * row_bytes > ARROW_BATCH_BYTES
     assert len(got) > math.ceil(2000 / ARROW_BATCH_ROWS)
     assert all(r["bytes"] < ARROW_BATCH_BYTES + row_bytes for r in got), got
+
+
+def test_unknown_mode_raises_before_any_job(spark):
+    """extract_pages builds its extractor on the driver, so a bad mode
+    fails at the call, not at the first action."""
+    sc = spark.sparkContext
+    pages = synthesize_pages(spark, n_rows=10, n_hosts=2)
+    sc.setJobGroup("unknown-mode", "extract_pages with a bad mode")
+    try:
+        with pytest.raises(ValueError, match="unknown extraction mode"):
+            extract_pages(pages, mode="nope")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("unknown-mode") == []
 
 
 def test_extraction_modes_dispatch(spark):

@@ -6,10 +6,12 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
 - salted repartitioning on url-host defuses domain skew BEFORE the
   Python-UDF compute (AQE splits shuffle partitions by bytes, not by
   UDF CPU cost, so explicit salting is required)
-- extraction runs in mapInPandas (iterator of Arrow batches — streaming,
-  never collected), one pure-Python core call per document, in ONE task
-  wave (defaultParallelism partitions): every Python task pays ~0.19 s
-  of worker set-up on top of its rows, so the task count is the cost
+- extraction runs in mapInArrow through udfs.map_docs (iterator of
+  Arrow batches — streaming, never collected; url and part_key pass
+  through as Arrow arrays), one pure-Python core call per document, in
+  ONE task wave (defaultParallelism partitions): every Python task pays
+  ~0.19 s of worker set-up on top of its rows, so the task count is the
+  cost
 - per-partition lineage rows (part_key, docs, bytes, errors, checksum)
   are emitted alongside results and aggregated with a built-in hash agg
 - checkpointed resume: a completed-manifest table keyed by deterministic
@@ -30,13 +32,13 @@ Design notes for 1000-executor / 100 TB runs:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .udfs import map_docs
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -220,8 +222,9 @@ def with_part_key(df: DataFrame, n_buckets: int = 256) -> DataFrame:
 
 
 def _make_extractor(mode: str, query: str, indent: str):
-    """One pure function (payload bytes) -> extracted text, chosen once per
-    worker — compile-once analog of utils.go:239-244."""
+    """One pure function (payload bytes) -> extracted text, chosen once on
+    the driver and shipped in the closure — compile-once analog of
+    utils.go:239-244."""
     from xqspark.core.api import beautify, css_query, to_json, xpath_query
 
     if mode == "xpath":
@@ -262,7 +265,8 @@ def extract_pages(
     """pages -> (url, part_key, extracted, error, n_bytes).
 
     Plan shape: scan(url, html) [column-pruned] -> salted repartition on
-    (host, salt) -> ArrowEval mapInPandas -> project. Exactly one shuffle.
+    (host, salt) -> MapInArrow (``udfs.map_docs``). Exactly one shuffle.
+    An unknown ``mode`` raises ValueError here, before any Spark job.
 
     The repartition defaults to ``defaultParallelism`` partitions, one
     task wave — the same rule as queries._spread. Do not raise it to
@@ -274,6 +278,7 @@ def extract_pages(
     task floor of ~9 ms does not apply here). AQE does not help either:
     a repartition to a fixed count is never coalesced.
     """
+    extractor = _make_extractor(mode, query, indent)  # unknown mode raises here
     df = with_part_key(pages, n_buckets)
     if repartition_to is None or repartition_to > 0:
         df = with_host_salt(df, salts)
@@ -283,42 +288,18 @@ def extract_pages(
     # repartition_to == 0: caller already partitioned the input (e.g. the
     # steady-state bench times the UDF stage without the one-time exchange,
     # and streaming avoids a per-microbatch stateful exchange) — host/salt
-    # are never computed, and they are projected away here so the Arrow
-    # batches carry only what the UDF reads
-    df = df.select("url", "html", "part_key")
+    # are never computed. Either way map_docs projects the input down to
+    # url, part_key and html, so the Arrow batches carry only those.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extractor = _make_extractor(mode, query, indent)
-        for batch in batches:
-            urls = batch["url"]
-            payloads = batch["html"]
-            keys = batch["part_key"]
-            extracted, errors, sizes = [], [], []
-            for payload in payloads:
-                if payload is None:
-                    extracted.append(None)
-                    errors.append("empty")
-                    sizes.append(0)
-                    continue
-                data = bytes(payload)
-                sizes.append(len(data))
-                try:
-                    extracted.append(extractor(data))
-                    errors.append(None)
-                except Exception as exc:  # per-row containment, never task failure
-                    extracted.append(None)
-                    errors.append(f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "part_key": keys,
-                    "extracted": pd.Series(extracted, dtype=object),
-                    "error": pd.Series(errors, dtype=object),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                }
-            )
+    def one(payload):
+        if payload is None:
+            return None, "empty", 0
+        try:
+            return extractor(payload), None, len(payload)
+        except Exception as exc:  # per-row containment, never task failure
+            return None, f"{type(exc).__name__}: {exc}"[:500], len(payload)
 
-    return df.mapInPandas(run, EXTRACT_SCHEMA)
+    return map_docs(df, "html", one, EXTRACT_SCHEMA, keep=("url", "part_key"))
 
 
 def lineage(extracted: DataFrame) -> DataFrame:

@@ -18,13 +18,14 @@ Three families:
 from __future__ import annotations
 
 import logging
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
+
+from xqspark.udfs import map_docs
 
 _LOG = logging.getLogger("xqspark")
 
@@ -90,6 +91,15 @@ def _explode_nonempty(df: DataFrame, arr, *names: str, keep=()) -> DataFrame:
     return df.select(*keep, gen.alias(*names)).filter(
         F.col(names[0]).isNotNull()
     )
+
+
+def _tokens(col: str = "text"):
+    """The catalog's one tokenizer: the whitespace-separated tokens of
+    ``col``, as the oracles' ``regexp_extract_all(trim(text), '\\S+')``.
+    ``F.trim`` strips spaces only and ``split`` keeps the empty strings
+    at a leading or trailing newline/tab (and returns ``['']`` for empty
+    text), so the ``''`` entries are filtered out."""
+    return F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda x: x != "")
 
 
 def _docs(
@@ -509,36 +519,18 @@ def q_multimodal_pdf(spark, sf_dir):
     ).otherwise(pdf)
     df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, fmts, vers, pages, texts = [], [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                ids.append(doc_id)
-                data = bytes(payload) if payload is not None else b""
-                meta = parse_pdf_meta(data)
-                if meta is None:
-                    fmts.append("unknown")
-                    vers.append(None)
-                    pages.append(None)
-                    texts.append("")
-                else:
-                    fmts.append(meta[0])
-                    vers.append(meta[1])
-                    pages.append(meta[2])
-                    texts.append(extract_pdf_text(data))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "pdf_version": pd.Series(vers, dtype="object"),
-                    "n_pages": pd.Series(pages, dtype="Int32"),
-                    "pdf_text": pd.Series(texts, dtype="object"),
-                }
-            )
+    def one(data):
+        meta = parse_pdf_meta(data)
+        if meta is None:
+            return "unknown", None, None, ""
+        return (*meta, extract_pdf_text(data))
 
-    return df.mapInPandas(
-        decode,
+    return map_docs(
+        df,
+        "payload",
+        one,
         "doc_id long, fmt string, pdf_version string, n_pages int, pdf_text string",
+        keep=("doc_id",),
     )
 
 
@@ -630,7 +622,8 @@ def q_host_topk_sql():
 
 
 def q_dedup_groups(spark, sf_dir):
-    key = F.concat_ws(" ", F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 3))
+    # a text with no tokens keys NULL, as the oracle's array_to_string([])
+    key = F.nullif(F.concat_ws(" ", F.slice(_tokens(), 1, 3)), F.lit(""))
     return (
         _docs(spark, sf_dir, spread=False)
         .select(key.alias("dedup_key"), "doc_id")
@@ -897,9 +890,7 @@ def minhash_sig_df(
     foreachBatch microbatch) — same map-only projection as _minhash_sig;
     shared so incremental ingestion signs documents with bit-identical
     constants to the batch catalog."""
-    docs = df.select(
-        id_col, F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
-    )
+    docs = df.select(id_col, _tokens(text_col).alias("t"))
     docs = docs.filter(F.size("t") >= 3)
     if n_hashes >= 8:
         # r6: at LSH slot counts the n_hashes separate
@@ -1086,9 +1077,7 @@ def q_lsh_pairs_sql(n_bands: int = 2, n_rows: int = 2, band_cap: int = 64):
 def _shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) token 3-grams — shared by minhash and
     decontamination."""
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    ).filter(F.size("t") >= 3)
+    toks = docs.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 3)
     return _explode_nonempty(
         toks,
         F.expr(
@@ -1203,9 +1192,7 @@ def q_repetition(spark, sf_dir):
     — machine-generated and boilerplate pages repeat themselves. Pure
     JVM-side array ops (size/array_distinct over a transform), no
     shuffle at all: at 100 TB this is a map-only pass."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    )
+    docs = _docs(spark, sf_dir).select("doc_id", _tokens().alias("t"))
     sh = F.expr(
         "transform(sequence(0, size(t)-3), i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
     )
@@ -1232,8 +1219,7 @@ def q_repetition_sql():
 def q_jaccard_adjacent(spark, sf_dir):
     """Exact n-gram Jaccard between consecutive doc ids (token unigram sets)."""
     docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.array_distinct(F.split(F.trim(F.col("text")), r"\s+")).alias("toks"),
+        "doc_id", F.array_distinct(_tokens()).alias("toks")
     )
     a = docs.alias("a")
     b = docs.alias("b")
@@ -1242,7 +1228,8 @@ def q_jaccard_adjacent(spark, sf_dir):
     union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
     return joined.select(
         F.col("a.doc_id").alias("doc_id"),
-        F.round(inter / union, 4).alias("jaccard"),
+        # two empty token sets give NULL, as the oracle's 0 / 0 does
+        F.round(F.try_divide(inter, union), 4).alias("jaccard"),
     )
 
 
@@ -1718,10 +1705,9 @@ def _doc_lines(spark, sf_dir, extra_cols: tuple = ()):
         _docs(spark, sf_dir)
         .select(
             "doc_id",
-            F.split(F.trim(F.col("text")), r"\s+").alias("t"),
+            _tokens().alias("t"),
             *[e.alias(nm) for nm, e in extra_cols],
         )
-        .withColumn("t", F.expr("filter(t, x -> x != '')"))
         .filter(F.size("t") >= 1)
     )
     nav = F.concat(
@@ -2005,10 +1991,8 @@ def _winnow_fps(spark, sf_dir, k: int = 3, w: int = 4) -> DataFrame:
     map-only in-row HOFs; shared by winnow_fp and winnow_pairs."""
     docs = (
         _docs(spark, sf_dir)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
-        .withColumn("t", F.expr("filter(t, x -> x != '')"))
+        .select("doc_id", _tokens().alias("t"))
         .filter(F.size("t") >= k + w - 1)
-        .select("doc_id", "t")
     )
     # r6: the window minima moved from per-row JVM HOFs to a vectorized
     # Arrow kernel (guide §4.2); gram construction + md5 stay JVM-side
@@ -2457,6 +2441,79 @@ def q_pack_chunks_sql():
     )
 
 
+def _image_dims():
+    """(width, height) of the synthetic image built for each doc_id."""
+    return (
+        (F.pmod(F.col("doc_id"), F.lit(640)) + 16).cast("int"),
+        (F.pmod(F.col("doc_id"), F.lit(480)) + 9).cast("int"),
+    )
+
+
+def _png_hex():
+    """Hex of a real PNG signature + IHDR chunk carrying _image_dims()."""
+    w, h = _image_dims()
+    return F.concat(
+        F.lit("89504E470D0A1A0A0000000D49484452"),
+        F.lpad(F.hex(w), 8, "0"),
+        F.lpad(F.hex(h), 8, "0"),
+        F.lit("0806000000DEADBEEF"),
+    )
+
+
+def _wav_blob():
+    """A real RIFF/WAVE header per doc_id (little-endian fields built with
+    hex byte swaps); every 5th row is garbage (the ``source`` text)."""
+
+    def le(colexpr, nbytes):
+        h = F.lpad(F.hex(colexpr), 2 * nbytes, "0")
+        return F.concat(
+            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
+        )
+
+    c = (F.pmod(F.col("doc_id"), F.lit(2)) + 1).cast("int")
+    rate = (F.lit(8000) * (F.pmod(F.col("doc_id"), F.lit(4)) + 1)).cast("int")
+    frames = (F.pmod(F.col("doc_id"), F.lit(100)) + 1).cast("int")
+    block = (c * 2).cast("int")
+    data_size = (frames * block).cast("int")
+    byte_rate = (rate * block).cast("int")
+    wav_hex = F.concat(
+        F.lit("52494646"), le(F.lit(36) + data_size, 4), F.lit("57415645"),
+        F.lit("666D7420"), le(F.lit(16), 4),
+        le(F.lit(1), 2), le(c, 2), le(rate, 4), le(byte_rate, 4),
+        le(block, 2), le(F.lit(16), 2),
+        F.lit("64617461"), le(data_size, 4),
+    )
+    return F.when(
+        F.pmod(F.col("doc_id"), F.lit(5)) == 0,
+        F.encode(F.col("source"), "UTF-8"),
+    ).otherwise(F.unhex(wav_hex))
+
+
+def _mp4_blob():
+    """A real ISO BMFF/MP4 container per doc_id (ftyp + moov/mvhd v0,
+    big-endian fields); every 4th row is garbage (the ``source`` text)."""
+
+    def be(colexpr, nbytes):
+        return F.lpad(F.hex(colexpr), 2 * nbytes, "0")
+
+    timescale = (F.lit(1000) * (F.pmod(F.col("doc_id"), F.lit(3)) + 1)).cast("int")
+    duration = (F.pmod(F.col("doc_id"), F.lit(5000)) + 1).cast("int")
+    # ftyp(16) + moov(8 + mvhd 108)
+    mp4_hex = F.concat(
+        F.lit("000000106674797069736F6D00000200"),       # ftyp isom
+        F.lit("00000074"), F.lit("6D6F6F76"),             # moov size=116
+        F.lit("0000006C"), F.lit("6D766864"),             # mvhd size=108
+        F.lit("00000000"),                                # version 0 + flags
+        F.lit("00000000"), F.lit("00000000"),             # creation/modif
+        be(timescale, 4), be(duration, 4),
+        F.lit("0" * 160),                                 # rate..next_track (80 B)
+    )
+    return F.when(
+        F.pmod(F.col("doc_id"), F.lit(4)) == 0,
+        F.encode(F.col("source"), "UTF-8"),
+    ).otherwise(F.unhex(mp4_hex))
+
+
 _MM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -2480,9 +2537,9 @@ def q_image_pipeline(spark, sf_dir):
     8x8 and REAL mean/std features. Because the fake pixels are a
     closed-form function of the payload's md5, the DuckDB oracle
     recomputes the resized grid and both features exactly — the entire
-    Spark pipeline (blob synthesis, mapInPandas batch shape, decode,
+    Spark pipeline (blob synthesis, map_docs batch shape, decode,
     resize indexing, feature math, 4dp floor discipline) is
-    value-hash-checked. Scale: one mapInPandas projection, no shuffle;
+    value-hash-checked. Scale: one map_docs projection, no shuffle;
     per-row work is O(w*h) exactly like a real decoder."""
     from xqspark.multimodal import (
         fake_decode_luma,
@@ -2491,48 +2548,23 @@ def q_image_pipeline(spark, sf_dir):
         resize_nearest,
     )
 
-    w = (F.pmod(F.col("doc_id"), F.lit(640)) + 16).cast("int")
-    h = (F.pmod(F.col("doc_id"), F.lit(480)) + 9).cast("int")
-    png_hex = F.concat(
-        F.lit("89504E470D0A1A0A0000000D49484452"),
-        F.lpad(F.hex(w), 8, "0"),
-        F.lpad(F.hex(h), 8, "0"),
-        F.lit("0806000000DEADBEEF"),
-    )
     df = _docs(spark, sf_dir).select(
-        "doc_id", F.unhex(png_hex).alias("payload")
+        "doc_id", F.unhex(_png_hex()).alias("payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, fmts, ws, hs, means, stds = [], [], [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                data = bytes(payload)
-                fmt, iw, ih = parse_image_meta(data)  # REAL header parse
-                arr = fake_decode_luma(data, iw, ih)  # FAKE pixels
-                small = resize_nearest(arr, 8, 8)     # REAL resize
-                m, sd = luma_features(small)          # REAL features
-                ids.append(doc_id)
-                fmts.append(fmt)
-                ws.append(iw)
-                hs.append(ih)
-                means.append(m)
-                stds.append(sd)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "px_mean": pd.Series(means, dtype="float64"),
-                    "px_std": pd.Series(stds, dtype="float64"),
-                }
-            )
+    def one(data):
+        fmt, iw, ih = parse_image_meta(data)  # REAL header parse
+        arr = fake_decode_luma(data, iw, ih)  # FAKE pixels
+        small = resize_nearest(arr, 8, 8)     # REAL resize
+        return (fmt, iw, ih, *luma_features(small))  # REAL features
 
-    return df.mapInPandas(
-        run,
+    return map_docs(
+        df,
+        "payload",
+        one,
         "doc_id long, fmt string, width int, height int, "
         "px_mean double, px_std double",
+        keep=("doc_id",),
     )
 
 
@@ -2567,61 +2599,36 @@ def q_video_frames(spark, sf_dir, n_frames: int = 4):
     (multimodal.frame_sample_offsets — the keyframe-thumbnail policy),
     per-frame FAKE luma whose mean the oracle recomputes in closed
     form. Garbage every 4th row is contained (no frames emitted), same
-    as multimodal_video. One mapInPandas + in-row explosion to
-    (doc_id, frame_idx, ts_ms, frame_mean); no shuffle."""
-    from xqspark.multimodal import frame_sample_offsets, parse_video_meta
-
-    def be(colexpr, nbytes):
-        return F.lpad(F.hex(colexpr), 2 * nbytes, "0")
-
-    timescale = (F.lit(1000) * (F.pmod(F.col("doc_id"), F.lit(3)) + 1)).cast("int")
-    duration = (F.pmod(F.col("doc_id"), F.lit(5000)) + 1).cast("int")
-    mp4_hex = F.concat(
-        F.lit("000000106674797069736F6D00000200"),
-        F.lit("00000074"), F.lit("6D6F6F76"),
-        F.lit("0000006C"), F.lit("6D766864"),
-        F.lit("00000000"),
-        F.lit("00000000"), F.lit("00000000"),
-        be(timescale, 4), be(duration, 4),
-        F.lit("0" * 160),
+    as multimodal_video. One map_docs row (an array of frames) per
+    document, exploded to (doc_id, frame_idx, ts_ms, frame_mean); no
+    shuffle."""
+    from xqspark.multimodal import (
+        fake_sample_stat,
+        frame_sample_offsets,
+        parse_video_meta,
     )
-    blob = F.when(
-        F.pmod(F.col("doc_id"), F.lit(4)) == 0,
-        F.encode(F.col("source"), "UTF-8"),
-    ).otherwise(F.unhex(mp4_hex))
-    df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xqspark.multimodal import fake_sample_stat
+    df = _docs(spark, sf_dir).select("doc_id", _mp4_blob().alias("payload"))
 
-        for batch in batches:
-            ids, idxs, tss, means = [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                data = bytes(payload)
-                meta = parse_video_meta(data)  # REAL box walk
-                if meta is None:
-                    continue  # garbage row: no frames
-                _fmt, tscale, dur = meta
-                duration_ms = dur * 1000 // tscale
-                hx = data.hex().upper()
-                for k, ts in enumerate(
-                    frame_sample_offsets(duration_ms, n_frames)
-                ):
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    tss.append(ts)
-                    means.append(fake_sample_stat(hx, k))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "ts_ms": pd.Series(tss, dtype="int64"),
-                    "frame_mean": pd.Series(means, dtype="float64"),
-                }
-            )
+    def one(data):
+        meta = parse_video_meta(data)  # REAL box walk
+        if meta is None:
+            return ([],)  # garbage row: no frames
+        _fmt, tscale, dur = meta
+        hx = data.hex().upper()
+        offsets = frame_sample_offsets(dur * 1000 // tscale, n_frames)
+        return ([(k, ts, fake_sample_stat(hx, k)) for k, ts in enumerate(offsets)],)
 
-    return df.mapInPandas(
-        run, "doc_id long, frame_idx int, ts_ms long, frame_mean double"
+    frames = map_docs(
+        df,
+        "payload",
+        one,
+        "doc_id long, "
+        "f array<struct<frame_idx: int, ts_ms: long, frame_mean: double>>",
+        keep=("doc_id",),
+    )
+    return _explode_nonempty(frames, "f", "f", keep=("doc_id",)).select(
+        "doc_id", "f.*"
     )
 
 
@@ -2656,7 +2663,7 @@ def q_corpus_stats(spark, sf_dir):
     1-row sides — each is its own partial-agg tree, nothing quadratic,
     and the output is a single row regardless of corpus size."""
     docs = _docs(spark, sf_dir)
-    toks = F.size(F.expr("filter(split(trim(text), '\\\\s+'), x -> x != '')"))
+    toks = F.size(_tokens())
     base = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(toks).cast("long").alias("total_tokens"),
@@ -2711,64 +2718,34 @@ def q_audio_windows(spark, sf_dir, n_windows: int = 4):
     audio modality): real RIFF/WAVE duration from the struct reader,
     deterministic midpoint window timestamps, per-window FAKE RMS the
     oracle recomputes in closed form. Garbage every 5th row contained.
-    One mapInPandas, no shuffle — same shape as video_frames."""
-    from xqspark.multimodal import frame_sample_offsets, parse_audio_meta
-
-    def le(colexpr, nbytes):
-        h = F.lpad(F.hex(colexpr), 2 * nbytes, "0")
-        return F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
-
-    c = (F.pmod(F.col("doc_id"), F.lit(2)) + 1).cast("int")
-    rate = (F.lit(8000) * (F.pmod(F.col("doc_id"), F.lit(4)) + 1)).cast("int")
-    frames = (F.pmod(F.col("doc_id"), F.lit(100)) + 1).cast("int")
-    block = (c * 2).cast("int")
-    data_size = (frames * block).cast("int")
-    byte_rate = (rate * block).cast("int")
-    wav_hex = F.concat(
-        F.lit("52494646"), le(F.lit(36) + data_size, 4), F.lit("57415645"),
-        F.lit("666D7420"), le(F.lit(16), 4),
-        le(F.lit(1), 2), le(c, 2), le(rate, 4), le(byte_rate, 4),
-        le(block, 2), le(F.lit(16), 2),
-        F.lit("64617461"), le(data_size, 4),
+    One map_docs row per document, exploded; no shuffle — same shape as
+    video_frames."""
+    from xqspark.multimodal import (
+        fake_sample_stat,
+        frame_sample_offsets,
+        parse_audio_meta,
     )
-    blob = F.when(
-        F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-        F.encode(F.col("source"), "UTF-8"),
-    ).otherwise(F.unhex(wav_hex))
-    df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xqspark.multimodal import fake_sample_stat
+    df = _docs(spark, sf_dir).select("doc_id", _wav_blob().alias("payload"))
 
-        for batch in batches:
-            ids, idxs, tss, rmss = [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                meta = parse_audio_meta(bytes(payload))  # REAL struct read
-                if meta is None:
-                    continue  # garbage row: no windows
-                _fmt, _ch, srate, n_frames = meta
-                duration_ms = n_frames * 1000 // srate
-                hx = bytes(payload).hex().upper()
-                for k, ts in enumerate(
-                    frame_sample_offsets(duration_ms, n_windows)
-                ):
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    tss.append(ts)
-                    rmss.append(fake_sample_stat(hx, k))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "win_idx": pd.Series(idxs, dtype="int32"),
-                    "ts_ms": pd.Series(tss, dtype="int64"),
-                    "rms": pd.Series(rmss, dtype="float64"),
-                }
-            )
+    def one(data):
+        meta = parse_audio_meta(data)  # REAL struct read
+        if meta is None:
+            return ([],)  # garbage row: no windows
+        _fmt, _ch, srate, n_frames = meta
+        hx = data.hex().upper()
+        offsets = frame_sample_offsets(n_frames * 1000 // srate, n_windows)
+        return ([(k, ts, fake_sample_stat(hx, k)) for k, ts in enumerate(offsets)],)
 
-    return df.mapInPandas(
-        run, "doc_id long, win_idx int, ts_ms long, rms double"
+    windows = map_docs(
+        df,
+        "payload",
+        one,
+        "doc_id long, w array<struct<win_idx: int, ts_ms: long, rms: double>>",
+        keep=("doc_id",),
+    )
+    return _explode_nonempty(windows, "w", "w", keep=("doc_id",)).select(
+        "doc_id", "w.*"
     )
 
 
@@ -2811,19 +2788,12 @@ def q_multimodal_meta(spark, sf_dir):
     """Multimodal decode: binary image blobs synthesized JVM-side per row
     (real PNG signature+IHDR / JPEG SOI+APP0+SOF0 containers, dimensions
     derived from doc_id), parsed back by pure-Python struct reads of the
-    public format specs in mapInPandas. Every third row is a non-image
+    public format specs in map_docs. Every third row is a non-image
     payload the decoder must contain (fmt='unknown', null dims) rather
     than crash on."""
     from xqspark.multimodal import parse_image_meta
 
-    w = (F.pmod(F.col("doc_id"), F.lit(640)) + 16).cast("int")
-    h = (F.pmod(F.col("doc_id"), F.lit(480)) + 9).cast("int")
-    png_hex = F.concat(
-        F.lit("89504E470D0A1A0A0000000D49484452"),
-        F.lpad(F.hex(w), 8, "0"),
-        F.lpad(F.hex(h), 8, "0"),
-        F.lit("0806000000DEADBEEF"),
-    )
+    w, h = _image_dims()
     jpeg_hex = F.concat(
         F.lit("FFD8FFE000104A46494600010100000100010000FFC0001108"),
         F.lpad(F.hex(h), 4, "0"),
@@ -2831,46 +2801,18 @@ def q_multimodal_meta(spark, sf_dir):
         F.lit("03012200021101031101FFD9"),
     )
     blob = (
-        F.when(F.pmod(F.col("doc_id"), F.lit(3)) == 0, F.unhex(png_hex))
+        F.when(F.pmod(F.col("doc_id"), F.lit(3)) == 0, F.unhex(_png_hex()))
         .when(F.pmod(F.col("doc_id"), F.lit(3)) == 1, F.unhex(jpeg_hex))
         .otherwise(F.encode(F.col("text"), "UTF-8"))
     )
     df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, sizes, fmts, ws, hs = [], [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                ids.append(doc_id)
-                if payload is None:
-                    sizes.append(0)
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    continue
-                data = bytes(payload)
-                sizes.append(len(data))
-                meta = parse_image_meta(data)
-                if meta is None:
-                    fmts.append("unknown")
-                    ws.append(None)
-                    hs.append(None)
-                else:
-                    fmts.append(meta[0])
-                    ws.append(meta[1])
-                    hs.append(meta[2])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    # nullable Int32: unknown-format dims must not kill the task
-                    "width": pd.Series(ws, dtype="Int32"),
-                    "height": pd.Series(hs, dtype="Int32"),
-                }
-            )
+    def one(data):
+        if data is None:
+            return 0, None, None, None
+        return (len(data), *(parse_image_meta(data) or ("unknown", None, None)))
 
-    return df.mapInPandas(decode, _MM_SCHEMA)
+    return map_docs(df, "payload", one, _MM_SCHEMA, keep=("doc_id",))
 
 
 def q_multimodal_meta_sql():
@@ -2974,62 +2916,12 @@ def q_multimodal_audio(spark, sf_dir):
     public spec. Every 5th row is garbage the decoder must contain."""
     from xqspark.multimodal import parse_audio_meta
 
-    def le(colexpr, nbytes):
-        h = F.lpad(F.hex(colexpr), 2 * nbytes, "0")
-        return F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
+    df = _docs(spark, sf_dir).select("doc_id", _wav_blob().alias("payload"))
 
-    c = (F.pmod(F.col("doc_id"), F.lit(2)) + 1).cast("int")
-    rate = (F.lit(8000) * (F.pmod(F.col("doc_id"), F.lit(4)) + 1)).cast("int")
-    frames = (F.pmod(F.col("doc_id"), F.lit(100)) + 1).cast("int")
-    block = (c * 2).cast("int")
-    data_size = (frames * block).cast("int")
-    byte_rate = (rate * block).cast("int")
-    wav_hex = F.concat(
-        F.lit("52494646"), le(F.lit(36) + data_size, 4), F.lit("57415645"),
-        F.lit("666D7420"), le(F.lit(16), 4),
-        le(F.lit(1), 2), le(c, 2), le(rate, 4), le(byte_rate, 4),
-        le(block, 2), le(F.lit(16), 2),
-        F.lit("64617461"), le(data_size, 4),
-    )
-    blob = F.when(
-        F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-        F.encode(F.col("source"), "UTF-8"),
-    ).otherwise(F.unhex(wav_hex))
-    df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
+    def one(data):
+        return parse_audio_meta(data) or ("unknown", None, None, None)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, fmts, chs, rates_, frs = [], [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                ids.append(doc_id)
-                meta = parse_audio_meta(
-                    None if payload is None else bytes(payload)
-                )
-                if meta is None:
-                    fmts.append("unknown")
-                    chs.append(None)
-                    rates_.append(None)
-                    frs.append(None)
-                else:
-                    fmts.append(meta[0])
-                    chs.append(meta[1])
-                    rates_.append(meta[2])
-                    frs.append(meta[3])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    # Int64: hostile headers can carry full 32/64-bit
-                    # unsigned fields; Int32 coercion would KILL the task
-                    "channels": pd.Series(chs, dtype="Int64"),
-                    "sample_rate": pd.Series(rates_, dtype="Int64"),
-                    "n_frames": pd.Series(frs, dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(decode, _MM_AUDIO_SCHEMA)
+    return map_docs(df, "payload", one, _MM_AUDIO_SCHEMA, keep=("doc_id",))
 
 
 def q_multimodal_audio_sql():
@@ -3060,54 +2952,12 @@ def q_multimodal_video(spark, sf_dir):
     decoder must contain."""
     from xqspark.multimodal import parse_video_meta
 
-    def be(colexpr, nbytes):
-        return F.lpad(F.hex(colexpr), 2 * nbytes, "0")
+    df = _docs(spark, sf_dir).select("doc_id", _mp4_blob().alias("payload"))
 
-    timescale = (F.lit(1000) * (F.pmod(F.col("doc_id"), F.lit(3)) + 1)).cast("int")
-    duration = (F.pmod(F.col("doc_id"), F.lit(5000)) + 1).cast("int")
-    # ftyp(16) + moov(8 + mvhd 108)
-    mp4_hex = F.concat(
-        F.lit("000000106674797069736F6D00000200"),       # ftyp isom
-        F.lit("00000074"), F.lit("6D6F6F76"),             # moov size=116
-        F.lit("0000006C"), F.lit("6D766864"),             # mvhd size=108
-        F.lit("00000000"),                                # version 0 + flags
-        F.lit("00000000"), F.lit("00000000"),             # creation/modif
-        be(timescale, 4), be(duration, 4),
-        F.lit("0" * 160),                                 # rate..next_track (80 B)
-    )
-    blob = F.when(
-        F.pmod(F.col("doc_id"), F.lit(4)) == 0,
-        F.encode(F.col("source"), "UTF-8"),
-    ).otherwise(F.unhex(mp4_hex))
-    df = _docs(spark, sf_dir).select("doc_id", blob.alias("payload"))
+    def one(data):
+        return parse_video_meta(data) or ("unknown", None, None)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, fmts, tss, durs = [], [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                ids.append(doc_id)
-                meta = parse_video_meta(
-                    None if payload is None else bytes(payload)
-                )
-                if meta is None:
-                    fmts.append("unknown")
-                    tss.append(None)
-                    durs.append(None)
-                else:
-                    fmts.append(meta[0])
-                    tss.append(meta[1])
-                    durs.append(meta[2])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    # Int64: mvhd v1 durations are 64-bit
-                    "timescale": pd.Series(tss, dtype="Int64"),
-                    "duration": pd.Series(durs, dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(decode, _MM_VIDEO_SCHEMA)
+    return map_docs(df, "payload", one, _MM_VIDEO_SCHEMA, keep=("doc_id",))
 
 
 def q_multimodal_video_sql():
@@ -3192,10 +3042,8 @@ def q_simhash(spark, sf_dir):
     # no Exchange, no Generate.
     docs = (
         _docs(spark, sf_dir)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
-        .withColumn("t", F.expr("filter(t, x -> x != '')"))
+        .select("doc_id", _tokens().alias("t"))
         .filter(F.size("t") >= 1)
-        .select("doc_id", "t")
     )
     words = docs.select(
         "doc_id",
@@ -3492,13 +3340,9 @@ def q_unigram_logprob(spark, sf_dir, vocab_k: int = 256):
     round(4), both IEEE-exact given identical inputs."""
     import math
 
-    # filter the ['']-for-empty-text artifact of split(trim(...)): the
-    # oracle's regexp_extract_all('\\S+') yields [] for such docs, and
-    # a phantom '' token would also pollute the vocabulary counts
     toks = (
         _docs(spark, sf_dir)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t"))
-        .withColumn("t", F.expr("filter(t, x -> x != '')"))
+        .select("doc_id", _tokens().alias("t"))
         .filter(F.size("t") >= 1)
     )
     # one counting job, persisted: total and top-k are two bounded
@@ -3763,9 +3607,9 @@ def q_ngram_counts(spark, sf_dir, n: int = 2, k: int = 20):
     and the top-k is a TakeOrdered (no global sort materializes the
     full vocabulary); ties broken deterministically (count desc, gram
     asc) so both engines cut the same k rows."""
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
-    ).filter(F.size("t") >= n)
+    toks = _docs(spark, sf_dir).select("doc_id", _tokens().alias("t")).filter(
+        F.size("t") >= n
+    )
     grams = _explode_nonempty(
         toks,
         F.expr(
@@ -3806,10 +3650,15 @@ def q_link_graph(spark, sf_dir, k: int = 5):
     udf = make_link_pairs_udf("nav a", "href")
     html = F.concat(
         F.lit("<html><body><nav>"),
-        F.expr(
-            "concat_ws('', transform(slice(filter(split(trim(text), '\\\\s+'), "
-            f"x -> x != ''), 1, {k}), "
-            "(tok, i) -> concat('<a href=\"/d', doc_id, '/', i, '\">', tok, '</a>')))"
+        F.concat_ws(
+            "",
+            F.transform(
+                F.slice(_tokens(), 1, k),
+                lambda tok, i: F.concat(
+                    F.lit('<a href="/d'), F.col("doc_id"), F.lit("/"), i,
+                    F.lit('">'), tok, F.lit("</a>"),
+                ),
+            ),
         ),
         F.lit('</nav><p>body text</p><a href="/out">outside nav</a>'
               "</body></html>"),

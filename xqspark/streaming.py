@@ -2,13 +2,13 @@
 
 The reference processes a finite file list; the streaming analog is a
 continuous pages source (new WARC-derived parquet dropping into a
-directory, or Kafka) flowing through the SAME extraction UDFs:
+directory, or Kafka) flowing through the SAME extraction path:
 
-    readStream(pages) -> salted columns -> mapInPandas(extract)
+    readStream(pages) -> part_key -> mapInArrow(extract, udfs.map_docs)
         -> (a) append sink of per-url extracted text
         -> (b) watermarked per-window lineage counts (late data bounded)
 
-mapInPandas and pandas UDFs are streaming-safe (stateless per batch); the
+mapInArrow and pandas UDFs are streaming-safe (stateless per batch); the
 lineage aggregate is the only stateful operator and uses a watermark so
 state is evicted at scale.
 """
@@ -36,15 +36,13 @@ def extract_stream(
     pages: DataFrame,
     mode: str = "xpath-single",
     query: str = "//title",
-    salts: int | None = None,
     n_buckets: int = 256,
 ) -> DataFrame:
-    """Streaming extraction: same UDF path as batch, no shuffle before the
-    map (repartition of an unbounded stream would force a stateful
-    exchange per microbatch; salting still feeds the part_key)."""
+    """Streaming extraction: same per-row path as batch, no shuffle before
+    the map (repartition of an unbounded stream would force a stateful
+    exchange per microbatch, so no host/salt columns are computed)."""
     return extract_pages(
-        pages, mode=mode, query=query, salts=salts, n_buckets=n_buckets,
-        repartition_to=0,
+        pages, mode=mode, query=query, n_buckets=n_buckets, repartition_to=0
     )
 
 
@@ -55,7 +53,7 @@ def windowed_lineage(
 ) -> DataFrame:
     """Per-event-time-window lineage over the raw stream: docs and bytes
     per (window, part_key), late data bounded by the watermark."""
-    keyed = with_part_key(with_host_salt(pages), 256).withWatermark(
+    keyed = with_part_key(pages, 256).withWatermark(
         "warc_ts", watermark
     )
     return keyed.groupBy(

@@ -1,15 +1,20 @@
-"""Vectorized pandas UDFs over the pure-Python core.
+"""The Python boundary: vectorized UDFs over the pure-Python core.
 
-Vectorized UDFs throughout, never per-row Python UDFs. ``doc_udf(fn, return_type)`` is the one per-document
-boundary: ``fn(payload)`` runs once per document inside each Arrow batch,
-e.g. ``doc_udf(beautify)`` or ``doc_udf(lambda p: xpath_query(p, q))``.
-The value factories build on it and compile their XPath/CSS query ONCE, at
-factory time, shipping it in the closure exactly like the reference
-compiles before iterating (internal/utils/utils.go:239-244).
+Vectorized UDFs throughout, never per-row Python UDFs. Two boundaries:
 
-Per-document errors are contained (lenient parsing + try/except -> NULL),
-never task failures — the Spark analog of the reference's recover() on
-XPath panics (utils.go:211-215) at 10^12-document scale.
+- ``doc_udf(fn, return_type)`` is the per-document column UDF:
+  ``fn(payload)`` runs once per document inside each Arrow batch, e.g.
+  ``doc_udf(beautify)`` or ``doc_udf(lambda p: xpath_query(p, q))``.
+  The value factories build on it and compile their XPath/CSS query
+  ONCE, at factory time, shipping it in the closure exactly like the
+  reference compiles before iterating (internal/utils/utils.go:239-244).
+  Per-document errors are contained (lenient parsing + try/except ->
+  NULL), never task failures — the Spark analog of the reference's
+  recover() on XPath panics (utils.go:211-215) at 10^12-document scale.
+- ``map_docs(df, payload, fn, schema, keep)`` is the per-row mapper
+  over ``mapInArrow``: one row in, one row of several columns out, for
+  extract_pages and the multimodal decoders. ``fn`` owns its NULL and
+  error policy there.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from xqspark.core.api import xpath_values
 from xqspark.core.dom import parse_dom
@@ -57,6 +63,37 @@ def doc_udf(fn, return_type=T.StringType()):
         return _series_map(payload, fn)
 
     return per_doc
+
+
+def map_docs(df, payload: str, fn, schema, keep=()):
+    """``df`` -> ``schema``, one row out per row in, through ``mapInArrow``.
+
+    ``schema`` (a StructType or DDL string) is the whole output: its first
+    ``len(keep)`` fields are the ``keep`` columns, passed through as the
+    input's Arrow arrays without becoming Python objects. ``fn(value)``
+    runs once per row on the ``payload`` column's value (``bytes``,
+    ``str`` or ``None``) and returns one tuple for the remaining fields;
+    each of those is built as one Arrow array of the field's exact type,
+    so a ``None`` fits any column. ``fn`` owns the NULL and error policy:
+    an exception it raises fails the task."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    computed = list(arrow_schema)[len(keep):]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = [fn(v) for v in batch.column(payload).to_pylist()]
+            cols = [batch.column(k) for k in keep]
+            cols += [
+                pa.array([r[i] for r in rows], type=f.type)
+                for i, f in enumerate(computed)
+            ]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return df.select(*keep, payload).mapInArrow(run, schema)
 
 
 def make_xpath_values_udf(query: str):
