@@ -203,3 +203,218 @@ def test_round_half_up_matches_spark_round(spark):
     ).select(F.round("x", 6).alias("r")).collect()
     for v, r in zip(vals, rows):
         assert _round_half_up(v, 6) == r["r"], v
+
+
+# --- map_arrow / list_parts without Spark ---------------------------------
+# map_arrow hands mapInArrow a generator over Arrow batches; a stand-in
+# DataFrame captures it, so the kernels run on hand-built batches and are
+# compared row by row with plain-Python references.
+
+
+class _Capture:
+    def select(self, *cols):
+        self.cols = cols
+        return self
+
+    def mapInArrow(self, run, schema):
+        return run
+
+
+def _map(inputs, fn, fields, keep, batches):
+    from pyspark.sql import types as T
+
+    from xqspark.udfs import map_arrow
+
+    schema = T.StructType([T.StructField(n, t) for n, t in fields])
+    df = _Capture()
+    run = map_arrow(df, inputs, fn, schema, keep)
+    return df.cols, list(run(iter(batches)))
+
+
+def _rows(out):
+    return [r for b in out for r in b.to_pylist()]
+
+
+def _hash_batch(seed, n_rows=9):
+    """doc_id, h (list<int64> k-gram hashes) and w0..w3 (list<int32>
+    16-bit words, as long as h), with varied row lengths."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    lens = rng.integers(6, 20, n_rows)
+    h = [rng.integers(0, 2**32, n).tolist() for n in lens]
+    ws = [[rng.integers(0, 2**16, n).tolist() for n in lens] for _ in range(4)]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(100, 100 + n_rows), pa.int64()),
+            pa.array(h, pa.list_(pa.int64())),
+        ]
+        + [pa.array(w, pa.list_(pa.int32())) for w in ws],
+        ["doc_id", "h"] + [f"w{i}" for i in range(4)],
+    )
+
+
+def _vec_batch(seed, n_rows=40, dim=5):
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    vs = rng.standard_normal((n_rows, dim)).astype(np.float32).tolist()
+    return pa.RecordBatch.from_arrays(
+        [pa.array(range(n_rows), pa.int64()), pa.array(vs, pa.list_(pa.float32()))],
+        ["vec_id", "v"],
+    )
+
+
+def _cents(seed, k):
+    vs = _vec_batch(seed, n_rows=k).column("v").to_pylist()
+    return [[float(x) for x in v] for v in vs]
+
+
+def _dots_ref(v, cents):
+    out = []
+    for c in cents:
+        acc = 0.0
+        for x, y in zip(v, c):
+            acc += float(x) * y
+        out.append(acc)
+    return out
+
+
+def test_list_parts_rebases_sliced_offsets():
+    from xqspark.udfs import list_parts
+
+    batch = _hash_batch(1).slice(3, 4)
+    h = batch.column("h")
+    assert h.offsets[0].as_py() > 0  # the slice does not start at 0
+    values, offs = list_parts(h)
+    assert offs[0] == 0
+    assert [values[a:b].tolist() for a, b in zip(offs[:-1], offs[1:])] == h.to_pylist()
+
+
+def test_hash_kernels_on_sliced_batch_match_per_row_reference():
+    from pyspark.sql import types as T
+
+    from xqspark.queries import _minhash_kernel, _simhash_kernel, _winnow_fps_kernel
+
+    L = T.LongType()
+    batch = _hash_batch(2).slice(2, 5)
+    ids = batch.column("doc_id").to_pylist()
+    hs = batch.column("h").to_pylist()
+
+    w = 4
+    fps = [("doc_id", L), ("fps", T.ArrayType(L))]
+    _, out = _map(["h"], _winnow_fps_kernel(w), fps, ("doc_id",), [batch])
+    assert _rows(out) == [
+        {"doc_id": i, "fps": sorted({min(h[j:j + w]) for j in range(len(h) - w + 1)})}
+        for i, h in zip(ids, hs)
+    ]
+
+    n = 8
+    mh = [(f"mh{j + 1}", L) for j in range(n)]
+    _, out = _map(["h"], _minhash_kernel(n), [("doc_id", L)] + mh, ("doc_id",), [batch])
+    assert _rows(out) == [
+        {"doc_id": i, **{
+            f"mh{j + 1}": min((a * x + b) % _MERSENNE31 for x in h)
+            for j, (a, b) in enumerate(_mh_params(n))
+        }}
+        for i, h in zip(ids, hs)
+    ]
+
+    words = [batch.column(f"w{k}").to_pylist() for k in range(4)]
+    names = [f"simhash_w{k}" for k in range(4)]
+    _, out = _map([f"w{k}" for k in range(4)], _simhash_kernel,
+                  [("doc_id", L)] + [(c, L) for c in names], ("doc_id",), [batch])
+
+    def vote(xs):
+        ones = [sum((x >> b) & 1 for x in xs) for b in range(16)]
+        return sum(1 << b for b, n in enumerate(ones) if 2 * n > len(xs))
+
+    assert _rows(out) == [
+        {"doc_id": i, **{c: vote(words[k][r]) for k, c in enumerate(names)}}
+        for r, i in enumerate(ids)
+    ]
+
+
+def test_map_arrow_skips_empty_batches():
+    from pyspark.sql import types as T
+
+    from xqspark.queries import _winnow_fps_kernel
+
+    L = T.LongType()
+    batch = _hash_batch(3)
+    fps = [("doc_id", L), ("fps", T.ArrayType(L))]
+    cols, out = _map(["h"], _winnow_fps_kernel(4), fps, ("doc_id",),
+                     [batch.slice(0, 0), batch.slice(4, 0)])
+    assert cols == ("doc_id", "h") and out == []
+
+
+def test_assign_kernel_selects_shared_column_once():
+    from pyspark.sql import types as T
+
+    from xqspark.queries import _assign_kernel
+
+    batch = _vec_batch(4).slice(7, 20)
+    cents = _cents(5, 3)
+    L = T.LongType()
+    cols, out = _map(["v"], _assign_kernel(cents),
+                     [("vec_id", L), ("v", T.ArrayType(T.FloatType())), ("bucket", L)],
+                     ("vec_id", "v"), [batch])
+    assert cols == ("vec_id", "v")
+    want = []
+    for r in batch.to_pylist():
+        ds = _dots_ref(r["v"], cents)
+        want.append({**r, "bucket": ds.index(max(ds))})
+    assert _rows(out) == want
+
+
+def test_train_partials_rows_do_not_align_with_input():
+    from pyspark.sql import types as T
+
+    from xqspark.queries import _train_partials_kernel
+
+    batch = _vec_batch(6).slice(5, 30)
+    cents = _cents(7, 4)
+    L = T.LongType()
+    cols, out = _map(["v"], _train_partials_kernel(cents),
+                     [("bucket", L), ("cnt", L), ("s", T.ArrayType(T.DoubleType()))],
+                     (), [batch])
+    assert cols == ("v",)
+    want = {}
+    for v in batch.column("v").to_pylist():
+        ds = _dots_ref(v, cents)
+        b = ds.index(max(ds))
+        cnt, s = want.get(b, (0, [0.0] * len(v)))
+        want[b] = (cnt + 1, [a + float(x) for a, x in zip(s, v)])
+    got = _rows(out)
+    assert len(got) == len(want) < batch.num_rows
+    assert {r["bucket"]: (r["cnt"], r["s"]) for r in got} == want
+
+
+def test_map_docs_runs_fn_per_row_and_transposes():
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from xqspark.udfs import map_docs
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2, 3], pa.int64()), pa.array([b"ab", None, b"cde"])],
+        ["doc_id", "payload"],
+    )
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("upper", T.StringType()),
+    ])
+    df = _Capture()
+    run = map_docs(
+        df, "payload",
+        lambda p: (None, None) if p is None else (len(p), p.decode().upper()),
+        schema, keep=("doc_id",),
+    )
+    assert df.cols == ("doc_id", "payload")
+    assert _rows(run(iter([batch.slice(1, 2), batch.slice(0, 0)]))) == [
+        {"doc_id": 2, "n": None, "upper": None},
+        {"doc_id": 3, "n": 3, "upper": "CDE"},
+    ]

@@ -98,7 +98,7 @@ TOKEN_OPS = [
     "decontaminate", "repetition", "line_dedup", "winnow_fp",
     "winnow_pairs", "simhash", "simhash_pairs", "dedup_clusters",
     "dedup_keep", "link_graph", "c4_filter", "ngram_counts",
-    "unigram_logprob", "corpus_stats",
+    "unigram_logprob", "corpus_stats", "quality_score",
 ]
 EDGE_TEXTS = [
     "\nalpha beta gamma delta epsilon zeta eta theta",

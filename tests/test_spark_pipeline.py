@@ -815,6 +815,37 @@ def test_read_warc_contains_corrupt_files(spark, tmp_path):
     assert [r["url"] for r in rows] == ["http://ok.example/p"]
 
 
+def test_read_warc_converts_offset_dates_to_utc(spark, tmp_path):
+    """A WARC-Date with a UTC offset lands as the same instant: 01:02:03
+    at +02:00 is 23:02:03 UTC the day before, next to a Z-dated record
+    and an offset-free one (read as UTC) in the same file."""
+    from datetime import datetime
+
+    from xqspark.core.warc import build_warc
+    from xqspark.pipeline import read_warc
+
+    (tmp_path / "dates.warc").write_bytes(
+        build_warc(
+            [
+                ("http://tz.example/z", "2024-03-05T01:02:03Z", b"<html/>"),
+                ("http://tz.example/plus2", "2024-03-05T01:02:03+02:00", b"<html/>"),
+                ("http://tz.example/naive", "2024-03-05T01:02:03", b"<html/>"),
+            ]
+        )
+    )
+    pages = read_warc(spark, str(tmp_path))
+    got = {
+        r["url"]: r["s"]
+        for r in pages.select("url", F.unix_timestamp("warc_ts").alias("s")).collect()
+    }
+    at = lambda iso: int(datetime.fromisoformat(iso).timestamp())  # noqa: E731
+    assert got == {
+        "http://tz.example/z": at("2024-03-05T01:02:03+00:00"),
+        "http://tz.example/plus2": at("2024-03-04T23:02:03+00:00"),
+        "http://tz.example/naive": at("2024-03-05T01:02:03+00:00"),
+    }
+
+
 def test_unigram_logprob_discriminates_and_is_map_only(spark, tmp_path):
     """The CCNet-style score must (a) rank rare-token gibberish below
     common-word text on a corpus where both exist, and (b) keep the

@@ -93,8 +93,3 @@ def decode_payload(data: bytes) -> str:
             return data.decode("utf-8", errors="replace")
         return data.decode(codec, errors="replace")
     return data.decode("utf-8", errors="surrogateescape")
-
-
-def encode_output(text: str) -> bytes:
-    """UTF-8 encode preserving surrogateescape'd raw bytes."""
-    return text.encode("utf-8", errors="surrogateescape")

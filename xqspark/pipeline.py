@@ -6,9 +6,10 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
 - salted repartitioning on url-host defuses domain skew BEFORE the
   Python-UDF compute (AQE splits shuffle partitions by bytes, not by
   UDF CPU cost, so explicit salting is required)
-- extraction runs in mapInArrow through udfs.map_docs (iterator of
-  Arrow batches — streaming, never collected; url and part_key pass
-  through as Arrow arrays), one pure-Python core call per document, in
+- extraction runs in mapInArrow through udfs.map_docs, the per-row form
+  of udfs.map_arrow (iterator of Arrow batches — streaming, never
+  collected; url and part_key pass through as Arrow arrays), one
+  pure-Python core call per document, in
   ONE task wave (defaultParallelism partitions): every Python task pays
   ~0.19 s of worker set-up on top of its rows, so the task count is the
   cost
@@ -265,7 +266,8 @@ def extract_pages(
     """pages -> (url, part_key, extracted, error, n_bytes).
 
     Plan shape: scan(url, html) [column-pruned] -> salted repartition on
-    (host, salt) -> MapInArrow (``udfs.map_docs``). Exactly one shuffle.
+    (host, salt) -> MapInArrow (``udfs.map_docs`` over ``udfs.map_arrow``).
+    Exactly one shuffle.
     An unknown ``mode`` raises ValueError here, before any Spark job.
 
     The repartition defaults to ``defaultParallelism`` partitions, one

@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import logging
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
-from xqspark.udfs import map_docs
+from xqspark.udfs import list_parts, map_arrow, map_docs
 
 _LOG = logging.getLogger("xqspark")
 
@@ -778,9 +779,11 @@ def q_quality_score(spark, sf_dir):
     toks = F.regexp_count(F.trim(text), F.lit(r"\S+"))
     return _docs(spark, sf_dir).select(
         "doc_id",
-        F.round(alpha / F.length(text), 4).alias("alpha_ratio"),
-        F.round(spaces / F.length(text), 4).alias("space_ratio"),
-        F.round(stops / toks, 4).alias("stop_ratio"),
+        # try_divide: an empty text gives NULL ratios, as in the oracle,
+        # instead of an ANSI DIVIDE_BY_ZERO that aborts the query
+        F.round(F.try_divide(alpha, F.length(text)), 4).alias("alpha_ratio"),
+        F.round(F.try_divide(spaces, F.length(text)), 4).alias("space_ratio"),
+        F.round(F.try_divide(stops, toks), 4).alias("stop_ratio"),
     )
 
 
@@ -892,6 +895,7 @@ def minhash_sig_df(
     constants to the batch catalog."""
     docs = df.select(id_col, _tokens(text_col).alias("t"))
     docs = docs.filter(F.size("t") >= 3)
+    hashed = docs.select(id_col, F.expr(_gram_hash_expr(3)).alias("h"))
     if n_hashes >= 8:
         # r6: at LSH slot counts the n_hashes separate
         # array_min(transform(...)) passes dominate (each allocates a
@@ -899,28 +903,16 @@ def minhash_sig_df(
         # permutations as one vectorized matrix op over the
         # JVM-computed base hashes — bit-identical signatures (same md5
         # digests, exact int64 math). The small-n JVM path below stays:
-        # one Python hop does not pay for 4 slots.
-        hashed = docs.select(
-            id_col, F.expr(_gram_hash_expr(3)).alias("h")
-        )
+        # on the 5000-doc sf0.1 table (local[4], noop sink, 12
+        # alternating pairs) the 4-slot JVM branch took a median 0.75 s
+        # (quartiles 0.71-0.81) and the kernel at 4 slots 0.99 s
+        # (0.93-1.01), with bit-identical signatures.
         schema = f"{id_col} long, " + ", ".join(
             f"mh{j + 1} long" for j in range(n_hashes)
         )
-        return hashed.mapInArrow(
-            _minhash_kernel(n_hashes, id_col), schema
+        return map_arrow(
+            hashed, ["h"], _minhash_kernel(n_hashes), schema, keep=(id_col,)
         )
-    sh = docs.select(
-        id_col,
-        F.expr(
-            "transform(sequence(0, size(t)-3), i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-        ).alias("sh"),
-    )
-    hashed = sh.select(
-        id_col,
-        F.expr(
-            "transform(sh, s -> cast(conv(substring(md5(encode(s, 'UTF-8')), 1, 8), 16, 10) as bigint))"
-        ).alias("h"),
-    )
     mh = [
         F.expr(
             f"array_min(transform(h, x -> pmod({a}L * x + {b}L, {_MERSENNE31}L)))"
@@ -1375,47 +1367,32 @@ def _dots_seq(V, C):
     this kernel replaced, so every double is bit-identical to what the
     old plan-literal projection produced (and to the DuckDB oracle's
     sequential list_dot_product)."""
-    import numpy as np
-
     acc = V[:, 0, None] * C[None, :, 0]
     for d in range(1, V.shape[1]):
         acc = acc + V[:, d, None] * C[None, :, d]
     return acc
 
 
+def _vectors(v):
+    """A fixed-dim Arrow list column as an (n, dim) float64 matrix (the
+    values are row-major, so the reshape needs no per-row copy)."""
+    return list_parts(v)[0].astype(np.float64).reshape(len(v), -1)
+
+
 def _assign_kernel(cents: list):
-    """mapInArrow kernel for the IVF argmax-dot assignment: centroids
+    """``map_arrow`` kernel for the IVF argmax-dot assignment: centroids
     travel in the task closure (broadcast-style, NOT plan literals —
     VERDICT r5 #3: a nlist=4096 quantizer must not live in the plan
     string), dots use the sequential fold above, and ``np.argmax`` takes
     the FIRST maximum — the same smallest-cid tie-break the old
     ``array_position(_dots, array_max(_dots))`` projection had and the
     DuckDB oracles mirror with row_number(ORDER BY d DESC, cid ASC)."""
+    C = np.array(cents, dtype=np.float64)
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+    def assign(v):
+        return (np.argmax(_dots_seq(_vectors(v), C), axis=1),)
 
-        C = np.array(cents, dtype=np.float64)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            # fixed-dim vectors: flatten() respects slice offsets, so the
-            # reshape is a zero-copy view of the Arrow values buffer
-            V = (
-                b.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(b.num_rows, -1)
-            )
-            bucket = np.argmax(_dots_seq(V, C), axis=1).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), b.column(1), pa.array(bucket)],
-                ["vec_id", "v", "bucket"],
-            )
-
-    return gen
+    return assign
 
 
 def _assign_buckets(emb: DataFrame, cents: list) -> DataFrame:
@@ -1431,9 +1408,12 @@ def _assign_buckets(emb: DataFrame, cents: list) -> DataFrame:
     # v passes through untouched as float32 (the parquet element type),
     # exactly as the old projection left it; widening to double happens
     # downstream in _with_norm / the cosine, unchanged
-    return emb.select("vec_id", "v").mapInArrow(
+    return map_arrow(
+        emb,
+        ["v"],
         _assign_kernel(cents),
         "vec_id bigint, v array<float>, bucket bigint",
+        keep=("vec_id", "v"),
     )
 
 
@@ -1565,39 +1545,18 @@ def _train_partials_kernel(cents: list):
     rounds means to 6dp; cross-partition merge order was already
     arbitrary under the old avg() aggregate, and both engines round to
     6dp precisely so that noise cannot reach the stored centroid."""
+    C = np.array(cents, dtype=np.float64)
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+    def partials(v):
+        V = _vectors(v)
+        bucket = np.argmax(_dots_seq(V, C), axis=1)
+        cnt = np.bincount(bucket, minlength=C.shape[0])
+        S = np.zeros_like(C)
+        np.add.at(S, bucket, V)
+        nz = np.flatnonzero(cnt)
+        return nz, cnt[nz], [S[i].tolist() for i in nz]
 
-        C = np.array(cents, dtype=np.float64)
-        k = C.shape[0]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            V = (
-                b.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(b.num_rows, -1)
-            )
-            bucket = np.argmax(_dots_seq(V, C), axis=1)
-            cnt = np.bincount(bucket, minlength=k)
-            S = np.zeros_like(C)
-            np.add.at(S, bucket, V)
-            nz = np.flatnonzero(cnt)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(nz.astype(np.int64)),
-                    pa.array(cnt[nz].astype(np.int64)),
-                    pa.array([S[i].tolist() for i in nz],
-                             type=pa.list_(pa.float64())),
-                ],
-                ["bucket", "cnt", "s"],
-            )
-
-    return gen
+    return partials
 
 
 def ivf_lloyd_centroids(
@@ -1631,7 +1590,9 @@ def ivf_lloyd_centroids(
             # earlier 64-column groupBy(bucket) aggregate spent ~0.9 s
             # PER ITERATION in wide-codegen + exchange overhead at any
             # sf; the kernel iteration is a single map-only pass.
-            rows = emb.mapInArrow(
+            rows = map_arrow(
+                emb,
+                ["v"],
                 _train_partials_kernel(cents),
                 "bucket bigint, cnt bigint, s array<double>",
             ).collect()
@@ -1870,7 +1831,7 @@ def _gram_hash_expr(k: int) -> str:
 
 
 def _winnow_fps_kernel(w: int):
-    """mapInArrow kernel for the winnowing fingerprint selection: the
+    """``map_arrow`` kernel for the winnowing fingerprint selection: the
     input column is the JVM-computed k-gram base hash array
     (_gram_hash_expr — md5 and gram bytes stay in codegen); the kernel
     is numpy's sliding-window min + unique, replacing the JVM HOF pass
@@ -1878,32 +1839,22 @@ def _winnow_fps_kernel(w: int):
     all-Python md5 loop (r6 second pass, measured at 10x sf0.1:
     winnow_fp 1.6 -> 1.3 s). Exact: int64 arithmetic only."""
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+    win = np.lib.stride_tricks.sliding_window_view
 
-        win = np.lib.stride_tricks.sliding_window_view
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            harr = b.column(1)
-            offs = harr.offsets.to_numpy(zero_copy_only=False)
-            flat = harr.flatten().to_numpy(zero_copy_only=False)
-            base = offs[0]
-            out = []
-            for i in range(b.num_rows):
-                h = flat[offs[i] - base:offs[i + 1] - base]
-                out.append(np.unique(win(h, w).min(axis=1)).tolist())
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(out, type=pa.list_(pa.int64()))],
-                ["doc_id", "fps"],
-            )
+    def fps(h):
+        flat, offs = list_parts(h)
+        return (
+            [
+                np.unique(win(flat[a:b], w).min(axis=1)).tolist()
+                for a, b in zip(offs[:-1], offs[1:])
+            ],
+        )
 
-    return gen
+    return fps
 
 
-def _simhash_kernel():
-    """mapInArrow kernel for the 64-bit SimHash bit votes: the input is
+def _simhash_kernel(*words):
+    """``map_arrow`` kernel for the 64-bit SimHash bit votes: the input is
     the four JVM-computed per-token 16-bit word arrays (digest bytes
     0..7 big-endian == conv(substring(hex,...),16,10); md5 stays in
     codegen, where it measured as fast as a Python hashlib loop and the
@@ -1913,40 +1864,19 @@ def _simhash_kernel():
     PER TOKEN (r4's best JVM shape), and r6's first-pass all-Python
     kernel whose md5 loop was its cost (1.8 -> 1.5 s at 10x sf0.1).
     All-integer math — bit-identical output."""
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        shifts = np.arange(16, dtype=np.int64)
-        names = ["doc_id"] + [f"simhash_w{wd}" for wd in range(4)]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            offs = b.column(1).offsets.to_numpy(zero_copy_only=False)
-            starts = offs[:-1] - offs[0]
-            lens = np.diff(offs)
-            cols = []
-            for wd in range(4):
-                flat = (
-                    b.column(1 + wd)
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                bits = (flat[:, None] >> shifts) & 1
-                counts = np.add.reduceat(bits, starts, axis=0)
-                maj = (2 * counts > lens[:, None]).astype(np.int64)
-                cols.append((maj << shifts).sum(axis=1))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)] + [pa.array(c) for c in cols], names
-            )
-
-    return gen
+    shifts = np.arange(16, dtype=np.int64)
+    cols = []
+    for word in words:
+        flat, offs = list_parts(word)
+        bits = (flat.astype(np.int64)[:, None] >> shifts) & 1
+        counts = np.add.reduceat(bits, offs[:-1], axis=0)
+        maj = (2 * counts > np.diff(offs)[:, None]).astype(np.int64)
+        cols.append((maj << shifts).sum(axis=1))
+    return cols
 
 
-def _minhash_kernel(n_hashes: int, id_col: str = "doc_id"):
-    """mapInArrow kernel for the MinHash signature at LSH-scale slot
+def _minhash_kernel(n_hashes: int):
+    """``map_arrow`` kernel for the MinHash signature at LSH-scale slot
     counts (n_hashes >= 8): the input column is the JVM-computed base
     hash array (one md5 per 3-token shingle — shingling and digesting
     stay in codegen, where they measured as fast as a Python hashlib
@@ -1960,30 +1890,14 @@ def _minhash_kernel(n_hashes: int, id_col: str = "doc_id"):
     int64 matrix was never it). a*h+b stays inside int64 by
     construction (_mh_params: max < 2^63-1); % (2^31-1) on non-negative
     operands == pmod. Bit-identical signatures."""
-    params = _mh_params(n_hashes)
+    A, B = np.array(_mh_params(n_hashes), dtype=np.int64).T[:, :, None]
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+    def sig(h):
+        flat, offs = list_parts(h)
+        perm = (A * flat[None, :] + B) % _MERSENNE31
+        return np.minimum.reduceat(perm, offs[:-1], axis=1)
 
-        A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-        names = [id_col] + [f"mh{j + 1}" for j in range(n_hashes)]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            harr = b.column(1)
-            flat = harr.flatten().to_numpy(zero_copy_only=False)
-            offs = harr.offsets.to_numpy(zero_copy_only=False)
-            starts = offs[:-1] - offs[0]
-            perm = (A * flat[None, :] + B) % _MERSENNE31
-            mins = np.minimum.reduceat(perm, starts, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)] + [pa.array(mins[j]) for j in range(n_hashes)],
-                names,
-            )
-
-    return gen
+    return sig
 
 
 def _winnow_fps(spark, sf_dir, k: int = 3, w: int = 4) -> DataFrame:
@@ -2005,8 +1919,12 @@ def _winnow_fps(spark, sf_dir, k: int = 3, w: int = 4) -> DataFrame:
     hashed = docs.select(
         "doc_id", F.expr(_gram_hash_expr(k)).alias("h")
     )
-    return hashed.mapInArrow(
-        _winnow_fps_kernel(w), "doc_id long, fps array<bigint>"
+    return map_arrow(
+        hashed,
+        ["h"],
+        _winnow_fps_kernel(w),
+        "doc_id long, fps array<bigint>",
+        keep=("doc_id",),
     )
 
 
@@ -3055,10 +2973,13 @@ def q_simhash(spark, sf_dir):
             for w in range(4)
         ],
     )
-    return words.mapInArrow(
-        _simhash_kernel(),
+    return map_arrow(
+        words,
+        [f"w{w}" for w in range(4)],
+        _simhash_kernel,
         "doc_id long, simhash_w0 long, simhash_w1 long, "
         "simhash_w2 long, simhash_w3 long",
+        keep=("doc_id",),
     )
 
 
@@ -3794,80 +3715,7 @@ QUERIES = {
     "pack_chunks": q_pack_chunks,
 }
 
-ORACLES = {
-    "xpath_title": q_xpath_title_sql(),
-    "xpath_token_count": q_xpath_token_count_sql(),
-    "xpath_count": q_xpath_count_sql(),
-    "xpath_boolean": q_xpath_boolean_sql(),
-    "xpath_node_mode": q_xpath_node_mode_sql(),
-    "xpath_spans": q_xpath_spans_sql(),
-    "css_lang_attr": q_css_lang_attr_sql(),
-    "css_node_mode": q_css_node_mode_sql(),
-    "beautify_xml": q_beautify_xml_sql(),
-    "beautify_html": q_beautify_html_sql(),
-    "beautify_json": q_beautify_json_sql(),
-    "xml2json_doc": q_xml2json_doc_sql(),
-    "detect_format": q_detect_format_sql(),
-    "charset_decl": q_charset_decl_sql(),
-    "charset_transcode": q_charset_transcode_sql(),
-    "main_content": q_main_content_sql(),
-    "host_topk": q_host_topk_sql(),
-    "dedup_groups": q_dedup_groups_sql(),
-    "latest_event_per_user": q_latest_event_per_user_sql(),
-    "lineage_buckets": q_lineage_buckets_sql(),
-    "pricing_summary": q_pricing_summary_sql(),
-    "supplier_revenue": q_supplier_revenue_sql(),
-    "events_hourly": q_events_hourly_sql(),
-    "token_stats": q_token_stats_sql(),
-    "quality_score": q_quality_score_sql(),
-    "lang_id": q_lang_id_sql(),
-    "fingerprint": q_fingerprint_sql(),
-    "minhash_sig": q_minhash_sig_sql(),
-    "lsh_pairs": q_lsh_pairs_sql(),
-    "jaccard_adjacent": q_jaccard_adjacent_sql(),
-    "decontaminate": q_decontaminate_sql(),
-    "repetition": q_repetition_sql(),
-    "url_normalize": q_url_normalize_sql(),
-    "ann_topk": q_ann_topk_sql(),
-    "ann_ivf_label": q_ann_ivf_label_sql(),
-    "ann_ivf_kmeans": q_ann_ivf_kmeans_sql(),
-    "ann_ivf_lloyd": q_ann_ivf_lloyd_sql(),
-    "ann_recall": q_ann_recall_sql(),
-    "line_dedup": q_line_dedup_sql(),
-    "winnow_fp": q_winnow_fp_sql(),
-    "winnow_pairs": q_winnow_pairs_sql(),
-    "embedding_neardup": q_embedding_neardup_sql(),
-    "multimodal_meta": q_multimodal_meta_sql(),
-    "multimodal_audio": q_multimodal_audio_sql(),
-    "multimodal_video": q_multimodal_video_sql(),
-    "multimodal_pdf": q_multimodal_pdf_sql(),
-    "beautify_auto": q_beautify_auto_sql(),
-    "css_misnested": q_css_misnested_sql(),
-    "error_containment": q_error_containment_sql(),
-    "hash_split": q_hash_split_sql(),
-    "normalize_text": q_normalize_text_sql(),
-    "redact_pii": q_redact_pii_sql(),
-    "pack_chunks": q_pack_chunks_sql(),
-    "simhash": q_simhash_sql(),
-    "simhash_pairs": q_simhash_pairs_sql(),
-    "dedup_clusters": q_dedup_clusters_sql(),
-    "dedup_keep": q_dedup_keep_sql(),
-    "link_graph": q_link_graph_sql(),
-    "c4_filter": q_c4_filter_sql(),
-    "ngram_counts": q_ngram_counts_sql(),
-    "sitemap_urls": q_sitemap_urls_sql(),
-    "robots_check": q_robots_check_sql(),
-    "unigram_logprob": q_unigram_logprob_sql(),
-    "image_pipeline": q_image_pipeline_sql(),
-    "video_frames": q_video_frames_sql(),
-    "audio_windows": q_audio_windows_sql(),
-    "corpus_stats": q_corpus_stats_sql(),
-}
-
 # The driver-row rotation in __spark_entry__ slices the first 50 entries
-# of BOTH dicts, so their key ORDER must be identical — normalize here
-# (insertion points drifted once; code-review r5 find)
-assert set(ORACLES) == set(QUERIES), (
-    set(ORACLES) ^ set(QUERIES)
-)
-ORACLES = {k: ORACLES[k] for k in QUERIES}
+# of BOTH dicts, so their key ORDER must be identical: derive the oracles
+# from QUERIES (every op ``name`` has its twin ``q_{name}_sql``).
+ORACLES = {name: globals()[f"q_{name}_sql"]() for name in QUERIES}

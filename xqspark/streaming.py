@@ -4,7 +4,8 @@ The reference processes a finite file list; the streaming analog is a
 continuous pages source (new WARC-derived parquet dropping into a
 directory, or Kafka) flowing through the SAME extraction path:
 
-    readStream(pages) -> part_key -> mapInArrow(extract, udfs.map_docs)
+    readStream(pages) -> part_key -> extract_pages (mapInArrow through
+        udfs.map_docs, the per-row form of udfs.map_arrow)
         -> (a) append sink of per-url extracted text
         -> (b) watermarked per-window lineage counts (late data bounded)
 

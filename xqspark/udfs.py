@@ -11,10 +11,13 @@ Vectorized UDFs throughout, never per-row Python UDFs. Two boundaries:
   Per-document errors are contained (lenient parsing + try/except ->
   NULL), never task failures — the Spark analog of the reference's
   recover() on XPath panics (utils.go:211-215) at 10^12-document scale.
-- ``map_docs(df, payload, fn, schema, keep)`` is the per-row mapper
-  over ``mapInArrow``: one row in, one row of several columns out, for
-  extract_pages and the multimodal decoders. ``fn`` owns its NULL and
-  error policy there.
+- ``map_arrow(df, inputs, fn, schema, keep)`` is the batch mapper over
+  ``mapInArrow``: ``fn`` takes whole Arrow columns and returns whole
+  output columns, for the numpy kernels in ``queries``; ``list_parts``
+  decodes an Arrow list column for them. ``map_docs(df, payload, fn,
+  schema, keep)`` is its per-row form (one row in, one row of several
+  columns out) for extract_pages and the multimodal decoders. ``fn``
+  owns its NULL and error policy on both.
 """
 
 from __future__ import annotations
@@ -65,17 +68,17 @@ def doc_udf(fn, return_type=T.StringType()):
     return per_doc
 
 
-def map_docs(df, payload: str, fn, schema, keep=()):
-    """``df`` -> ``schema``, one row out per row in, through ``mapInArrow``.
+def map_arrow(df, inputs, fn, schema, keep=()):
+    """``df`` -> ``schema`` through ``mapInArrow``, one call of ``fn`` per
+    Arrow batch.
 
     ``schema`` (a StructType or DDL string) is the whole output: its first
     ``len(keep)`` fields are the ``keep`` columns, passed through as the
-    input's Arrow arrays without becoming Python objects. ``fn(value)``
-    runs once per row on the ``payload`` column's value (``bytes``,
-    ``str`` or ``None``) and returns one tuple for the remaining fields;
-    each of those is built as one Arrow array of the field's exact type,
-    so a ``None`` fits any column. ``fn`` owns the NULL and error policy:
-    an exception it raises fails the task."""
+    batch's Arrow arrays. ``fn(*[batch.column(c) for c in inputs])``
+    returns one sequence per remaining field, each built as one Arrow
+    array of the field's exact type. With ``keep=()`` the output need not
+    have one row per input row. Empty batches are skipped. ``fn`` owns the
+    NULL and error policy: an exception it raises fails the task."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
@@ -85,15 +88,36 @@ def map_docs(df, payload: str, fn, schema, keep=()):
         import pyarrow as pa
 
         for batch in batches:
-            rows = [fn(v) for v in batch.column(payload).to_pylist()]
+            if batch.num_rows == 0:
+                continue
+            outs = fn(*[batch.column(c) for c in inputs])
             cols = [batch.column(k) for k in keep]
             cols += [
-                pa.array([r[i] for r in rows], type=f.type)
-                for i, f in enumerate(computed)
+                pa.array(o, type=f.type) for o, f in zip(outs, computed, strict=True)
             ]
             yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-    return df.select(*keep, payload).mapInArrow(run, schema)
+    return df.select(*dict.fromkeys([*keep, *inputs])).mapInArrow(run, schema)
+
+
+def list_parts(arr):
+    """An Arrow list array as ``(values, offsets)`` numpy arrays, the
+    offsets rebased to 0: row ``i`` is ``values[offsets[i]:offsets[i+1]]``
+    even when ``arr`` is a slice whose offsets start past 0."""
+    offs = arr.offsets.to_numpy(zero_copy_only=False)
+    return arr.flatten().to_numpy(zero_copy_only=False), offs - offs[0]
+
+
+def map_docs(df, payload: str, fn, schema, keep=()):
+    """``df`` -> ``schema``, one row out per row in: ``map_arrow`` with
+    ``fn(value)`` run once per row on the ``payload`` column's value
+    (``bytes``, ``str`` or ``None``). ``fn`` returns one tuple for the
+    fields after the ``keep`` columns; a ``None`` fits any column."""
+
+    def rows(col):
+        return zip(*[fn(v) for v in col.to_pylist()])
+
+    return map_arrow(df, [payload], rows, schema, keep)
 
 
 def make_xpath_values_udf(query: str):
