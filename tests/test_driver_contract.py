@@ -92,7 +92,8 @@ def test_queries_and_oracles_key_order_identical():
 
 # Every token op, on texts whose whitespace edges Spark's split(trim(...))
 # turns into '' tokens: a leading newline, a trailing tab, empty text
-# (twice in a row, so jaccard_adjacent divides two empty sets).
+# (twice in a row, so jaccard_adjacent divides two empty sets) and
+# whitespace-only text.
 TOKEN_OPS = [
     "dedup_groups", "minhash_sig", "lsh_pairs", "jaccard_adjacent",
     "decontaminate", "repetition", "line_dedup", "winnow_fp",
@@ -114,7 +115,14 @@ EDGE_TEXTS = [
     "\nx y z x y z",
     "\nsame three words",
     "same three words",
+    "\t", "\n", "  \n ", " \t ", "\r\n", "\t\n",
 ]
+
+
+# Per-document text ops over a markup payload built around the text, on
+# the same edges: whitespace-only text has its own formatting rules
+# (self-closing, dropped or raw-kept space runs).
+TEXT_OPS = ["beautify_xml", "beautify_html", "xml2json_doc", "main_content"]
 
 
 @pytest.fixture(scope="module")
@@ -137,7 +145,7 @@ def edge_dir(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", TOKEN_OPS)
+@pytest.mark.parametrize("name", TOKEN_OPS + TEXT_OPS)
 def test_token_ops_match_oracles_on_whitespace_edges(spark, edge_dir, name):
     from xqspark.queries import ORACLES, QUERIES
 

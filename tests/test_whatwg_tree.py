@@ -164,8 +164,21 @@ def test_caption_holds_content_and_marker():
 
 def test_tree_builder_never_raises_on_soup():
     """10k random tag soups: parse_html must always return a tree, never
-    raise, never hang — per-row containment is the 10^12-doc contract."""
+    raise, never hang — per-row containment is the 10^12-doc contract.
+    Every tree is well linked and numbered: each node's ``order`` is its
+    pre-order index (XPath/CSS document order relies on it) and each
+    child's ``parent`` is the node that lists it."""
     import random
+
+    def check(tree):
+        for i, node in enumerate(tree.iter_descendants()):
+            assert node.order == i, (doc, node)
+        stack = [tree]
+        while stack:
+            node = stack.pop()
+            for child in node.children:
+                assert child.parent is node, (doc, child)
+            stack.extend(node.children)
 
     random.seed(31337)
     frag = ["<b>", "</b>", "<i>", "</i>", "<a href='x'>", "</a>", "<p>",
@@ -181,6 +194,7 @@ def test_tree_builder_never_raises_on_soup():
     for _ in range(10_000):
         doc = "".join(random.choice(frag) for _ in range(random.randint(1, 25)))
         tree = parse_html(doc)  # must not raise
+        check(tree)
         serialize_html(tree)    # nor the serializer
 
 

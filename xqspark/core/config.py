@@ -24,11 +24,6 @@ class ConfigOptions:
     node: bool = False
     no_pager: bool = False
 
-    def indent_str(self) -> str:
-        if self.tab:
-            return "\t"
-        return " " * self.indent
-
 
 def _parse_bool(value: str) -> bool:
     # Go strconv.ParseBool: 1/t/T/TRUE/true/True -> true; else false-ish

@@ -8,284 +8,20 @@ close-after-close indentation.
 
 from __future__ import annotations
 
-import re as _re
-
-from .entities import unescape
 from .htmltok import (
-    RAW_TEXT_TAGS,
     HComment,
     HDoctype,
     HEndTag,
     HStartTag,
     HText,
     HtmlTokenizer,
-    _convert_newlines,
-    read_comment,
-    scan_raw_end,
-    scan_script,
 )
 from .textutil import VOID_TAGS, escape_text, normalize_spaces
 
 
 def format_html(data: bytes | str, indent: str = "  ") -> str:
     if isinstance(data, bytes):
-        text = data.decode("utf-8", errors="surrogateescape")
-    else:
-        text = data
-    try:
-        return _format_html_fused(text, indent)
-    except _HFallback:
-        return _format_html_general(text, indent)
-
-
-class _HFallback(Exception):
-    """Input uses a construct outside the fused formatter fast path."""
-
-
-# Start tags with ws-separated keys and double-quoted ('<'/CR-free),
-# single-quoted or unquoted values (ws allowed around '='), or no
-# value; trailing '/' only at the end. Everything else (EOF-in-tag,
-# '=' keys, '/' separators, exotic key chars, '= >' empty-unquoted)
-# bails to the general tokenizer — bail, never misparse: any attr
-# shape the alternation can't consume fails the WHOLE tag match.
-_FUSED_H_TAG = _re.compile(
-    r"<([A-Za-z][A-Za-z0-9-]*)"
-    r"((?:[ \t\n\f]+[A-Za-z0-9_:.\-]+"
-    r"(?:[ \t\n\f]*=[ \t\n\f]*"
-    r"(?:\"[^\"<\r]*\"|'[^'<\r]*'|[^ \t\n\f\r>\"'][^ \t\n\f\r>]*))?)*)"
-    r"[ \t\n\f]*(/?)>"
-)
-_FUSED_H_ATTR = _re.compile(
-    r"([A-Za-z0-9_:.\-]+)"
-    r"(?:[ \t\n\f]*=[ \t\n\f]*"
-    r"(?:\"([^\"]*)\"|'([^']*)'|([^ \t\n\f\r>]+)))?"
-)
-_FUSED_H_END = _re.compile(r"</([A-Za-z][A-Za-z0-9-]*)[ \t\n\f\r]*>")
-
-
-def _format_html_fused(s: str, indent: str) -> str:
-    """Fused tokenizer+formatter: one scan, direct output writes — no
-    token objects, no generator machinery. Byte identity with the
-    general path is pinned by test_fuzz differential fuzzing; every
-    construct here mirrors HtmlTokenizer + _format_html_general branch
-    for branch (raw swallow via the SHARED scan_raw_end/scan_script,
-    comments via the shared read_comment)."""
-    out: list[str] = []
-    write = out.append
-    level = 0
-    has_content = False
-    tag_just_opened = False
-    space_content = ""
-    force_new_line = False
-    newline = "\n" if indent != "" else ""
-    pos = 0
-    n = len(s)
-    tag_m = _FUSED_H_TAG.match
-    end_m = _FUSED_H_END.match
-
-    def emit_text(chars: str) -> None:
-        # the HText formatter branch; ``chars`` already newline-converted
-        # and entity-decoded per token kind
-        nonlocal has_content, space_content
-        c0 = chars[0]
-        if (
-            c0 not in " \t\n\v\f"
-            and c0 <= "\x7f"
-            and chars[-1] != " "
-        ):
-            # normalize_spaces is a no-op (not whitespace-only, no
-            # '^ *\n +' head, no '\n +$' tail, no trailing spaces)
-            sn = chars
-        else:
-            sn = normalize_spaces(chars, indent, level)
-        space_content = ""
-        if sn == "":
-            if chars != "" and "\n" not in chars and tag_just_opened:
-                space_content = chars
-            has_content = False
-            return
-        has_content = True
-        write(escape_text(sn))
-
-    while pos < n:
-        # text span up to the next MARKUP-starting '<' (bare '<' stays
-        # inside one text token — the tokenizer's reconsume rule)
-        lt = pos
-        while True:
-            lt = s.find("<", lt)
-            if lt == -1 or lt + 1 >= n:
-                lt = -1
-                break
-            c = s[lt + 1]
-            if (c.isascii() and c.isalpha()) or c in "/!?":
-                break
-            lt += 1
-        if lt == -1:
-            span = s[pos:n]
-            pos = n
-        else:
-            span = s[pos:lt]
-            pos = lt
-        if span:
-            chars = _convert_newlines(span)
-            if "&" in chars:
-                chars = unescape(chars)
-            emit_text(chars)
-        if pos >= n:
-            break
-        c = s[pos + 1]
-        if c.isascii() and c.isalpha():
-            m = tag_m(s, pos)
-            if m is None:
-                raise _HFallback
-            pos = m.end()
-            name = m.group(1).lower()
-            attrs_raw = m.group(2)
-            # ---- HStartTag formatter branch ----
-            if level > 0:
-                write(newline + indent * level)
-            # x/net/html rule: self-closing iff the RAW tag ends "/>" —
-            # an unquoted value ending in '/' (href=/path/>) makes the
-            # tag self-closing with the '/' kept IN the value; checking
-            # the raw end (not the regex's trailing (/?) group, which an
-            # attr-consumed '/' leaves empty) mirrors that exactly
-            self_closing = s[pos - 2] == "/" or name in VOID_TAGS
-            if attrs_raw:
-                parts = [name]
-                for am in _FUSED_H_ATTR.finditer(attrs_raw):
-                    v = am.group(2)
-                    if v is None:
-                        v = am.group(3)
-                    if v is None:
-                        v = am.group(4)
-                    if v is None:
-                        v = ""
-                    elif "&" in v or "\r" in v:
-                        v = unescape(_convert_newlines(v), in_attr=True)
-                    parts.append(am.group(1).lower() + '="' + escape_text(v) + '"')
-                write("<" + " ".join(parts))
-            else:
-                write("<" + name)
-            space_content = ""
-            tag_just_opened = False
-            if self_closing:
-                write("/>")
-            else:
-                level += 1
-                write(">")
-                force_new_line = False
-                tag_just_opened = True
-            # raw/RCDATA swallow — set regardless of self-closing
-            # (x/net/html readStartTag): <script/> still swallows
-            if name in RAW_TEXT_TAGS:
-                if name == "plaintext":
-                    content = s[pos:n]
-                    pos = n
-                else:
-                    if name == "script":
-                        end = scan_script(s, n, pos)
-                    else:
-                        end = scan_raw_end(s, n, pos, "</" + name)
-                    content = s[pos:end]
-                    pos = end
-                if content:
-                    chars = _convert_newlines(content)
-                    if "\x00" in chars:
-                        chars = chars.replace("\x00", "�")
-                    if name in ("textarea", "title"):  # RCDATA
-                        if "&" in chars:
-                            chars = unescape(chars)
-                    emit_text(chars)
-        elif c == "/":
-            m = end_m(s, pos)
-            if m is not None:
-                pos = m.end()
-                name = m.group(1).lower()
-                # ---- HEndTag formatter branch ----
-                if level > 0:
-                    level -= 1
-                if force_new_line:
-                    write(newline + indent * level)
-                elif space_content != "":
-                    write(space_content)
-                write("</" + name + ">")
-                has_content = False
-                force_new_line = True
-                tag_just_opened = False
-                space_content = ""
-                continue
-            if pos + 2 >= n:
-                raise _HFallback  # '</' at EOF: general path
-            c2 = s[pos + 2]
-            if c2.isascii() and c2.isalpha():
-                raise _HFallback  # end tag with attrs/EOF-in-tag
-            if c2 == ">":
-                pos += 3  # '</>' produces no token
-                continue
-            # bogus comment from '</' + non-letter
-            pos = _emit_bogus(s, n, pos, write, newline, indent, level, has_content)
-            space_content = ""
-            tag_just_opened = False
-        elif c == "!":
-            if s.startswith("<!--", pos):
-                raw, _data, pos = read_comment(s, n, pos)
-                # ---- HComment formatter branch ----
-                space_content = ""
-                tag_just_opened = False
-                for comment_line in raw.split("\n"):
-                    if not has_content and level > 0:
-                        write(newline + indent * level)
-                    write(comment_line)
-                if level == 0:
-                    write(newline)
-            elif s[pos + 2 : pos + 9].lower() == "doctype":
-                i = pos + 9
-                while i < n and s[i] in " \t\n\f\r":
-                    i += 1
-                gt = s.find(">", i)
-                if gt == -1:
-                    text = s[i:n]
-                    pos = n
-                else:
-                    text = s[i:gt]
-                    pos = gt + 1
-                write("<!doctype " + _convert_newlines(text) + ">" + newline)
-            else:
-                pos = _emit_bogus(
-                    s, n, pos, write, newline, indent, level, has_content
-                )
-                space_content = ""
-                tag_just_opened = False
-        else:  # '?'
-            pos = _emit_bogus(s, n, pos, write, newline, indent, level, has_content)
-            space_content = ""
-            tag_just_opened = False
-
-    write("\n")
-    return "".join(out)
-
-
-def _emit_bogus(s, n, pos, write, newline, indent, level, has_content) -> int:
-    """Bogus comment: the formatter prints only the RAW span (delimiters
-    included, HComment line rule) — the decoded data is never used, so
-    the '<?'/'<!'/'</' data offsets don't matter here."""
-    gt = s.find(">", pos)
-    if gt == -1:
-        raw = s[pos:n]
-        end = n
-    else:
-        raw = s[pos : gt + 1]
-        end = gt + 1
-    for comment_line in raw.split("\n"):
-        if not has_content and level > 0:
-            write(newline + indent * level)
-        write(comment_line)
-    if level == 0:
-        write(newline)
-    return end
-
-
-def _format_html_general(text: str, indent: str = "  ") -> str:
+        data = data.decode("utf-8", errors="surrogateescape")
     out: list[str] = []
     write = out.append
 
@@ -296,7 +32,7 @@ def _format_html_general(text: str, indent: str = "  ") -> str:
     force_new_line = False
     newline = "\n" if indent != "" else ""
 
-    for token in HtmlTokenizer(text).tokens():
+    for token in HtmlTokenizer(data).tokens():
         if isinstance(token, HText):
             chars = token.text
             s = normalize_spaces(chars, indent, level)

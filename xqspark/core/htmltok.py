@@ -87,8 +87,7 @@ def scan_script(s: str, n: int, pos: int) -> int:
     readScript): inside <!-- ... a nested <script> enters the
     double-escaped state where </script> does NOT terminate the
     element; --> leaves it. Returns the index where the real
-    </script close tag begins (or n). Shared by the tokenizer and the
-    fused tree fast path so both see identical script spans."""
+    </script close tag begins (or n)."""
 
     def close_matches(idx: int) -> bool:
         after = idx + 8  # len("</script")
@@ -147,8 +146,7 @@ def scan_raw_end(s: str, n: int, pos: int, needle: str) -> int:
     a boundary char (whitespace, '/' or '>') begins, or n. The
     x/net/html readRawEndTag rule: an EOF-abutting '</tag' is NOT a
     close tag (stays in the text). Case-insensitive without lowering the
-    buffer. Shared by the tokenizer's raw/RCDATA swallow and the fused
-    formatter fast path so both see identical raw spans."""
+    buffer."""
     ln = len(needle)
     i = pos
     while True:
@@ -166,9 +164,7 @@ def read_comment(s: str, n: int, start: int):
     """(raw, data, end_pos) for a comment whose '<!--' begins at
     ``start``: abrupt closes (<!-->, <!--->), ---> extra-dash swallow,
     --!> terminators, and EOF truncation of a trailing partial
-    terminator (x/net/html calculateAbruptCommentDataEnd). Shared by
-    the tokenizer and the fused tree fast path so comment spans and
-    data are identical by construction."""
+    terminator (x/net/html calculateAbruptCommentDataEnd)."""
     # abrupt-closing comments: <!--> and <!---> are empty comments
     if s.startswith(">", start + 4):
         return s[start : start + 5], "", start + 5
@@ -329,7 +325,7 @@ class HtmlTokenizer:
             text = _convert_newlines(text).replace("\x00", "�")
             return HText(text, raw=True)
         if tag == "script":
-            end = close_start = self._scan_script()
+            end = close_start = scan_script(s, n, self.pos)
         else:
             # EOF right after '</tag' is NOT a close tag (x/net/html
             # readRawEndTag returns false at EOF: the text keeps it)
@@ -347,9 +343,6 @@ class HtmlTokenizer:
         if not is_raw:
             text = unescape(text)
         return HText(text, raw=is_raw)
-
-    def _scan_script(self) -> int:
-        return scan_script(self.s, self.n, self.pos)
 
     def _read_start_tag(self):
         s, n = self.s, self.n
@@ -476,14 +469,11 @@ class HtmlTokenizer:
         s, n = self.s, self.n
         start = self.pos
         if s.startswith("<!--", start):
-            return self._read_comment(start)
+            raw, data, self.pos = read_comment(s, n, start)
+            return HComment(raw, data)
         if s[start + 2 : start + 9].lower() == "doctype":
             return self._read_doctype(start)
         return self._read_bogus_comment(start)
-
-    def _read_comment(self, start: int):
-        raw, data, self.pos = read_comment(self.s, self.n, start)
-        return HComment(raw, data)
 
     def _read_doctype(self, start: int):
         s, n = self.s, self.n

@@ -22,10 +22,8 @@ Reuses DomNode so the CSS engine and serializers share one node type.
 
 from __future__ import annotations
 
-from .dom import COMMENT, DOCUMENT, ELEMENT, TEXT, DomAttr, DomNode, _new_node
-from .entities import unescape
+from .dom import COMMENT, DOCUMENT, ELEMENT, TEXT, DomAttr, DomNode
 from .htmltok import (
-    _H_FAST_END,
     RAW_TEXT_TAGS,
     HComment,
     HDoctype,
@@ -33,8 +31,6 @@ from .htmltok import (
     HStartTag,
     HText,
     HtmlTokenizer,
-    read_comment,
-    scan_script,
 )
 from .textutil import VOID_TAGS
 
@@ -61,16 +57,6 @@ _SELECT_TABLE_BREAKOUT = frozenset(
 
 _HEADINGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
 
-# start tag -> open tags it auto-closes (nearest first, stopping at scopes)
-_SIBLING_CLOSERS = {
-    # table-structure siblings are closed by _clear_to_table_context in
-    # the _TABLE_STRUCTURE start-tag branch, never here
-    # option/optgroup pops are mode-dependent and handled in _start_tag
-    "li": ("li",),
-    "dd": ("dd", "dt"),
-    "dt": ("dd", "dt"),
-}
-
 # WHATWG "special" category (the auto-close scan for li/dd/dt stops at any
 # special element except address/div/p, per the "in body" insertion mode)
 _SPECIAL = frozenset(
@@ -85,6 +71,18 @@ _SPECIAL = frozenset(
 )
 
 _LIST_SCOPE_STOP = _SPECIAL - {"address", "div", "p"}
+
+# start tag -> (open tags it auto-closes, scan stops): the nearest closer
+# is popped to unless a list-scope stop comes first.
+# table-structure siblings are closed by _clear_to_table_context in the
+# _TABLE_STRUCTURE start-tag branch, never here; option/optgroup pops
+# are mode-dependent and handled in _start_tag
+_DD_DT = frozenset(("dd", "dt"))
+_SIBLING_CLOSERS = {
+    "li": (frozenset(("li",)), _LIST_SCOPE_STOP - {"li"}),
+    "dd": (_DD_DT, _LIST_SCOPE_STOP - _DD_DT),
+    "dt": (_DD_DT, _LIST_SCOPE_STOP - _DD_DT),
+}
 
 # base/basefont/bgsound/link/meta are inserted and immediately popped in
 # the head insertion mode (x/net/html inHeadIM); the non-VOID_TAGS two
@@ -235,9 +233,9 @@ class HtmlTreeBuilder:
                     break
                 if tag in _BUTTON_SCOPE_STOPS:
                     break
-        closers = _SIBLING_CLOSERS.get(name)
-        if closers:  # li/dd/dt
-            stops = _LIST_SCOPE_STOP - set(closers)
+        sibling = _SIBLING_CLOSERS.get(name)
+        if sibling:  # li/dd/dt
+            closers, stops = sibling
             for i in range(len(self.stack) - 1, -1, -1):
                 tag = self.stack[i].data
                 if tag in closers:
@@ -853,1190 +851,12 @@ class HtmlTreeBuilder:
 
 
 def parse_html(data: bytes | str) -> DomNode:
-    """Build the WHATWG tree for a document.
-
-    A fused tokenizer+tree fast path handles the common well-nested
-    subset (double/single-quoted or bare attributes, legal table
-    structure, formatting elements closed in order, no adoption-agency,
-    reconstruction, or foster-parenting triggers) in one regex-driven
-    pass with no token objects; anything outside that subset raises
-    _TreeFallback and the document re-parses on the general Go-faithful
-    token + WHATWG builder path, so trees are identical either way
-    (differential-fuzzed in test_fuzz.py)."""
+    """Build the WHATWG tree for a document: the x/net/html-faithful
+    tokenizer feeding HtmlTreeBuilder."""
     if isinstance(data, bytes):
         data = data.decode("utf-8", errors="surrogateescape")
-    try:
-        return _parse_html_fast(data)
-    except _TreeFallback:
-        builder = HtmlTreeBuilder()
-        return builder.feed(HtmlTokenizer(data).tokens())
+    return HtmlTreeBuilder().feed(HtmlTokenizer(data).tokens())
 
-
-class _TreeFallback(Exception):
-    """Input uses a construct outside the fused tree fast path."""
-
-
-# --- fused tokenizer + tree builder fast path -------------------------------
-#
-# Invariants that make the shortcut tree equal the WHATWG tree (r4):
-# * the active formatting list is mirrored exactly (markers included,
-#   Noah's Ark at push) and the FULL adoption agency runs here —
-#   furthest-block loop, bookmark arithmetic, <a> re-adoption — 1:1
-#   with HtmlTreeBuilder; pops that strand a live afe entry no longer
-#   bail: the stranded entry is re-opened as a clone by reconstruct()
-#   at the next insertion point, at exactly the call sites the general
-#   builder reconstructs (text after the pre-newline rule, formatting
-#   starts, marker elements, </br>, and generic starts that are button
-#   / not-special / _RECONSTRUCT_SPECIALS);
-# * TABLES are supported in their legal shapes — clear-to-context,
-#   implied tbody/tr/colgroup, cell markers clearing the formatting
-#   scope — AND foster-parenting relocates text and illegal elements
-#   before the last open <table>, mirroring _foster_insert; the only
-#   table bail left is a fosterable insert with no table parent;
-# * selects, forms, buttons, applet/marquee/object, nobr, plaintext,
-#   frameset are all handled with general-path parity (in-select
-#   ignores never create elements, so the formatting list stays
-#   untouched);
-# * remaining bails: no fosterable table parent, in-select RCDATA over
-#   stranded formatting entries, and malformed tags the single-regex
-#   tokenizer pass can't classify.
-
-_F_STRUCT = 1      # html/head/body
-_F_BAIL = 2
-_F_HEAD_ONLY = 4
-_F_VOID = 8        # VOID_TAGS + basefont/bgsound: inserted, never pushed
-_F_CLOSES_P = 16
-_F_FMT = 32
-_F_SIB = 64        # li/dd/dt sibling close
-_F_RAW = 128       # raw-text/RCDATA content swallow
-_F_HEADING = 256
-_F_TBL = 512       # table STRUCTURE start tags (td/tr/tbody/... not table)
-_F_TBLEND = 1024   # table-scoped end tags (incl. table itself)
-_F_MARKERELT = 2048  # applet/marquee/object: insert + formatting marker
-
-# r4: empty — the general builder has no special frameset/frame rules
-# (both are plain _SPECIAL elements there), so nothing needs to bail by
-# tag name anymore; kept for the day a tag genuinely needs it
-_FAST_BAIL_TAGS = frozenset()
-
-
-def _build_fast_flags() -> dict:
-    flags: dict[str, int] = {}
-
-    def add(tags, f):
-        for t in tags:
-            flags[t] = flags.get(t, 0) | f
-
-    add(("html", "head", "body"), _F_STRUCT)
-    add(_FAST_BAIL_TAGS, _F_BAIL)
-    add(_HEAD_ONLY, _F_HEAD_ONLY)
-    add(VOID_TAGS, _F_VOID)
-    add(_IMMEDIATE_POP, _F_VOID)
-    add(_CLOSES_P, _F_CLOSES_P)  # includes plaintext (WHATWG closes-p set)
-    add(_FORMATTING, _F_FMT)
-    add(("li", "dd", "dt"), _F_SIB)
-    add(RAW_TEXT_TAGS - {"plaintext"}, _F_RAW)
-    add(_HEADINGS, _F_HEADING)
-    add(_TABLE_STRUCTURE, _F_TBL)
-    add(_TABLE_END, _F_TBLEND)
-    add(("applet", "marquee", "object"), _F_MARKERELT)
-    return flags
-
-
-_FAST_FLAGS = _build_fast_flags()
-_LI_STOPS = _LIST_SCOPE_STOP - {"li"}
-_DD_STOPS = _LIST_SCOPE_STOP - {"dd", "dt"}
-
-import re as _re2
-
-# start tags: double-quoted, single-quoted, or valueless attributes with
-# no entities/CR/< in values (anything else re-parses on the general path)
-_HT_TAG = _re2.compile(
-    r"<([A-Za-z][A-Za-z0-9-]*)"
-    r"((?:[ \t\n\f]+[A-Za-z0-9_:.\-]+"
-    r"(?:=\"[^\"&<\r]*\"|='[^'&<\r]*')?)*)"
-    r"[ \t\n\f]*(/?)>"
-)
-_HT_ATTR = _re2.compile(r"([A-Za-z0-9_:.\-]+)(?:=\"([^\"]*)\"|='([^']*)')?")
-_HT_WS = " \t\n\f\r"
-
-
-def _find_ci(s: str, needle: str, start: int) -> int:
-    n = len(s)
-    first = needle[0]
-    ln = len(needle)
-    i = start
-    while True:
-        i = s.find(first, i)
-        if i == -1 or i + ln > n:
-            return -1
-        if s[i : i + ln].lower() == needle:
-            return i
-        i += 1
-
-
-def _parse_html_fast(s: str) -> DomNode:
-    doc = DomNode(DOCUMENT)
-    html: DomNode | None = None
-    head: DomNode | None = None
-    body: DomNode | None = None
-    stack: list[DomNode] = []  # mutated in place (closures cache it)
-    afe: list = []  # active formatting list: DomNode | _MARKER, mirrored
-    form_node: DomNode | None = None  # WHATWG form element pointer
-    quirks = True  # doctype-less = quirks (gates <table>-closes-p)
-    order = 0  # creation order == document order (tail appends only) ...
-    dirty = False  # ... except head re-entry; then re-walk at the end
-    pos = 0
-    n = len(s)
-    tag_match = _HT_TAG.match
-    end_match = _H_FAST_END.match
-    attr_findall = _HT_ATTR.findall
-    flags_get = _FAST_FLAGS.get
-    new_node = _new_node
-
-    def append_text(parent: DomNode, t: str) -> None:
-        nonlocal order
-        ch = parent.children
-        if ch and ch[-1].type == TEXT:
-            ch[-1].data += t
-        else:
-            node = new_node(TEXT, t, order)
-            order += 1
-            node.parent = parent
-            ch.append(node)
-
-    def foster_before_table(node) -> bool:
-        """general _foster_insert: place node immediately before the last
-        open <table>; False (caller bails) when no fosterable table."""
-        nonlocal dirty
-        tbl = None
-        for nd in reversed(stack):
-            if nd.data == "table":
-                tbl = nd
-                break
-        if tbl is None or tbl.parent is None:
-            return False
-        fch = tbl.parent.children
-        node.parent = tbl.parent
-        fch.insert(fch.index(tbl), node)
-        dirty = True
-        return True
-
-    def on_stack(e) -> bool:
-        for nd in stack:
-            if nd is e:
-                return True
-        return False
-
-    def strands_pending() -> bool:
-        # would reconstruct() actually act right now?
-        return bool(afe) and afe[-1] is not _MARKER and not on_stack(afe[-1])
-
-    def stack_index(e) -> int:
-        for i2 in range(len(stack) - 1, -1, -1):
-            if stack[i2] is e:
-                return i2
-        return -1
-
-    def afe_index(e) -> int:
-        for i2 in range(len(afe) - 1, -1, -1):
-            if afe[i2] is e:
-                return i2
-        return -1
-
-    def clone_node(src_el):
-        nonlocal order
-        c = new_node(ELEMENT, src_el.data, order)
-        order += 1
-        c.attrs = [
-            DomAttr(a.space, a.local, a.value, a.prefix) for a in src_el.attrs
-        ]
-        return c
-
-    def afe_push(node2) -> None:
-        # general _afe_push mirror — Noah's Ark clause: at most 3 entries
-        # with the same name+attrs since the last marker
-        count = 0
-        sig = {(a.local, a.value) for a in node2.attrs}
-        for i2 in range(len(afe) - 1, -1, -1):
-            e = afe[i2]
-            if e is _MARKER:
-                break
-            if (
-                e.data == node2.data
-                and len(e.attrs) == len(node2.attrs)
-                and {(a.local, a.value) for a in e.attrs} == sig
-            ):
-                count += 1
-                if count == 3:
-                    del afe[i2]
-                    break
-        afe.append(node2)
-
-    def any_other_end_tag(nm) -> None:
-        for i2 in range(len(stack) - 1, -1, -1):
-            node2 = stack[i2]
-            if node2 is html or node2 is body or node2 is head:
-                break
-            if node2.data == nm:
-                del stack[i2:]
-                return
-            if node2.data in _SPECIAL:
-                return  # parse error: ignore
-
-    def foster_insert_full(node2) -> None:
-        # general _foster_insert with ALL its fallbacks (used from the
-        # adoption agency, which sets dirty anyway)
-        nonlocal dirty
-        dirty = True
-        ti = -1
-        for i2 in range(len(stack) - 1, -1, -1):
-            if stack[i2].data == "table":
-                ti = i2
-                break
-        if ti == -1:
-            (body if body is not None else stack[-1]).append(node2)
-            return
-        tbl = stack[ti]
-        parent = tbl.parent
-        if parent is not None:
-            _detach(node2)
-            node2.parent = parent
-            for i2, c2 in enumerate(parent.children):
-                if c2 is tbl:
-                    parent.children.insert(i2, node2)
-                    return
-        stack[ti - 1].append(node2)
-
-    def adoption_agency(nm) -> None:
-        """General _adoption_agency mirror (WHATWG 13.2.6.4.7), running
-        on the fast stack/afe; any reparenting sets dirty so the final
-        re-walk restores document order exactly like the general
-        builder's post-walk numbering."""
-        nonlocal dirty
-        if stack and stack[-1].data == nm and afe_index(stack[-1]) == -1:
-            stack.pop()  # current node is the subject but isn't active
-            return
-        for _i in range(8):  # outer loop
-            fe = None
-            for e in reversed(afe):
-                if e is _MARKER:
-                    break
-                if e.data == nm:
-                    fe = e
-                    break
-            if fe is None:
-                any_other_end_tag(nm)
-                return
-            fe_idx = stack_index(fe)
-            if fe_idx == -1:
-                afe.remove(fe)  # parse error: active but not open
-                return
-            in_scope = False
-            for nd in reversed(stack):
-                if nd is fe:
-                    in_scope = True
-                    break
-                if nd.data in _DEFAULT_SCOPE_STOPS:
-                    break
-            if not in_scope:
-                return  # parse error: ignore the token
-            fb = None
-            for nd in stack[fe_idx + 1 :]:
-                if nd.data in _SPECIAL:
-                    fb = nd
-                    break
-            if fb is None:
-                del stack[fe_idx:]
-                afe.remove(fe)
-                return
-            dirty = True  # the reparenting below reorders the document
-            common = stack[fe_idx - 1]
-            bookmark = afe_index(fe)
-            last_node = fb
-            node2 = fb
-            x = stack_index(node2)
-            j = 0
-            while True:  # inner loop
-                j += 1
-                x -= 1
-                node2 = stack[x]
-                if node2 is fe:
-                    break
-                ai = afe_index(node2)
-                if j > 3 and ai != -1:
-                    del afe[ai]
-                    if ai < bookmark:
-                        bookmark -= 1
-                    ai = -1
-                if ai == -1:
-                    del stack[x]
-                    continue
-                c2 = clone_node(node2)
-                afe[ai] = c2
-                stack[x] = c2
-                node2 = c2
-                if last_node is fb:
-                    bookmark = afe_index(node2) + 1
-                _detach(last_node)
-                node2.append(last_node)
-                last_node = node2
-            _detach(last_node)
-            if common.data in _TABLE_CTX:
-                foster_insert_full(last_node)
-            else:
-                common.append(last_node)
-            c2 = clone_node(fe)
-            for ch2 in list(fb.children):
-                _detach(ch2)
-                c2.append(ch2)
-            fb.append(c2)
-            old = afe_index(fe)
-            if old != -1:
-                if old < bookmark:
-                    bookmark -= 1
-                del afe[old]
-            afe.insert(bookmark, c2)
-            fe_pos = stack_index(fe)
-            if fe_pos != -1:
-                del stack[fe_pos]
-            stack.insert(stack_index(fb) + 1, c2)
-
-    def reconstruct() -> None:
-        """General _reconstruct_afe mirror: re-open stranded active
-        formatting entries by cloning at the insertion point (fostering
-        when that point is table context). Under a clean afe this is the
-        same early-return no-op the r3 invariant assumed."""
-        nonlocal order
-        if not afe:
-            return
-        last = afe[-1]
-        # O(1) hot case first: the newest entry is the open element the
-        # well-nested flow just pushed
-        if last is _MARKER or (stack and last is stack[-1]) or on_stack(last):
-            return
-        i = len(afe) - 1
-        while i > 0:
-            e = afe[i - 1]
-            if e is _MARKER or on_stack(e):
-                break
-            i -= 1
-        for j in range(i, len(afe)):
-            src_el = afe[j]
-            if src_el is _MARKER:
-                continue
-            clone = new_node(ELEMENT, src_el.data, order)
-            order += 1
-            clone.attrs = [
-                DomAttr(a.space, a.local, a.value, a.prefix)
-                for a in src_el.attrs
-            ]
-            cur = stack[-1]
-            if cur.data in _TABLE_CTX:
-                if not foster_before_table(clone):
-                    raise _TreeFallback
-            else:
-                clone.parent = cur
-                cur.children.append(clone)
-            stack.append(clone)
-            afe[j] = clone
-
-    def ensure_html() -> None:
-        nonlocal html, order
-        if html is None:
-            html = DomNode(ELEMENT, "html")
-            html.order = order
-            order += 1
-            doc.append(html)
-            stack[:] = (html,)
-
-    def open_body() -> None:
-        nonlocal head, body, order
-        ensure_html()
-        if head is None:
-            head = DomNode(ELEMENT, "head")
-            head.order = order
-            order += 1
-            html.append(head)
-        if body is None:
-            # implied </head>: pop everything above html. A formatting
-            # element cannot be open here (non-head-only start tags open
-            # the body first), so no reconstruction concern.
-            body = DomNode(ELEMENT, "body")
-            body.order = order
-            order += 1
-            html.append(body)
-            stack[:] = (html, body)
-
-    # r4: implied pops may strand active formatting entries — the
-    # reconstruct() closure re-opens them at the next insertion point
-    # with general-path parity, so no pop needs to bail anymore.
-
-    def in_select() -> bool:
-        # general-path _select_on_stack: a select is open with only
-        # option/optgroup above it
-        for nd in reversed(stack):
-            d = nd.data
-            if d == "select":
-                return True
-            if d != "option" and d != "optgroup":
-                return False
-        return False
-
-    def pop_to_select() -> None:
-        # popped elements are only option/optgroup/select — never
-        # formatting or marker-scoped, so a plain del is faithful
-        for i in range(len(stack) - 1, -1, -1):
-            if stack[i].data == "select":
-                del stack[i:]
-                return
-
-    def pop_slice(i: int) -> None:
-        """Pop stack[i:] with the general builder's marker semantics:
-        each popped marker-scoped element (td/th/caption) clears the
-        active formatting list to its marker. A popped formatting
-        element that survives in the list is a STRANDED entry —
-        reconstruct() re-opens it at the next insertion point (r4)."""
-        popped = stack[i:]
-        del stack[i:]
-        for p in popped:
-            if p.data in _MARKER_TAGS:
-                while afe:
-                    if afe.pop() is _MARKER:
-                        break
-
-    while pos < n:
-        # -- text up to the next markup-starting '<' (same scan rule as
-        # HtmlTokenizer: '<' + letter, '/', '!' or '?') --
-        start = pos
-        lt = pos
-        while True:
-            lt = s.find("<", lt)
-            if lt == -1 or lt + 1 >= n:
-                lt = -1
-                break
-            c = s[lt + 1]
-            if (c.isascii() and c.isalpha()) or c in "/!?":
-                break
-            lt += 1
-        if lt != start:
-            t = s[start:n] if lt == -1 else s[start:lt]
-            pos = n if lt == -1 else lt
-            if "\r" in t:
-                t = t.replace("\r\n", "\n").replace("\r", "\n")
-            if "&" in t:
-                t = unescape(t)
-            if "\x00" in t:
-                # general _text: NULs in non-raw text (literal or via
-                # &#0;) are stripped before any routing; empty -> no token
-                t = t.replace("\x00", "")
-                if not t:
-                    continue
-            if body is None:
-                cur = stack[-1] if stack else doc
-                if cur is not html and cur is not doc and cur is not head:
-                    append_text(cur, t)  # inside an open head element
-                    continue
-                ws = len(t) - len(t.lstrip(" \t\n\f\r"))
-                if ws:
-                    if cur is head:
-                        append_text(head, t[:ws])
-                    elif cur is html and head is not None:
-                        append_text(html, t[:ws])
-                    t = t[ws:]
-                if not t:
-                    continue
-                open_body()
-            cur = stack[-1]
-            # pre-newline drop sees the PRE-reconstruction current node
-            # (general _text order: newline rule, then reconstruct)
-            if (
-                not cur.children
-                and t[0] == "\n"
-                and cur.data in ("pre", "listing", "textarea")
-            ):
-                t = t[1:]
-                if not t:
-                    continue
-            reconstruct()
-            cur = stack[-1]
-            if cur.data in _TABLE_CTX and t.strip(" \t\n\f\r") != "":
-                # foster-parenting fast path (r4): PURE TEXT sitting
-                # directly in table context — the single most common crawl
-                # malformation — relocates immediately before the last open
-                # <table>, merging with a text node already there (general
-                # _foster_text semantics). The final dirty re-walk restores
-                # document order (the general builder numbers by a final
-                # walk too).
-                tbl = None
-                for nd in reversed(stack):
-                    if nd.data == "table":
-                        tbl = nd
-                        break
-                if tbl is None or tbl.parent is None:
-                    raise _TreeFallback
-                fch = tbl.parent.children
-                fidx = fch.index(tbl)
-                if fidx > 0 and fch[fidx - 1].type == TEXT:
-                    fch[fidx - 1].data += t
-                else:
-                    node = new_node(TEXT, t, order)
-                    order += 1
-                    node.parent = tbl.parent
-                    fch.insert(fidx, node)
-                    dirty = True
-                continue
-            ch = cur.children
-            if ch and ch[-1].type == TEXT:
-                ch[-1].data += t
-                continue
-            node = new_node(TEXT, t, order)
-            order += 1
-            node.parent = cur
-            ch.append(node)
-            continue
-        if lt == -1:
-            break
-        c = s[pos + 1]
-        # -- start tag --
-        if c.isascii() and c.isalpha():
-            m = tag_match(s, pos)
-            if m is None:
-                raise _TreeFallback
-            pos = m.end()
-            name, attrs_raw, _selfclose = m.group(1, 2, 3)
-            name = name.lower()
-            if name == "image":
-                name = "img"  # WHATWG "in body": <image> is <img>
-            flags = flags_get(name, 0)
-            if flags & (_F_BAIL | _F_STRUCT):
-                if flags & _F_BAIL:
-                    raise _TreeFallback
-                # html/head/body: create-or-merge
-                if name == "html":
-                    ensure_html()
-                    node = html
-                elif name == "head":
-                    ensure_html()
-                    if head is None:
-                        head = DomNode(ELEMENT, "head")
-                        head.order = order
-                        order += 1
-                        html.append(head)
-                        if body is None:
-                            stack.append(head)
-                    elif body is None and not (
-                        len(stack) > 1 and stack[1] is head
-                    ):
-                        stack.append(head)
-                        dirty = True
-                    node = head
-                else:
-                    open_body()
-                    node = body
-                if attrs_raw:
-                    existing = {a.local for a in node.attrs}
-                    for k, v2, v3 in attr_findall(attrs_raw):
-                        k = k.lower()
-                        if k not in existing:
-                            node.attrs.append(
-                                DomAttr("", k, v2 if v2 else v3)
-                            )
-                            existing.add(k)
-                continue
-            element = new_node(ELEMENT, name, 0)  # order set at insertion
-            if attrs_raw:
-                attrs = element.attrs
-                for k, v2, v3 in attr_findall(attrs_raw):
-                    attrs.append(DomAttr("", k.lower(), v2 if v2 else v3))
-            push = not flags & _F_VOID
-            if flags & _F_HEAD_ONLY and body is None:
-                ensure_html()
-                if head is None:
-                    head = DomNode(ELEMENT, "head")
-                    head.order = order
-                    order += 1
-                    html.append(head)
-                    stack.append(head)
-                elif not (len(stack) > 1 and stack[1] is head):
-                    stack.append(head)
-                    dirty = True
-                cur = stack[-1]
-                parent = cur if cur is not html and cur is not doc else head
-                element.order = order
-                order += 1
-                parent.append(element)
-                if push:
-                    stack.append(element)
-            else:
-                if body is None:
-                    open_body()
-                # select mode implies top-of-stack is select/option/optgroup
-                # (only those get pushed in it) — cheap guard, rare scan
-                top = stack[-1].data
-                if top == "select" or (
-                    (top == "option" or top == "optgroup") and in_select()
-                ):
-                    # "in select" insertion mode (general-path parity):
-                    # only option/optgroup insert; a nested <select> acts
-                    # as </select>; select-incompatible form controls and
-                    # (inside a table) table structure break out; script
-                    # passes through to in-head rules; everything else is
-                    # IGNORED (the element is never created, so the
-                    # formatting list is untouched)
-                    if name == "option":
-                        if stack[-1].data == "option":
-                            stack.pop()
-                        element.order = order
-                        order += 1
-                        cur = stack[-1]
-                        element.parent = cur
-                        cur.children.append(element)
-                        stack.append(element)
-                        continue
-                    if name == "optgroup":
-                        if stack[-1].data == "option":
-                            stack.pop()
-                        if stack[-1].data == "optgroup":
-                            stack.pop()
-                        element.order = order
-                        order += 1
-                        cur = stack[-1]
-                        element.parent = cur
-                        cur.children.append(element)
-                        stack.append(element)
-                        continue
-                    if name == "select":
-                        pop_to_select()  # parse error: acts as </select>
-                        continue
-                    if name in ("input", "keygen", "textarea") or (
-                        name in _SELECT_TABLE_BREAKOUT
-                        and any(nd.data == "table" for nd in stack)
-                    ):
-                        pop_to_select()  # act as </select>, fall through
-                    elif name == "script" or name == "template":
-                        pass  # in-head rules: allowed
-                    else:
-                        # ignored — but the TOKENIZER still enters raw
-                        # mode on raw-text tags, so their content arrives
-                        # as text appended to the select (general parity);
-                        # the close tag is consumed and ignored too
-                        if flags & _F_RAW:
-                            needle = "</" + name
-                            ln = len(needle)
-                            close = _find_ci(s, needle, pos)
-                            while close != -1:
-                                after = close + ln
-                                if after < n and (
-                                    s[after] in _HT_WS or s[after] in "/>"
-                                ):
-                                    break
-                                close = _find_ci(s, needle, close + 1)
-                            content = s[pos:n] if close == -1 else s[pos:close]
-                            pos = n if close == -1 else close
-                            if content:
-                                if "\r" in content:
-                                    content = content.replace(
-                                        "\r\n", "\n"
-                                    ).replace("\r", "\n")
-                                if "\x00" in content:
-                                    content = content.replace("\x00", "�")
-                                if name in ("textarea", "title"):
-                                    # non-raw text would reconstruct
-                                    # stranded formatting into the select
-                                    if strands_pending():
-                                        raise _TreeFallback
-                                    content = unescape(content)
-                                append_text(stack[-1], content)
-                            if close != -1:
-                                m2 = end_match(s, pos)
-                                if m2 is None or m2.group(1).lower() != name:
-                                    raise _TreeFallback
-                                pos = m2.end()  # end tag ignored in select
-                        elif name == "plaintext":
-                            # ignored element, but the tokenizer still
-                            # enters PLAINTEXT: the rest of the input is
-                            # raw text into the select (general parity)
-                            content = s[pos:n]
-                            pos = n
-                            if content:
-                                if "\r" in content:
-                                    content = content.replace(
-                                        "\r\n", "\n"
-                                    ).replace("\r", "\n")
-                                if "\x00" in content:
-                                    content = content.replace("\x00", "�")
-                                append_text(stack[-1], content)
-                        continue  # ignored
-                if flags & _F_TBL:
-                    # table structure start tag: ignored without an open
-                    # table; else clear-to-context + implied wrappers
-                    # (WHATWG table insertion modes, general-path parity)
-                    for nd in stack:
-                        if nd.data == "table":
-                            break
-                    else:
-                        continue  # stray structure tag: ignored
-                    if name == "col":
-                        ctx = ("colgroup", "table")
-                    elif name == "tr":
-                        ctx = ("tbody", "tfoot", "thead", "table")
-                    elif name in ("td", "th"):
-                        ctx = ("tr", "tbody", "tfoot", "thead", "table")
-                    else:  # tbody tfoot thead caption colgroup
-                        ctx = ("table",)
-                    for i in range(len(stack) - 1, -1, -1):
-                        nd = stack[i]
-                        if nd.data in ctx or nd is body or nd is html:
-                            if i + 1 < len(stack):
-                                pop_slice(i + 1)
-                            break
-                    cur = stack[-1]
-                    implied = None
-                    if name in ("td", "th"):
-                        if cur.data == "table":
-                            implied = "tbody"
-                        elif cur.data in ("tbody", "thead", "tfoot"):
-                            implied = "tr"
-                    elif name == "tr" and cur.data == "table":
-                        implied = "tbody"
-                    elif name == "col" and cur.data == "table":
-                        implied = "colgroup"
-                    while implied is not None:
-                        w = new_node(ELEMENT, implied, order)
-                        order += 1
-                        w.parent = cur
-                        cur.children.append(w)
-                        stack.append(w)
-                        cur = w
-                        # td/th may need tbody THEN tr
-                        implied = (
-                            "tr"
-                            if name in ("td", "th") and implied == "tbody"
-                            else None
-                        )
-                    if cur.data in _TABLE_CTX and name not in _ALLOWED_IN_TABLE_CTX.get(
-                        cur.data, ()
-                    ):
-                        raise _TreeFallback  # would foster-parent
-                    element.order = order
-                    order += 1
-                    element.parent = cur
-                    cur.children.append(element)
-                    if push:
-                        stack.append(element)
-                        if name in _MARKER_TAGS:
-                            afe.append(_MARKER)
-                    continue
-                if flags & _F_MARKERELT:
-                    # applet/marquee/object: reconstruct, insert, push a
-                    # formatting MARKER (general-path order); in table
-                    # context they foster like any other element
-                    reconstruct()
-                    cur = stack[-1]
-                    element.order = order
-                    order += 1
-                    if cur.data in _TABLE_CTX and name not in _ALLOWED_IN_TABLE_CTX.get(
-                        cur.data, ()
-                    ):
-                        if not foster_before_table(element):
-                            raise _TreeFallback
-                    else:
-                        element.parent = cur
-                        cur.children.append(element)
-                    stack.append(element)
-                    afe.append(_MARKER)
-                    continue
-                if flags & _F_FMT:
-                    if name == "a":
-                        # general: an <a> still active since the last
-                        # marker is adopted out first
-                        prev_a = None
-                        for e in reversed(afe):
-                            if e is _MARKER:
-                                break
-                            if e.data == "a":
-                                prev_a = e
-                                break
-                        if prev_a is not None:
-                            adoption_agency("a")
-                            ai2 = afe_index(prev_a)
-                            if ai2 != -1:
-                                del afe[ai2]
-                            si2 = stack_index(prev_a)
-                            if si2 != -1:
-                                del stack[si2]
-                    elif name == "nobr":
-                        # general: reconstruct FIRST (a stranded nobr
-                        # comes back onto the stack), then an open nobr
-                        # in default scope takes an implied </nobr> (AAA)
-                        reconstruct()
-                        for nd in reversed(stack):
-                            if nd.data == "nobr":
-                                adoption_agency("nobr")
-                                break
-                            if nd.data in _DEFAULT_SCOPE_STOPS:
-                                break
-                else:
-                    if name == "form" and form_node is not None:
-                        continue  # nested <form> is ignored (form pointer)
-                    if name in ("option", "optgroup"):
-                        # in body (outside select) only a CURRENT option
-                        # pops; optgroups nest (general-path parity)
-                        if stack[-1].data == "option":
-                            stack.pop()
-                    if name == "button":
-                        # implied </button> when one is in default scope
-                        # (the scan's stops include every marker tag, so
-                        # the popped slice never crosses a cell)
-                        for i in range(len(stack) - 1, -1, -1):
-                            nd = stack[i]
-                            if nd.data == "button":
-                                del stack[i:]
-                                break
-                            if nd.data in _DEFAULT_SCOPE_STOPS:
-                                break
-                    if flags & _F_CLOSES_P and not (quirks and name == "table"):
-                        for i in range(len(stack) - 1, -1, -1):
-                            tag = stack[i].data
-                            if tag == "p":
-                                del stack[i:]
-                                break
-                            if tag in _BUTTON_SCOPE_STOPS:
-                                break
-                    if flags & _F_SIB:
-                        closers = ("li",) if name == "li" else ("dd", "dt")
-                        stops = _LI_STOPS if name == "li" else _DD_STOPS
-                        for i in range(len(stack) - 1, -1, -1):
-                            tag = stack[i].data
-                            if tag in closers:
-                                del stack[i:]
-                                break
-                            if tag in stops:
-                                break
-                    if (
-                        flags & _F_HEADING
-                        and stack
-                        and stack[-1].data in _HEADINGS
-                    ):
-                        stack.pop()
-                # general line 747-750: reconstruct for "any other start
-                # tag" plus button and the reconstructing voids — never
-                # for the auto-closing _SPECIAL tags (their implied pops
-                # above ran before any reconstruction, same as general)
-                if (
-                    name == "button"
-                    or name not in _SPECIAL
-                    or name in _RECONSTRUCT_SPECIALS
-                ):
-                    reconstruct()
-                cur = stack[-1]
-                element.order = order
-                order += 1
-                if cur.data in _TABLE_CTX and name not in _ALLOWED_IN_TABLE_CTX.get(
-                    cur.data, ()
-                ):
-                    # foster-parenting fast path (r4): the element — void
-                    # OR pushed (div/span/p/form/raw/formatting) —
-                    # relocates before the last open <table>, mirroring
-                    # general _insert_element -> _foster_insert exactly.
-                    # Pushed elements still join the stack (and afe when
-                    # formatting), so later content nests inside the
-                    # fostered subtree like the general path; auto-close
-                    # side effects already ran above with parity; the
-                    # dirty re-walk restores document order; an implied
-                    # pop that strands an afe entry is re-opened by
-                    # reconstruct() at the next insertion point, same as
-                    # the general builder; raw/RCDATA swallow below
-                    # targets `element` directly, so a fostered <script>
-                    # keeps its content.
-                    if not foster_before_table(element):
-                        raise _TreeFallback
-                else:
-                    element.parent = cur
-                    cur.children.append(element)
-                if push:
-                    stack.append(element)
-                    if flags & _F_FMT:
-                        afe_push(element)  # Noah's Ark eviction included
-                if name == "form":
-                    form_node = element
-            if flags & _F_RAW:
-                # swallow raw/RCDATA content to the matching close tag
-                if name == "script":
-                    close = _find_ci(s, "</script", pos)
-                    while close != -1:
-                        after = close + 8
-                        if after < n and (s[after] in _HT_WS or s[after] in "/>"):
-                            break
-                        close = _find_ci(s, "</script", close + 1)
-                    span_end = n if close == -1 else close
-                    if "<!--" in s[pos:span_end]:
-                        # escape states can move the real close (a nested
-                        # <script> inside <!-- enters double-escaped where
-                        # </script> does NOT terminate): defer to the
-                        # SHARED WHATWG scanner — the same function the
-                        # tokenizer runs, so the spans are identical by
-                        # construction. Without <!-- the naive find above
-                        # is exact and skips the char-loop.
-                        close = scan_script(s, n, pos)
-                        if close >= n:
-                            close = -1
-                else:
-                    needle = "</" + name
-                    ln = len(needle)
-                    close = _find_ci(s, needle, pos)
-                    while close != -1:
-                        after = close + ln
-                        if after < n and (s[after] in _HT_WS or s[after] in "/>"):
-                            break
-                        close = _find_ci(s, needle, close + 1)
-                content = s[pos:n] if close == -1 else s[pos:close]
-                pos = n if close == -1 else close
-                if content:
-                    if "\r" in content:
-                        content = content.replace("\r\n", "\n").replace("\r", "\n")
-                    if "\x00" in content:
-                        content = content.replace("\x00", "�")
-                    if name in ("textarea", "title"):
-                        content = unescape(content)
-                    if (
-                        name == "textarea"
-                        and not element.children
-                        and content.startswith("\n")
-                    ):
-                        content = content[1:]
-                    if content and name in ("textarea", "title"):
-                        # RCDATA text arrives NON-raw: the general _text
-                        # reconstructs before inserting — stranded
-                        # formatting clones INSIDE the element (it is the
-                        # stack top), and the text lands in the innermost
-                        # clone; the close below pops element + clones,
-                        # stranding them again for the next insertion
-                        reconstruct()
-                        append_text(stack[-1], content)
-                    elif content:
-                        append_text(element, content)
-                if close != -1:
-                    m2 = end_match(s, pos)
-                    if m2 is None or m2.group(1).lower() != name:
-                        raise _TreeFallback
-                    pos = m2.end()
-                    # any-other-end-tag: pop to the element (only our own
-                    # reconstruction clones — never special — sit above)
-                    ei = stack_index(element)
-                    if ei != -1:
-                        del stack[ei:]
-            elif name == "plaintext":
-                # PLAINTEXT tokenizer state: EVERYTHING to EOF is raw
-                # text of the element — no entities, no close tag
-                content = s[pos:n]
-                pos = n
-                if content:
-                    if "\r" in content:
-                        content = content.replace("\r\n", "\n").replace("\r", "\n")
-                    if "\x00" in content:
-                        content = content.replace("\x00", "�")
-                    append_text(element, content)
-            continue
-        # -- end tag --
-        if c == "/":
-            m = end_match(s, pos)
-            if m is None:
-                if s.startswith("</>", pos):
-                    pos += 3  # "</>" produces no token
-                    continue
-                raise _TreeFallback
-            pos = m.end()
-            name = m.group(1).lower()
-            flags = flags_get(name, 0)
-            if flags & (_F_BAIL | _F_STRUCT):
-                if flags & _F_BAIL:
-                    raise _TreeFallback
-                if name == "head":
-                    if head is not None and len(stack) > 1 and stack[1] is head:
-                        del stack[1:]
-                    continue
-                # body/html
-                if body is not None:
-                    del stack[2:]
-                continue
-            top = stack[-1].data if stack else ""
-            if top == "select" or (
-                (top == "option" or top == "optgroup") and in_select()
-            ):
-                # "in select" end tags (general-path parity): the three
-                # select tags resolve via any-other-end-tag below; table
-                # ends with an open table break out of the select;
-                # script passes; anything else (incl </br>) is ignored
-                if name in ("select", "option", "optgroup", "script", "template"):
-                    pass
-                elif name in _SELECT_TABLE_BREAKOUT and any(
-                    nd.data == "table" for nd in stack
-                ):
-                    pop_to_select()  # act as </select>, fall through
-                else:
-                    continue  # ignored
-            if name == "br":
-                # WHATWG: </br> acts as <br> (reconstructs, general
-                # parity); fosters in table ctx
-                if body is None:
-                    open_body()
-                reconstruct()
-                cur = stack[-1]
-                node = new_node(ELEMENT, "br", order)
-                order += 1
-                if cur.data in _TABLE_CTX:
-                    if not foster_before_table(node):
-                        raise _TreeFallback
-                else:
-                    node.parent = cur
-                    cur.children.append(node)
-                continue
-            if name == "form":
-                # clear the pointer, then remove JUST the form node from
-                # the stack (elements above it stay open) — WHATWG form
-                # end-tag rule, general-path parity
-                fnode = form_node
-                form_node = None
-                if fnode is None:
-                    continue
-                in_scope = False
-                for nd in reversed(stack):
-                    if nd is fnode:
-                        in_scope = True
-                        break
-                    if nd.data in _DEFAULT_SCOPE_STOPS:
-                        break
-                if not in_scope:
-                    continue  # parse error: ignore
-                for i in range(len(stack) - 1, -1, -1):
-                    if stack[i] is fnode:
-                        del stack[i]
-                        break
-                continue
-            if name == "p":
-                for i in range(len(stack) - 1, -1, -1):
-                    node = stack[i]
-                    if node.data == "p":
-                        del stack[i:]
-                        break
-                    if node.data in _BUTTON_SCOPE_STOPS:
-                        break
-                else:
-                    node = None
-                if node is None or node.data != "p":
-                    # no p in button scope: synthesize an empty <p>
-                    # (fosters in table ctx like any element insert)
-                    if body is None:
-                        open_body()
-                    cur = stack[-1]
-                    p = DomNode(ELEMENT, "p")
-                    p.order = order
-                    order += 1
-                    if cur.data in _TABLE_CTX:
-                        if not foster_before_table(p):
-                            raise _TreeFallback
-                    else:
-                        cur.append(p)
-                continue
-            if flags & (_F_TBLEND | _F_MARKERELT):
-                # pop-through-to-match within scope (table scope for
-                # table structure, default scope for applet/marquee/
-                # object); popped marker-scoped elements clear their
-                # formatting scope (pop_slice)
-                stops = (
-                    _DEFAULT_SCOPE_STOPS
-                    if flags & _F_MARKERELT
-                    else _TABLE_SCOPE_STOPS
-                )
-                for i in range(len(stack) - 1, -1, -1):
-                    nd = stack[i]
-                    if nd is html or nd is body or nd is head:
-                        break
-                    if nd.data == name:
-                        pop_slice(i)
-                        break
-                    if nd.data in stops:
-                        break
-                continue
-            if flags & _F_FMT:
-                # full adoption agency, mirrored from the general builder
-                adoption_agency(name)
-                continue
-            # any other end tag
-            for i in range(len(stack) - 1, -1, -1):
-                node = stack[i]
-                if node is html or node is body or node is head:
-                    break
-                if node.data == name:
-                    del stack[i:]
-                    break
-                if node.data in _SPECIAL:
-                    break
-            continue
-        # -- markup declaration / comment / doctype --
-        if c == "!":
-            if s.startswith("<!--", pos):
-                # the SHARED comment reader (abrupt closes, ---> and --!>
-                # terminators, EOF truncation) — identical spans/data to
-                # the tokenizer by construction
-                _raw_c, data, pos = read_comment(s, n, pos)
-                node = DomNode(COMMENT, data)
-                node.order = order
-                order += 1
-                (stack[-1] if stack else doc).append(node)
-                continue
-            if s[pos + 2 : pos + 9].lower() == "doctype":
-                end = s.find(">", pos + 9)
-                pos = n if end == -1 else end + 1
-                if html is None:  # late doctypes are ignored
-                    quirks = False
-                continue
-            # <!x bogus comment (htmltok._read_bogus_comment data_from=2):
-            # data runs from after "<!" to the next '>' (or EOF)
-            end = s.find(">", pos)
-            if end == -1:
-                data = s[pos + 2 : n]
-                pos = n
-            else:
-                data = s[pos + 2 : end]
-                pos = end + 1
-            if "\r" in data:
-                data = data.replace("\r\n", "\n").replace("\r", "\n")
-            if "\x00" in data:
-                data = data.replace("\x00", "�")
-            node = DomNode(COMMENT, data)
-            node.order = order
-            order += 1
-            (stack[-1] if stack else doc).append(node)
-            continue
-        # c == "?": bogus comment reconsuming the '?' (WHATWG) — this is
-        # how XHTML-served-as-HTML prologs (<?xml ...?>) arrive, so the
-        # fast path keeps them: data runs from the '?' to the next '>'
-        end = s.find(">", pos)
-        if end == -1:
-            data = s[pos + 1 : n]
-            pos = n
-        else:
-            data = s[pos + 1 : end]
-            pos = end + 1
-        if "\r" in data:
-            data = data.replace("\r\n", "\n").replace("\r", "\n")
-        if "\x00" in data:
-            data = data.replace("\x00", "�")
-        node = DomNode(COMMENT, data)
-        node.order = order
-        order += 1
-        (stack[-1] if stack else doc).append(node)
-        continue
-
-    idx = 0
-    if dirty:
-        for node in doc.iter_descendants():
-            node.order = idx
-            idx += 1
-    return doc
 
 
 # x/net/html Render writes raw child text ONLY for these (textarea and

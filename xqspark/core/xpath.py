@@ -116,7 +116,6 @@ _TOKEN_RE = re.compile(
 )
 
 _NODE_TYPES = {"node", "text", "comment", "processing-instruction"}
-_OPERATOR_NAMES = {"and", "or", "div", "mod"}
 
 
 def _tokenize(query: str):

@@ -162,17 +162,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    if path.startswith("iceberg:"):
-        tbl = df.writeTo(path[len("iceberg:"):])
-        if mode == "append":
-            tbl.append()
-        else:
-            tbl.createOrReplace()
-        return
-    df.write.mode(mode).parquet(path)
-
-
 def write_bucketed(
     df: DataFrame, table: str, bucket_col: str = "part_key", n_buckets: int = 64
 ) -> None:

@@ -205,13 +205,21 @@ def q_beautify_xml(spark, sf_dir):
     )
 
 
+# Go strings.TrimSpace's ASCII set as a DuckDB trim() character list
+_SQL_GO_SPACE = "' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)"
+
+
 def q_beautify_xml_sql():
-    # the exact byte output of FormatXml for this construction
+    # the exact byte output of FormatXml for this construction: an element
+    # with no content and no newline-free whitespace run self-closes
+    # (utils.go EndElement branch; golden pair 5, <root></root> -> <root/>)
     return (
         "SELECT doc_id, "
         "'<doc>' || chr(10) || '  <title>' || source || '</title>' || chr(10) || "
-        "'  <body>' || trim(text) || '</body>' || chr(10) || '</doc>' || chr(10) "
-        "AS pretty FROM documents"
+        f"CASE WHEN trim(text, {_SQL_GO_SPACE}) = '' "
+        "AND (trim(text) = '' OR contains(text, chr(10))) THEN '  <body/>' "
+        "ELSE '  <body>' || trim(text) || '</body>' END "
+        "|| chr(10) || '</doc>' || chr(10) AS pretty FROM documents"
     )
 
 
@@ -226,11 +234,13 @@ def q_xml2json_doc(spark, sf_dir):
 
 
 def q_xml2json_doc_sql():
-    # NodeToJSON + Go-marshal key sort: body < title
+    # NodeToJSON + Go-marshal key sort: body < title. Text parts are
+    # TrimSpace'd and an element without any becomes {} (jsonutil.go:85-90)
     return (
         "SELECT doc_id, "
         "'{' || chr(10) || '  \"doc\": {' || chr(10) || "
-        "'    \"body\": \"' || trim(text) || '\",' || chr(10) || "
+        f"'    \"body\": ' || CASE WHEN trim(text, {_SQL_GO_SPACE}) = '' THEN '{{}}' "
+        f"ELSE '\"' || trim(text, {_SQL_GO_SPACE}) || '\"' END || ',' || chr(10) || "
         "'    \"title\": \"' || source || '\"' || chr(10) || "
         "'  }' || chr(10) || '}' || chr(10) AS json_out FROM documents"
     )
@@ -334,9 +344,14 @@ def q_beautify_html(spark, sf_dir):
 
 
 def q_beautify_html_sql():
+    # FormatHtml escapes text through escapeText, which writes a tab as
+    # &#x9; (utils.go:671-684, Go xml.EscapeText); whitespace-only text
+    # is dropped, or kept raw as spaceContent when it has no newline
     return (
         "SELECT doc_id, "
-        "'<html>' || chr(10) || '  <body>' || chr(10) || '    <p>' || trim(text) "
+        "'<html>' || chr(10) || '  <body>' || chr(10) || '    <p>' || "
+        f"CASE WHEN trim(text, {_SQL_GO_SPACE}) <> '' THEN replace(trim(text), chr(9), '&#x9;') "
+        "WHEN contains(text, chr(10)) THEN '' ELSE trim(text) END "
         "|| '</p>' || chr(10) || '  </body>' || chr(10) || '</html>' || chr(10) "
         "AS pretty FROM documents"
     )
@@ -550,8 +565,8 @@ def q_main_content(spark, sf_dir):
     """Boilerplate strip via DOM text-density heuristics (north rule:
     "HTML boilerplate strip ... DOM heuristics"): pages are CONSTRUCTED
     JVM-side with a link-dense nav, a plain-text main block, and a
-    link-dense footer; the extractor must parse the tree (fused fast
-    path), score candidates by text density minus link density, and
+    link-dense footer; the extractor must parse the WHATWG tree, score
+    candidates by text density minus link density, and
     return exactly the main block's normalized text. The oracle states
     the expected text directly. See xqspark/core/maincontent.py."""
     from xqspark.core.maincontent import main_text
@@ -576,8 +591,9 @@ def q_main_content(spark, sf_dir):
 
 
 def q_main_content_sql():
+    # main_text's normal form: whitespace runs collapse to one space, ends trimmed
     return (
-        "SELECT doc_id, regexp_replace(trim(text), '\\s+', ' ', 'g') "
+        "SELECT doc_id, trim(regexp_replace(text, '\\s+', ' ', 'g')) "
         "AS main_text FROM documents"
     )
 
