@@ -337,6 +337,46 @@ def test_hash_kernels_on_sliced_batch_match_per_row_reference():
     ]
 
 
+def test_hash_kernels_peak_memory_stays_within_the_batch():
+    """The LSH-scale minhash and the simhash kernels run one slot / one
+    bit position at a time through one reused buffer, so their peak
+    allocation on a long-document batch stays within 4x the batch's flat
+    gram (token) bytes. numpy reports its buffers to tracemalloc; a
+    (slots, grams) int64 matrix measured 128x, a (tokens, 16) bit matrix
+    66x."""
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+
+    from xqspark.queries import _minhash_kernel, _simhash_kernel
+
+    rng = np.random.default_rng(11)
+    lens = rng.integers(3000, 5000, 64)
+    offs = pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32())
+    n = int(lens.sum())
+    h = pa.ListArray.from_arrays(offs, pa.array(rng.integers(0, 2**32, n)))
+    words = [
+        pa.ListArray.from_arrays(
+            offs, pa.array(rng.integers(0, 2**16, n).astype(np.int32))
+        )
+        for _ in range(4)
+    ]
+
+    def peak(fn, *cols):
+        fn(*cols)  # first call outside the trace: numpy's lazy set-up
+        tracemalloc.start()
+        try:
+            fn(*cols)
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    assert peak(_minhash_kernel(64), h) <= 4 * h.values.nbytes
+    # one word column's flat bytes: 4 B a token
+    assert peak(_simhash_kernel, *words) <= 4 * words[0].values.nbytes
+
+
 def test_map_arrow_skips_empty_batches():
     from pyspark.sql import types as T
 

@@ -619,6 +619,109 @@ def test_lsh_realistic_params_cap_engaged(spark, tmp_path):
     assert got == want
 
 
+def _boiler_docs(spark, path):
+    """30 copies of one boilerplate text (every 16x4 band hot at
+    band_cap=10) plus one identical unique pair."""
+    boiler = "the same boilerplate text repeated on every page"
+    rows = [(i, boiler) for i in range(30)]
+    rows += [(100, "unique alpha beta gamma delta epsilon"),
+             (101, "unique alpha beta gamma delta epsilon")]
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(path / "documents.parquet"))
+
+
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _lsh_16x4_cap_report(spark, path, tag):
+    """lsh_pairs 16x4 without and with ``on_dropped``: both results,
+    both job counts, the reported counts and the no-callback plan."""
+    from xqspark.queries import lsh_pairs
+
+    def run(**kw):
+        return lsh_pairs(spark, str(path), n_bands=16, n_rows=4, band_cap=10, **kw)
+
+    plain, plain_jobs = _jobs(spark, f"{tag}-plain", run)
+    want, collect_jobs = _jobs(spark, f"{tag}-collect", plain.collect)
+    dropped = []
+    got, cb_jobs = _jobs(
+        spark, f"{tag}-cb", lambda: run(on_dropped=dropped.append).collect()
+    )
+    plan = plain._jdf.queryExecution().executedPlan().toString()
+    return (
+        sorted(want), sorted(got), plain_jobs + collect_jobs, cb_jobs,
+        dropped, plan,
+    )
+
+
+def test_cap_report_costs_one_job_and_no_extra_action(spark, tmp_path):
+    """With ``on_dropped`` the hot-band count is observed on the pass
+    that computes the pairs and the result is materialized once: the
+    call runs exactly one job more than the same call without a
+    callback (the eager checkpoint, then the collect over it), not a
+    persist plus a separate count."""
+    _boiler_docs(spark, tmp_path)
+    want, got, plain_jobs, cb_jobs, dropped, _ = _lsh_16x4_cap_report(
+        spark, tmp_path, "cap-bhj"
+    )
+    assert got == want == [(100, 101)]
+    assert dropped == [16]
+    assert cb_jobs == plain_jobs + 1
+
+
+def test_cap_report_under_sort_merge_self_join(spark, tmp_path):
+    """With broadcasting off the self-join is a SortMergeJoin and the
+    observed ``sized`` rows feed both shuffled sides: the count must
+    come back once — neither doubled nor lost — and the job budget
+    holds."""
+    _boiler_docs(spark, tmp_path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        want, got, plain_jobs, cb_jobs, dropped, plan = _lsh_16x4_cap_report(
+            spark, tmp_path, "cap-smj"
+        )
+    finally:
+        spark.conf.set(key, before)
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    assert got == want == [(100, 101)]
+    assert dropped == [16]
+    assert cb_jobs == plain_jobs + 1
+
+
+def test_cap_report_when_every_key_is_hot(spark, tmp_path):
+    """At band_cap=1 every band is hot, both join sides are empty and
+    AQE replaces the join (and the observed rows under it) by an empty
+    relation: the report still counts all 32 hot bands (16 of the
+    boilerplate, 16 of the pair), as it does on an empty corpus (0)."""
+    from xqspark.queries import lsh_pairs
+
+    _boiler_docs(spark, tmp_path)
+    dropped = []
+    got = lsh_pairs(
+        spark, str(tmp_path), n_bands=16, n_rows=4, band_cap=1,
+        on_dropped=dropped.append,
+    ).collect()
+    assert got == [] and dropped == [32]
+
+    empty = tmp_path / "empty"
+    spark.createDataFrame([], "doc_id long, text string").write.parquet(
+        str(empty / "documents.parquet")
+    )
+    got = lsh_pairs(spark, str(empty), band_cap=1, on_dropped=dropped.append)
+    assert got.collect() == [] and dropped == [32, 0]
+
+
 def test_connected_components_star_rounds(spark):
     """dedup_clusters' core: alternating large-star/small-star must
     label every node with its component MIN on adversarial shapes —

@@ -10,8 +10,8 @@ from __future__ import annotations
 import math
 
 from .charset import decode_payload
-from .detect import CONTENT_HTML, CONTENT_JSON, CONTENT_TEXT, CONTENT_XML, detect_format
-from .dom import COMMENT, DECLARATION, DOCUMENT, ELEMENT, PI, TEXT, DomNode, parse_dom
+from .detect import CONTENT_HTML, CONTENT_JSON, CONTENT_XML, detect_format
+from .dom import COMMENT, DECLARATION, DOCUMENT, ELEMENT, PI, TEXT, parse_dom
 from .fmt_html import format_html
 from .fmt_json import format_json
 from .fmt_xml import format_xml

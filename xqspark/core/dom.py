@@ -16,7 +16,7 @@ attributes live on elements. Key behavioral contracts:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .charset import decode_payload
 from .xmltok import (

@@ -19,7 +19,6 @@ from .xmltok import (
     Name,
     ProcInst,
     StartElement,
-    XmlSyntaxError,
 )
 
 

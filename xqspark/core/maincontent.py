@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import COMMENT, ELEMENT, TEXT, DomNode
+from .dom import ELEMENT, TEXT, DomNode
 from .htmltree import parse_html
 
 # block containers eligible to BE the main content node

@@ -21,7 +21,8 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
@@ -992,22 +993,44 @@ def q_minhash_sig_sql():
     return _MINHASH_SQL_BODY + "SELECT doc_id, mh1, mh2, mh3, mh4 FROM sig"
 
 
-def _report_hot(sized, count_col, cap, keys, on_dropped, cache_out):
-    """The pair-finders' no-silent-caps report: with an ``on_dropped``
-    callback, persist ``sized`` (it feeds the self-join too), hand it to
-    ``cache_out`` for the caller to unpersist, and call
-    ``on_dropped(n)`` with the number of distinct ``keys`` buckets whose
-    ``count_col`` exceeds ``cap`` — one extra action. Without a
-    callback, ``sized`` is returned as is."""
+def _report_hot(sized, count_col, cap, on_dropped):
+    """The pair-finders' no-silent-caps report, counted in the pass that
+    already runs. Returns ``(sized, finish)``: build the result from the
+    returned ``sized`` and hand it to ``finish``.
+
+    Without an ``on_dropped`` callback both are pass-throughs. With one,
+    ``sized`` observes ``round(sum(when(count_col > cap, 1 / count_col)))``
+    — each hot key's ``count_col`` rows add up to exactly 1, and
+    ``observe()`` takes no DISTINCT aggregate — and ``finish``
+    materializes the result once with ``localCheckpoint(eager=True)``,
+    calls ``on_dropped(n_hot_keys)`` and returns the checkpointed rows.
+    Nothing is persisted and no second action runs. Measured on the
+    ``neardup_dedup`` corpus (local[4]): lsh_pairs 16x4 + collect runs 7
+    jobs where persisting ``sized`` and counting its hot keys in a
+    separate action ran 9, with the same pairs and counts. A persisted
+    ``sized`` also kept its 32 shuffle partitions, as AQE does not
+    coalesce a cached plan's output: 186 tasks a benchmark pass, now 62."""
     if on_dropped is None:
-        return sized
-    sized = sized.persist()
-    if cache_out is not None:
-        cache_out.append(sized)
-    on_dropped(
-        sized.filter(F.col(count_col) > cap).select(*keys).distinct().count()
-    )
-    return sized
+        return sized, lambda result: result
+    n_hot = F.round(
+        F.sum(F.when(F.col(count_col) > cap, 1.0 / F.col(count_col)))
+    ).alias("n")
+    hot = Observation()
+    observed = sized.observe(hot, n_hot)
+
+    def finish(result):
+        result = result.localCheckpoint(eager=True)
+        try:
+            n = hot.get["n"]
+        except Py4JJavaError:
+            # no row came back: AQE replaced the join by an empty
+            # relation (every key hot, or no rows) and dropped the
+            # observed node with it, so count on ``sized`` itself
+            n = sized.agg(n_hot).first()["n"]
+        on_dropped(int(n or 0))
+        return result
+
+    return observed, finish
 
 
 def lsh_pairs(
@@ -1030,19 +1053,22 @@ def lsh_pairs(
     costs no extra shuffle of the big side.
 
     ``on_dropped(n_hot_bands)`` — optional callback so batch drivers can
-    log how many bands the cap removed. It runs an extra action, so the
-    banded rows are persisted first (and stay cached for the self-join);
-    None skips both the action and the caching. Pass ``cache_out`` (a
-    list) to receive the persisted DataFrame so you can unpersist it
-    once the result is materialized.
+    log how many bands the cap removed. The count is observed on the
+    pass that computes the pairs (``_report_hot``): with a callback the
+    result is materialized once, as an eager local checkpoint, and
+    ``on_dropped`` has run by the time this returns; the returned
+    DataFrame reads the checkpointed pairs. None returns the lazy plan.
+    ``cache_out`` is kept for callers that pass it and receives nothing:
+    no banded rows are persisted, and Spark's context cleaner frees the
+    checkpoint's blocks once the returned DataFrame is unreferenced.
     """
     sig = _minhash_sig(spark, sf_dir, n_hashes=n_bands * n_rows)
     # '#' separator inside band_keys_df: mh values are variable-width
     # decimals, so plain concat would alias ("1","23") with ("12","3")
     bands = band_keys_df(sig, n_bands, n_rows)
-    sized = _report_hot(
+    sized, finish = _report_hot(
         bands.withColumn("n_band", F.count("*").over(W.partitionBy("band"))),
-        "n_band", band_cap, ("band",), on_dropped, cache_out,
+        "n_band", band_cap, on_dropped,
     )
     ok = sized.filter(F.col("n_band") <= band_cap).select("doc_id", "band")
     left = ok.alias("a")
@@ -1055,7 +1081,7 @@ def lsh_pairs(
         )
         .distinct()
     )
-    return result
+    return finish(result)
 
 
 def q_lsh_pairs(spark, sf_dir):
@@ -1874,21 +1900,35 @@ def _simhash_kernel(*words):
     the four JVM-computed per-token 16-bit word arrays (digest bytes
     0..7 big-endian == conv(substring(hex,...),16,10); md5 stays in
     codegen, where it measured as fast as a Python hashlib loop and the
-    digest semantics cannot drift), per-doc votes via one reduceat over
-    each word's flat bit matrix, majority = 2*count > n. Replaces the 4
-    aggregate() HOFs whose merge lambda allocated a 16-counter array
-    PER TOKEN (r4's best JVM shape), and r6's first-pass all-Python
-    kernel whose md5 loop was its cost (1.8 -> 1.5 s at 10x sf0.1).
-    All-integer math — bit-identical output."""
-    shifts = np.arange(16, dtype=np.int64)
-    cols = []
-    for word in words:
-        flat, offs = list_parts(word)
-        bits = (flat.astype(np.int64)[:, None] >> shifts) & 1
-        counts = np.add.reduceat(bits, offs[:-1], axis=0)
-        maj = (2 * counts > np.diff(offs)[:, None]).astype(np.int64)
-        cols.append((maj << shifts).sum(axis=1))
-    return cols
+    digest semantics cannot drift), per-doc votes via one reduceat per
+    bit position, majority = 2*count > n. Replaces the 4 aggregate()
+    HOFs whose merge lambda allocated a 16-counter array PER TOKEN (r4's
+    best JVM shape), and r6's first-pass all-Python kernel whose md5
+    loop was its cost (1.8 -> 1.5 s at 10x sf0.1).
+
+    Bounded memory: the 16 bit positions run one at a time through one
+    token-sized buffer of the word's own dtype, so the per-batch
+    transient is 1x a word's flat token bytes; a (tokens, 16) int64 bit
+    matrix peaked at 66x (tracemalloc). All-integer math — bit-identical
+    output."""
+    return [_simhash_word(word) for word in words]
+
+
+def _simhash_word(word):
+    """One 16-bit SimHash word per doc: bit ``b`` is set when more than
+    half the doc's tokens have it set."""
+    flat, offs = list_parts(word)
+    starts, n = offs[:-1], np.diff(offs)
+    buf = np.empty_like(flat)
+    sig = np.zeros(len(starts), dtype=np.int64)
+    for bit in range(16):
+        np.right_shift(flat, bit, out=buf)
+        buf &= 1
+        # summed in the word's dtype: numpy would otherwise upcast an
+        # int32 buf to an int64 copy; ones > n // 2 == 2 * ones > n
+        ones = np.add.reduceat(buf, starts, dtype=buf.dtype)
+        sig |= (ones > n // 2).astype(np.int64) << bit
+    return sig
 
 
 def _minhash_kernel(n_hashes: int):
@@ -1896,22 +1936,37 @@ def _minhash_kernel(n_hashes: int):
     counts (n_hashes >= 8): the input column is the JVM-computed base
     hash array (one md5 per 3-token shingle — shingling and digesting
     stay in codegen, where they measured as fast as a Python hashlib
-    loop and the bytes/digest semantics cannot drift), then ALL
-    Carter-Wegman permutations as one (n_hashes, T) int64 broadcast
-    expression + per-doc minimum.reduceat — where the JVM shape paid
-    n_hashes separate array_min(transform(...)) passes, each allocating
-    a shingle-sized array per doc (the r4 best-known JVM layout).
-    Measured r6 at 10x sf0.1: 64-slot signature stage ~1.6 -> ~1.3 s vs
-    the all-Python kernel (the md5 loop was the Python-side cost; the
-    int64 matrix was never it). a*h+b stays inside int64 by
-    construction (_mh_params: max < 2^63-1); % (2^31-1) on non-negative
-    operands == pmod. Bit-identical signatures."""
-    A, B = np.array(_mh_params(n_hashes), dtype=np.int64).T[:, :, None]
+    loop and the bytes/digest semantics cannot drift), then every
+    Carter-Wegman permutation + per-doc minimum.reduceat — where the JVM
+    shape paid n_hashes separate array_min(transform(...)) passes, each
+    allocating a shingle-sized array per doc (the r4 best-known JVM
+    layout). Measured r6 at 10x sf0.1: 64-slot signature stage ~1.6 ->
+    ~1.3 s vs the all-Python kernel (the md5 loop was the Python-side
+    cost).
+
+    Bounded memory: the slots run one at a time through one gram-sized
+    int64 buffer, written in place (a*h, +b, %p), so the per-batch
+    transient is 1x the batch's gram bytes. The former (n_hashes, grams)
+    broadcast matrix plus its temporary peaked at 128x for 64 slots
+    (tracemalloc, a 64-doc x ~4,000-gram batch) and set the
+    ``neardup_dedup`` Python workers' peak RSS: median 176 MB over 10
+    runs, now 125 MB. A 512-doc x ~60-gram batch also runs faster
+    (~12 ms vs ~20 ms). a*h+b stays inside int64 by construction (_mh_params: max <
+    2^63-1); % (2^31-1) on non-negative operands == pmod. Bit-identical
+    signatures."""
+    params = _mh_params(n_hashes)
 
     def sig(h):
         flat, offs = list_parts(h)
-        perm = (A * flat[None, :] + B) % _MERSENNE31
-        return np.minimum.reduceat(perm, offs[:-1], axis=1)
+        starts = offs[:-1]
+        out = np.empty((n_hashes, len(starts)), dtype=np.int64)
+        buf = np.empty(len(flat), dtype=np.int64)
+        for k, (a, b) in enumerate(params):
+            np.multiply(flat, a, out=buf)
+            buf += b
+            buf %= _MERSENNE31
+            np.minimum.reduceat(buf, starts, out=out[k])
+        return out
 
     return sig
 
@@ -1993,19 +2048,19 @@ def winnow_pairs(
 
     ``on_dropped(n_hot_fps)`` / ``cache_out`` follow the lsh_pairs
     contract: no-silent-caps reporting of how many corpus-wide
-    fingerprints the cap removed, at the cost of one extra action over
-    the persisted exploded stream."""
+    fingerprints the cap removed, observed on the pass that computes the
+    pairs (the result comes back as an eager local checkpoint)."""
     ex = _explode_nonempty(
         _winnow_fps(spark, sf_dir, k, w), "fps", "fp", keep=("doc_id",)
     )
-    sized = _report_hot(
+    sized, finish = _report_hot(
         ex.withColumn("n_fp", F.count("*").over(W.partitionBy("fp"))),
-        "n_fp", fp_cap, ("fp",), on_dropped, cache_out,
+        "n_fp", fp_cap, on_dropped,
     )
     ok = sized.filter(F.col("n_fp") <= fp_cap).select("doc_id", "fp")
     a = ok.select(F.col("doc_id").alias("doc_a"), "fp")
     b = ok.select(F.col("doc_id").alias("doc_b"), "fp")
-    return (
+    return finish(
         a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
@@ -2132,13 +2187,14 @@ def embedding_neardup(
     extra exchange in return for not losing hot clusters outright.
 
     ``on_dropped(n_hot_labels)`` + ``cache_out`` follow the lsh_pairs
-    contract (persist before the extra action; caller unpersists)."""
+    contract (counted on the pass that runs; the result comes back as an
+    eager local checkpoint; ``cache_out`` receives nothing)."""
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
-    sized = _report_hot(
+    sized, finish = _report_hot(
         emb.withColumn("n_label", F.count("*").over(W.partitionBy("label"))),
-        "n_label", label_cap, ("label",), on_dropped, cache_out,
+        "n_label", label_cap, on_dropped,
     )
     if n_sub is None:
         ok = sized.filter(F.col("n_label") <= label_cap).select(
@@ -2182,7 +2238,7 @@ def embedding_neardup(
         "id_b",
         F.round(F.expr(_DOT_EXPR) / (F.col("qn") * F.col("nn")), 4).alias("sim"),
     )
-    return scored.filter(F.col("sim") >= threshold)
+    return finish(scored.filter(F.col("sim") >= threshold))
 
 
 def q_embedding_neardup(spark, sf_dir):
@@ -3047,7 +3103,11 @@ def simhash_pairs(
     empty docs collapsing to the same signature word) are bounded by
     ``word_cap`` via the same count-window-on-the-join-partitioning
     trick as lsh_pairs' band_cap. At 100 TB: one shuffle keyed on the
-    16-bit words, never quadratic outside capped buckets."""
+    16-bit words, never quadratic outside capped buckets.
+
+    ``on_dropped(n_hot_words)`` / ``cache_out`` follow the lsh_pairs
+    contract: the hot (word_idx, word_val) count is observed on the pass
+    that computes the pairs."""
     sig = q_simhash(spark, sf_dir)
     melted = sig.select(
         "doc_id",
@@ -3056,9 +3116,9 @@ def simhash_pairs(
             F.array(*[F.col(f"simhash_w{w}") for w in range(4)])
         ).alias("wi", "wv"),
     )
-    sized = _report_hot(
+    sized, finish = _report_hot(
         melted.withColumn("n_w", F.count("*").over(W.partitionBy("wi", "wv"))),
-        "n_w", word_cap, ("wi", "wv"), on_dropped, cache_out,
+        "n_w", word_cap, on_dropped,
     )
     ok = sized.filter(F.col("n_w") <= word_cap).drop("n_w")
     a = ok.select(
@@ -3077,7 +3137,7 @@ def simhash_pairs(
     for w in range(4):
         piece = F.expr(f"bit_count(a{w} ^ b{w})")
         ham = piece if ham is None else ham + piece
-    return (
+    return finish(
         a.join(b, ["wi", "wv"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .withColumn("hamming", ham.cast("int"))
