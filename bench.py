@@ -544,6 +544,18 @@ def _scaling_bench(rows_per_cpu: int) -> dict:
     return out
 
 
+def _emit(mode: str, result: dict) -> None:
+    """The mode's one JSON result line: printed to stdout and also kept
+    in .bench_build/bench-<mode>.json beside this script, so the result
+    survives whatever else a run writes to stdout."""
+    line = json.dumps(result)
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_build")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, f"bench-{mode}.json"), "w") as f:
+        f.write(line + "\n")
+    print(line)
+
+
 def main() -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--scaling", action="store_true")
@@ -554,13 +566,13 @@ def main() -> None:
     args = parser.parse_args()
 
     if args.extract_only:
-        print(json.dumps(_extract_bench(args.cpus, args.rows)))
+        _emit("extract", _extract_bench(args.cpus, args.rows))
         return
     if args.scaling:
-        print(json.dumps(_scaling_bench(args.rows_per_cpu)))
+        _emit("scaling", _scaling_bench(args.rows_per_cpu))
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    print(json.dumps(_headline_bench(sf_dir, args.cpus)))
+    _emit("headline", _headline_bench(sf_dir, args.cpus))
 
 
 if __name__ == "__main__":

@@ -1,8 +1,10 @@
 """Property-based fuzzing (hypothesis): the engine must never crash with
 anything but its typed errors, and structural invariants must hold."""
 
+import re
 import string
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from xqspark.core.api import beautify, css_query, xpath_query
@@ -383,7 +385,8 @@ def test_fused_dom_parse_differential():
             '</g>', 'x&#65;y', '<h i="a&quot;b">', '</h>', '<!DOCTYPE r>',
             ']]>', '<k >', '</k >', '<m a="1" b="2">', '</m>', '<n><n>',
             '</n></n>', '<p q="tab\there">', '</p>', '\x85', '-->',
-            '<!--a-b-->']
+            '<!--a-b-->', '&lt;', '&gt;', '&quot;', '&apos;', '&amp;lt;',
+            'a&amp;b']
     for strict in (False, True):
         for _ in range(1200):
             doc = "".join(random.choice(frag) for _ in range(random.randint(1, 10)))
@@ -452,6 +455,118 @@ def test_fused_dom_hypothesis(doc, strict):
     except XmlSyntaxError as e:
         got, gerr = None, str(e)
     assert (want, werr) == (got, gerr)
+
+
+def _tree_first_text(doc, query):
+    """-e output of the tree route: parse_dom -> select_first ->
+    _print_node_content, with the error text on a syntax error."""
+    from xqspark.core.api import _print_node_content
+    from xqspark.core.dom import parse_dom
+    from xqspark.core.xpath import compile_xpath
+
+    try:
+        node = compile_xpath(query).select_first(parse_dom(doc))
+    except XmlSyntaxError as e:
+        return None, str(e)
+    return ("" if node is None else _print_node_content(node, False, "  ")), None
+
+
+def _projected_first_text(doc, query):
+    try:
+        return xpath_query(doc, query, single_node=True), None
+    except XmlSyntaxError as e:
+        return None, str(e)
+
+
+_PROJECTED_FRAGS = [
+    '<t>', '</t>', '<t/>', '<t a="1">', '<t >', '</t >', '<a>', '</a>',
+    '<b x="y">', '</b>', 'x', ' y ', '\n', '\t', '<t><t>x</t>y</t>',
+    '<a><t>in</t></a>', '<!--<t>c</t>-->', '<![CDATA[<t>z</t>]]>',
+    '<t><![CDATA[cd]]></t>', '<e:t>', '</e:t>', '<t xmlns="u">',
+    '<a xmlns:e="v">', '&amp;', '&lt;', '&gt;', '&quot;', '&apos;',
+    '&amp;lt;', '&bad;', '&#65;', ']]>', ']]&gt;', '\r', '\r\n', '\x01',
+    '<!DOCTYPE r>', '<?pi x?>', '<?xml version="1.0"?>', '<?pi',
+    '<!--c-->', '<', '</', '<t', 'ü', '\x85',
+]
+
+
+def test_projected_first_text_differential():
+    """-e '//name' runs one token scan that builds no tree; it must print
+    exactly what the tree route prints (output AND error text), including
+    after a match that a malformed tail must still turn into an error."""
+    import random
+
+    random.seed(2024)
+    for _ in range(4000):
+        doc = "".join(
+            random.choice(_PROJECTED_FRAGS) for _ in range(random.randint(1, 10))
+        )
+        for query in ("//t", "//a"):
+            assert _projected_first_text(doc, query) == _tree_first_text(
+                doc, query
+            ), (query, repr(doc))
+        # a truncated document (the bench feeds' ~1% damage)
+        cut = doc[: random.randint(0, len(doc))]
+        assert _projected_first_text(cut, "//t") == _tree_first_text(cut, "//t"), repr(cut)
+
+
+@given(
+    st.one_of(_xmlish, st.lists(st.sampled_from(_PROJECTED_FRAGS), max_size=12).map("".join)),
+    st.sampled_from(["//a", "//t", "//x"]),
+)
+@settings(max_examples=400, deadline=None)
+def test_projected_first_text_hypothesis(doc, query):
+    assert _projected_first_text(doc, query) == _tree_first_text(doc, query)
+
+
+def test_projected_first_text_fixed_values():
+    """Expected values written out by hand, so a defect shared by the
+    scan and the tree route still fails (the benchmark's own check
+    compares the pipeline against direct xpath_query calls)."""
+    feed = (
+        b'<?xml version="1.0" encoding="utf-8"?>\n<rss version="2.0"><channel>'
+        b"<title> Salt &amp; Pepper &lt;3 </title><!-- <title>no</title> -->"
+        b'<item id="0"><title>second</title></item></channel></rss>'
+    )
+    cases = [
+        (feed, "Salt & Pepper <3\n"),
+        (b"<r><title>a&amp;lt;b</title></r>", "a&lt;b\n"),
+        (b"<r><title>&quot;q&apos; &gt;</title></r>", "\"q' >\n"),
+        (b"<r><title><b>x</b><!--c-->y<?p i?>z</title></r>", "xyz\n"),
+        (b"<r><title><title>in</title>out</title></r>", "inout\n"),
+        (b"<r><title/><title>later</title></r>", "\n"),
+        (b"<r><head>none</head></r>", ""),
+        (b"<r><title>A</title><e:title>B</e:title></r>", "A\n"),
+    ]
+    for doc, want in cases:
+        assert xpath_query(doc, "//title", single_node=True) == want, doc
+    # the match is early; the malformed tail still errors
+    for doc, err in (
+        (b"<r><title>t</title><x>", "unexpected EOF"),
+        (b"<r><title>t</title></r><", "unexpected EOF"),
+        (b'<r><title>t</title><x a="<"/></r>', "unescaped < inside quoted string"),
+        (b"<r><title>t</title>\x01</r>", "illegal character code U+0001"),
+    ):
+        with pytest.raises(XmlSyntaxError, match=re.escape(err)):
+            xpath_query(doc, "//title", single_node=True)
+
+
+def test_projected_first_text_bench_pages(tmp_path):
+    """Every page of a generated xml_title_small input (1-3 KB feeds,
+    title entities, truncation, invalid bytes) prints the same through
+    the scan as through the tree route."""
+    import pathlib
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).parent.parent))
+    from perfbench.gen import generate
+
+    info = generate("xml_title_small", 7, 3000, str(tmp_path))
+    pages = [h for h in info["html"] if h is not None]
+    outs = [_projected_first_text(h, "//title") for h in pages]
+    assert outs == [_tree_first_text(h, "//title") for h in pages]
+    assert sum(o[1] is not None for o in outs) > 0  # damaged pages error
+    assert sum("&" in (o[0] or "") for o in outs) > 0  # title entities decode
 
 
 @settings(max_examples=150, deadline=None)

@@ -11,14 +11,24 @@ import math
 
 from .charset import decode_payload
 from .detect import CONTENT_HTML, CONTENT_JSON, CONTENT_XML, detect_format
-from .dom import COMMENT, DECLARATION, DOCUMENT, ELEMENT, PI, TEXT, parse_dom
+from .dom import (
+    COMMENT,
+    DECLARATION,
+    DOCUMENT,
+    ELEMENT,
+    PI,
+    TEXT,
+    _DomFallback,
+    _first_text_fast,
+    parse_dom,
+)
 from .fmt_html import format_html
 from .fmt_json import format_json
 from .fmt_xml import format_xml
 from .textutil import escape_text, go_trim_space
 from .xml2json import node_to_json
 from .fmt_json import format_value
-from .xpath import AttrNode, XPathError, compile_xpath, string_value
+from .xpath import AttrNode, XPathError, compile_xpath, fast_desc_name, string_value
 
 
 def dom_serialize(node) -> str:
@@ -105,6 +115,18 @@ def xpath_query(
     indent: str = "  ",
 ) -> str:
     """XPathQuery (utils.go:210-271): -x / -e / -n modes."""
+    name = fast_desc_name(query) if single_node and not with_tags else None
+    if name is not None:
+        # -e '//name': one validating token scan, no tree; anything the
+        # fused parse would hand to the general path takes the tree path
+        if isinstance(data, bytes):
+            data = decode_payload(data)
+        try:
+            text = _first_text_fast(data, name)
+        except _DomFallback:
+            pass
+        else:
+            return "" if text is None else go_trim_space(text) + "\n"
     doc = parse_dom(data, strict=False)
     expr = compile_xpath(query)
 

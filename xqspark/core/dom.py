@@ -135,16 +135,21 @@ class _DomFallback(Exception):
 import re as _re
 
 # Fused tokenize+build token shapes: ASCII colon-free names, double-quoted
-# attribute values without entities/CR (kept raw in the DOM), entity-free
-# text, PIs, comments, simple directives. Everything else falls back to
-# the general Go-faithful token loop on the same input (namespaces,
+# attribute values without entities/CR (kept raw in the DOM), text whose
+# only entities are the five predefined ones, PIs, comments, simple
+# directives. Everything else falls back to the general Go-faithful token
+# loop on the same input (namespaces, character references and unknown
 # entities, CDATA, mismatched/unquoted constructs, malformed input).
+# The text branch is unrolled (runs of [^<&] between whole entities), so
+# an ordinary run costs one character class, not a per-character
+# alternation.
 _DOM_TOKEN = _re.compile(
     r"(?:<(?P<start>[A-Za-z_][A-Za-z0-9_.\-]*)"
     r"(?P<attrs>(?:[ \t\n]+[A-Za-z_][A-Za-z0-9_.\-]*="
     "\"[^\"&<\\r\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]*\")*)"
     r"[ \t\n]*(?P<selfclose>/?)>)"
-    r"|(?P<text>[^<&]+)"
+    r"|(?P<text>[^<&]+(?:&(?:amp|lt|gt|quot|apos);[^<&]*)*"
+    r"|(?:&(?:amp|lt|gt|quot|apos);[^<&]*)+)"
     r"|(?:</(?P<end>[A-Za-z_][A-Za-z0-9_.\-]*)[ \t\n]*>)"
     r"|(?:<\?(?P<pi>[A-Za-z_][A-Za-z0-9_:.\-]*))"
     r"|(?:<!--(?P<comment>(?:[^-]|-(?!->))*)-->)"
@@ -152,6 +157,18 @@ _DOM_TOKEN = _re.compile(
 )
 _DOM_TEXT_BAD = _re.compile(r"[\r\x00-\x08\x0b\x0c\x0e-\x1f]|\]\]>")
 _DOM_ATTR = _re.compile(r"([A-Za-z_][A-Za-z0-9_.\-]*)=\"([^\"]*)\"")
+
+
+def _unescape_predefined(t: str) -> str:
+    """Decode the five predefined entities of a _DOM_TOKEN text run.
+    &amp; goes last, so '&amp;lt;' decodes to '&lt;', not '<'."""
+    return (
+        t.replace("&lt;", "<")
+        .replace("&gt;", ">")
+        .replace("&quot;", '"')
+        .replace("&apos;", "'")
+        .replace("&amp;", "&")
+    )
 
 
 def _parse_dom_fast(s: str) -> DomNode:
@@ -166,6 +183,9 @@ def _parse_dom_fast(s: str) -> DomNode:
     n = len(s)
     match = _DOM_TOKEN.match
     bad_text = _DOM_TEXT_BAD.search
+    # a text run is a substring of s: when s has no bad character or
+    # ']]>', no run has one, so the per-run check can be skipped
+    check_text = bad_text(s) is not None
     attr_findall = _DOM_ATTR.findall
     new_node = _new_node
     while pos < n:
@@ -194,8 +214,11 @@ def _parse_dom_fast(s: str) -> DomNode:
             continue
         if kind == 4:
             t = m.group(4)
-            if bad_text(t):
+            # raw input only: an entity's expansion bypasses the check
+            if check_text and bad_text(t):
                 raise _DomFallback
+            if "&" in t:
+                t = _unescape_predefined(t)
             node = new_node(TEXT, t, order)
             order += 1
             node.parent = current
@@ -231,6 +254,77 @@ def _parse_dom_fast(s: str) -> DomNode:
     if current is not doc:
         raise _DomFallback  # unexpected EOF: general path raises
     return doc
+
+
+def _first_text_fast(s: str, name: str) -> str | None:
+    """inner_text of the first element named ``name`` in _parse_dom_fast's
+    tree of ``s`` (None when there is none), from one token scan that
+    builds no tree: the projected form of parse_dom + select_first for
+    '//name' in -e mode.
+
+    Every check of _parse_dom_fast runs here too (same _DOM_TOKEN, text
+    check, xmlns bail, end tags against a name stack, unterminated PI,
+    EOF with open elements), and the scan runs to the end of the document
+    after the match, so it accepts exactly the documents _parse_dom_fast
+    accepts and raises _DomFallback on all others: the caller then takes
+    the tree path, which raises the error or repairs the input."""
+    stack: list[str] = []
+    push = stack.append
+    pop = stack.pop
+    want = name  # None once the match is seen
+    parts: list[str] | None = None  # the match's text runs, while open
+    close_at = -1  # stack depth at which the match closes
+    found = None
+    pos = 0
+    n = len(s)
+    match = _DOM_TOKEN.match
+    bad_text = _DOM_TEXT_BAD.search
+    check_text = bad_text(s) is not None  # as in _parse_dom_fast
+    while pos < n:
+        m = match(s, pos)
+        if m is None:
+            raise _DomFallback
+        pos = m.end()
+        kind = m.lastindex
+        if kind == 3:
+            tag, attrs_raw, selfclose = m.group(1, 2, 3)
+            if attrs_raw and "xmlns" in attrs_raw:
+                raise _DomFallback
+            if selfclose:
+                if tag == want:
+                    want = None
+                    found = ""
+            else:
+                if tag == want:
+                    want = None
+                    parts = []
+                    close_at = len(stack)
+                push(tag)
+            continue
+        if kind == 4:
+            if check_text and bad_text(m.group(4)):
+                raise _DomFallback
+            if parts is not None:
+                t = m.group(4)
+                parts.append(_unescape_predefined(t) if "&" in t else t)
+            continue
+        if kind == 5:
+            if not stack or pop() != m.group(5):
+                raise _DomFallback
+            if len(stack) == close_at:
+                found = "".join(parts)
+                parts = None
+                close_at = -1
+            continue
+        if kind == 6:
+            idx = s.find("?>", pos)
+            if idx == -1:
+                raise _DomFallback
+            pos = idx + 2
+        # 7 comment, 8 directive: not part of inner_text
+    if stack:
+        raise _DomFallback
+    return found
 
 
 def parse_dom(data: bytes | str, strict: bool = False) -> DomNode:

@@ -664,8 +664,7 @@ class XPathExpr:
         # over the document root is exactly "every element named `name`
         # in document order" — a direct walk skips the whole step
         # machinery (~10-15% of the extraction hot path)
-        m = _FAST_DESC_NAME.match(query)
-        self._fast_name = m.group(1) if m else None
+        self._fast_name = fast_desc_name(query)
 
     def evaluate(self, doc: DomNode):
         if self._fast_name is not None and doc.type == DOCUMENT:
@@ -705,6 +704,13 @@ class XPathExpr:
 import functools
 
 _FAST_DESC_NAME = re.compile(r"^//([A-Za-z_][A-Za-z0-9_.\-]*)\Z")
+
+
+def fast_desc_name(query: str) -> str | None:
+    """`name` when ``query`` is the absolute '//name' shape the fast
+    route takes (no prefix, no predicates), else None."""
+    m = _FAST_DESC_NAME.match(query)
+    return m.group(1) if m else None
 
 
 @functools.lru_cache(maxsize=256)
