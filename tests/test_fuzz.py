@@ -128,37 +128,6 @@ def test_xml_format_reparses(doc):
     format_xml(out)  # must not raise
 
 
-def test_fused_formatter_differential():
-    """The fused fast path must be byte-identical (output AND errors) to
-    the general token path on a randomized construct soup."""
-    import random
-
-    from xqspark.core.fmt_xml import format_xml, format_xml_tokens
-    from xqspark.core.xmltok import GoXmlTokenizer, XmlSyntaxError
-
-    def general(text):
-        return format_xml_tokens(GoXmlTokenizer(text, strict=False).tokens(), "  ")
-
-    random.seed(1234)
-    frag = ['<a>', '</a>', '<b x="1">', '</b>', 'text', ' ', '\n', '  ',
-            '<c/>', '<d y="v w">', '</d>', '&amp;', '&bad', '<e:f>', '</e:f>',
-            '<!-- c -->', '<?pi a="b"?>', '<![CDATA[x]]>', '<g xmlns="u">',
-            '</g>', 'tail  ', '\n  ', 'x&#65;y', '<h i="a&quot;b">', '</h>',
-            '<!DOCTYPE r>', '\t', ']]>', '<k >', '</k >', '<m a="1" b="2">',
-            '</m>', 'unicodeü', '\x85', '\v', '<n><n>', '</n></n>']
-    for _ in range(1500):
-        doc = "".join(random.choice(frag) for _ in range(random.randint(1, 12)))
-        try:
-            want, werr = general(doc), None
-        except XmlSyntaxError as e:
-            want, werr = None, str(e)
-        try:
-            got, gerr = format_xml(doc), None
-        except XmlSyntaxError as e:
-            got, gerr = None, str(e)
-        assert (want, werr) == (got, gerr), repr(doc)
-
-
 _HTML_FMT_FRAGS = [
     '<div>', '</div>', '<p>', '</p>', '<p class="x">', 'text', ' ', '\n  ',
     '<b>', '</b>', '<i>', '</i>', '<a href="u">', '</a>', '<br>', '<hr/>',
@@ -355,106 +324,10 @@ def test_html_frag_soups_total():
             format_html(doc, "")
 
 
-def test_fused_dom_parse_differential():
-    """The fused DOM fast path must produce structurally identical trees
-    (and identical errors) to the general token loop, strict and lenient."""
-    import random
-
-    from xqspark.core import dom as dommod
-    from xqspark.core.dom import parse_dom
-    from xqspark.core.xmltok import XmlSyntaxError
-
-    def tree_sig(n):
-        return (n.type, n.data, n.prefix, n.namespace,
-                tuple((a.space, a.local, a.value, a.prefix) for a in n.attrs),
-                n.order, n.cdata, n.pi_inst,
-                tuple(tree_sig(c) for c in n.children))
-
-    def general(text, strict):
-        orig = dommod._parse_dom_fast
-        dommod._parse_dom_fast = lambda s: (_ for _ in ()).throw(dommod._DomFallback())
-        try:
-            return parse_dom(text, strict)
-        finally:
-            dommod._parse_dom_fast = orig
-
-    random.seed(99)
-    frag = ['<a>', '</a>', '<b x="1">', '</b>', 'text', ' ', '\n', '<c/>',
-            '<d y="v w">', '</d>', '&amp;', '&bad', '<e:f>', '</e:f>',
-            '<!-- c -->', '<?pi a="b"?>', '<![CDATA[x]]>', '<g xmlns="u">',
-            '</g>', 'x&#65;y', '<h i="a&quot;b">', '</h>', '<!DOCTYPE r>',
-            ']]>', '<k >', '</k >', '<m a="1" b="2">', '</m>', '<n><n>',
-            '</n></n>', '<p q="tab\there">', '</p>', '\x85', '-->',
-            '<!--a-b-->', '&lt;', '&gt;', '&quot;', '&apos;', '&amp;lt;',
-            'a&amp;b']
-    for strict in (False, True):
-        for _ in range(1200):
-            doc = "".join(random.choice(frag) for _ in range(random.randint(1, 10)))
-            try:
-                want, werr = tree_sig(general(doc, strict)), None
-            except XmlSyntaxError as e:
-                want, werr = None, str(e)
-            try:
-                got, gerr = tree_sig(parse_dom(doc, strict)), None
-            except XmlSyntaxError as e:
-                got, gerr = None, str(e)
-            assert (want, werr) == (got, gerr), (strict, repr(doc))
-
-
 _xmlish = st.text(
     alphabet=string.ascii_letters + " <>/=\"'&;#!?-.[]\n\t\r\x0b]" + "é\x85",
     max_size=80,
 )
-
-
-@given(_xmlish)
-@settings(max_examples=400, deadline=None)
-def test_fused_formatter_hypothesis(doc):
-    """Arbitrary text: fused and general formatter agree on bytes AND
-    errors (hypothesis shrinks any divergence to a minimal witness)."""
-    from xqspark.core.fmt_xml import format_xml, format_xml_tokens
-    from xqspark.core.xmltok import GoXmlTokenizer
-
-    try:
-        want, werr = (
-            format_xml_tokens(GoXmlTokenizer(doc, strict=False).tokens(), "  "),
-            None,
-        )
-    except XmlSyntaxError as e:
-        want, werr = None, str(e)
-    try:
-        got, gerr = format_xml(doc), None
-    except XmlSyntaxError as e:
-        got, gerr = None, str(e)
-    assert (want, werr) == (got, gerr)
-
-
-@given(_xmlish, st.booleans())
-@settings(max_examples=400, deadline=None)
-def test_fused_dom_hypothesis(doc, strict):
-    from xqspark.core import dom as dommod
-    from xqspark.core.dom import parse_dom
-
-    def tree_sig(n):
-        return (n.type, n.data, n.prefix, n.namespace,
-                tuple((a.space, a.local, a.value, a.prefix) for a in n.attrs),
-                n.order, n.cdata, n.pi_inst,
-                tuple(tree_sig(c) for c in n.children))
-
-    orig = dommod._parse_dom_fast
-    dommod._parse_dom_fast = lambda s: (_ for _ in ()).throw(dommod._DomFallback())
-    try:
-        try:
-            want, werr = tree_sig(parse_dom(doc, strict)), None
-        except XmlSyntaxError as e:
-            want, werr = None, str(e)
-    finally:
-        dommod._parse_dom_fast = orig
-    try:
-        got, gerr = tree_sig(parse_dom(doc, strict)), None
-    except XmlSyntaxError as e:
-        got, gerr = None, str(e)
-    assert (want, werr) == (got, gerr)
 
 
 def _tree_first_text(doc, query):
@@ -487,6 +360,9 @@ _PROJECTED_FRAGS = [
     '&amp;lt;', '&bad;', '&#65;', ']]>', ']]&gt;', '\r', '\r\n', '\x01',
     '<!DOCTYPE r>', '<?pi x?>', '<?xml version="1.0"?>', '<?pi',
     '<!--c-->', '<', '</', '<t', 'ü', '\x85',
+    '<d y="v w">', '</d>', '<h i="a&quot;b">', '</h>', 'x&#65;y',
+    '<m a="1" b="2">', '</m>', '<p q="tab\there">', '</p>', '<k >',
+    '</k>', '-->', '<!--a-b-->', '<n><n>', '</n></n>', '&bad',
 ]
 
 

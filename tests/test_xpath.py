@@ -213,36 +213,33 @@ def test_function_parity_sweep():
 
 
 def test_fast_descendant_name_route_matches_general():
-    """The '//name' fast route (r5) must return the identical node list
-    as the general step machinery, including duplicates-by-name at
+    """The '//name' shape routes -e to the projected token scan; it must
+    print what the tree route prints, including duplicates-by-name at
     different depths, root-child matches, and non-element name clashes
     (text content equal to the tag name must not match)."""
+    from xqspark.core.api import _print_node_content, xpath_query
     from xqspark.core.dom import parse_dom
-    from xqspark.core.xpath import XPathExpr
+    from xqspark.core.xpath import fast_desc_name, XPathExpr
 
-    doc = parse_dom(
-        b"<r><t>title</t><title>a</title><x><title>b</title>"
-        b"<y><title>c</title></y></x><title/></r>"
+    src = (
+        b"<r><t>title</t><x><title>b</title></x><title>a</title>"
+        b"<y><title>c</title></y><title/></r>"
     )
-    expr = XPathExpr("//title")
-    assert expr._fast_name == "title"
-    fast = expr.evaluate(doc)
-    expr._fast_name = None  # force the general path on the same AST
-    general = expr.evaluate(doc)
-    assert [id(n) for n in fast] == [id(n) for n in general]
-    assert len(fast) == 4
-    # prefixed and predicated shapes must NOT take the fast route
-    assert XPathExpr("//a:title")._fast_name is None
-    assert XPathExpr("//title[1]")._fast_name is None
-    assert XPathExpr("/r//title")._fast_name is None
-    assert XPathExpr("//title/text()")._fast_name is None
+    assert fast_desc_name("//title") == "title"
+    nodes = XPathExpr("//title").select(parse_dom(src))
+    assert [n.inner_text() for n in nodes] == ["b", "a", "c", ""]
+    want = _print_node_content(nodes[0], False, "  ")
+    assert xpath_query(src, "//title", single_node=True) == want == "b\n"
+    # prefixed and predicated shapes must NOT take the projected route
+    assert fast_desc_name("//a:title") is None
+    assert fast_desc_name("//title[1]") is None
+    assert fast_desc_name("/r//title") is None
+    assert fast_desc_name("//title/text()") is None
 
 
 def test_select_first_matches_select_head():
-    """select_first (early-exit -e mode) must agree with select()[0] on
-    fast-route, general, and no-match shapes — it may NOT stop parsing
-    early (the reference parses the whole document, so post-match
-    malformedness still errors; only the WALK short-circuits)."""
+    """select_first (the -e tree route) must agree with select()[0] on
+    '//name', general, and no-match shapes."""
     from xqspark.core.dom import parse_dom
     from xqspark.core.xpath import XPathExpr, compile_xpath
 

@@ -117,8 +117,9 @@ def xpath_query(
     """XPathQuery (utils.go:210-271): -x / -e / -n modes."""
     name = fast_desc_name(query) if single_node and not with_tags else None
     if name is not None:
-        # -e '//name': one validating token scan, no tree; anything the
-        # fused parse would hand to the general path takes the tree path
+        # -e '//name': one validating token scan, no tree; a page the scan
+        # rejects goes to the general token loop below, which raises the
+        # error or repairs the input
         if isinstance(data, bytes):
             data = decode_payload(data)
         try:

@@ -23,7 +23,6 @@ from .xmltok import (
     XmlSyntaxError,
     CharData,
     Comment,
-    Directive,
     EndElement,
     GoXmlTokenizer,
     ProcInst,
@@ -111,38 +110,21 @@ class DomNode:
         return f"<DomNode {self.type} {self.full_name()!r}>"
 
 
-def _new_node(t: str, d: str, o: int) -> DomNode:
-    """Inline-slot DomNode construction for the fused hot loops (skips
-    the __init__ call; semantics identical — all slots set)."""
-    node = DomNode.__new__(DomNode)
-    node.type = t
-    node.data = d
-    node.prefix = ""
-    node.namespace = ""
-    node.attrs = []
-    node.parent = None
-    node.children = []
-    node.order = o
-    node.cdata = False
-    node.pi_inst = ""
-    return node
-
-
 class _DomFallback(Exception):
-    """Input uses a construct outside the fused DOM fast path."""
+    """Input lies outside the projected '//name' scan's token subset."""
 
 
 import re as _re
 
-# Fused tokenize+build token shapes: ASCII colon-free names, double-quoted
-# attribute values without entities/CR (kept raw in the DOM), text whose
-# only entities are the five predefined ones, PIs, comments, simple
-# directives. Everything else falls back to the general Go-faithful token
-# loop on the same input (namespaces, character references and unknown
-# entities, CDATA, mismatched/unquoted constructs, malformed input).
-# The text branch is unrolled (runs of [^<&] between whole entities), so
-# an ordinary run costs one character class, not a per-character
-# alternation.
+# Token shapes of the projected '//name' scan (_first_text_fast): ASCII
+# colon-free names, double-quoted attribute values without entities/CR,
+# text whose only entities are the five predefined ones, PIs, comments,
+# simple directives. Everything else (namespaces, character references
+# and unknown entities, CDATA, mismatched/unquoted constructs, malformed
+# input) raises _DomFallback, and the caller runs the general token loop
+# on the same input. The text branch is unrolled (runs of [^<&] between
+# whole entities), so an ordinary run costs one character class, not a
+# per-character alternation.
 _DOM_TOKEN = _re.compile(
     r"(?:<(?P<start>[A-Za-z_][A-Za-z0-9_.\-]*)"
     r"(?P<attrs>(?:[ \t\n]+[A-Za-z_][A-Za-z0-9_.\-]*="
@@ -156,7 +138,6 @@ _DOM_TOKEN = _re.compile(
     r"|(?:<!(?P<directive>[A-Za-z][^>'\"<\[]*)>)"
 )
 _DOM_TEXT_BAD = _re.compile(r"[\r\x00-\x08\x0b\x0c\x0e-\x1f]|\]\]>")
-_DOM_ATTR = _re.compile(r"([A-Za-z_][A-Za-z0-9_.\-]*)=\"([^\"]*)\"")
 
 
 def _unescape_predefined(t: str) -> str:
@@ -171,103 +152,22 @@ def _unescape_predefined(t: str) -> str:
     )
 
 
-def _parse_dom_fast(s: str) -> DomNode:
-    """Regex-driven fused tokenizer+DOM builder: no token objects, order
-    assigned at creation (streaming build IS pre-order). Raises
-    _DomFallback on anything outside the fast subset; the caller reruns
-    the general path, so tree shape and error behavior are unchanged."""
-    doc = DomNode(DOCUMENT)
-    current = doc
-    order = 0
-    pos = 0
-    n = len(s)
-    match = _DOM_TOKEN.match
-    bad_text = _DOM_TEXT_BAD.search
-    # a text run is a substring of s: when s has no bad character or
-    # ']]>', no run has one, so the per-run check can be skipped
-    check_text = bad_text(s) is not None
-    attr_findall = _DOM_ATTR.findall
-    new_node = _new_node
-    while pos < n:
-        m = match(s, pos)
-        if m is None:
-            raise _DomFallback
-        pos = m.end()
-        # lastindex identifies the alternative in one attribute access
-        # (3 = the trailing (/?) group of the start-tag branch, which
-        # always participates; 4=text 5=end 6=pi 7=comment 8=directive)
-        kind = m.lastindex
-        if kind == 3:
-            name, attrs_raw, selfclose = m.group(1, 2, 3)
-            node = new_node(ELEMENT, name, order)
-            order += 1
-            if attrs_raw:
-                if "xmlns" in attrs_raw:
-                    raise _DomFallback  # namespace machinery: general path
-                node.attrs = [
-                    DomAttr("", k, v) for k, v in attr_findall(attrs_raw)
-                ]
-            node.parent = current
-            current.children.append(node)
-            if not selfclose:
-                current = node
-            continue
-        if kind == 4:
-            t = m.group(4)
-            # raw input only: an entity's expansion bypasses the check
-            if check_text and bad_text(t):
-                raise _DomFallback
-            if "&" in t:
-                t = _unescape_predefined(t)
-            node = new_node(TEXT, t, order)
-            order += 1
-            node.parent = current
-            current.children.append(node)
-            continue
-        if kind == 5:
-            if current.type != ELEMENT or current.data != m.group(5):
-                raise _DomFallback  # mismatch: repair/error in general path
-            current = current.parent
-            continue
-        if kind == 6:
-            target = m.group(6)
-            idx = s.find("?>", pos)
-            if idx == -1:
-                raise _DomFallback
-            inst = s[pos:idx].lstrip(" \t\r\n")
-            pos = idx + 2
-            node = new_node(DECLARATION if target == "xml" else PI, target, order)
-            node.pi_inst = inst
-            order += 1
-            node.parent = current
-            current.children.append(node)
-            continue
-        if kind == 7:
-            node = new_node(COMMENT, m.group(7), order)
-            order += 1
-            node.parent = current
-            current.children.append(node)
-            continue
-        if kind == 8:
-            continue  # parse_dom skips directives
-        raise _DomFallback  # unreachable
-    if current is not doc:
-        raise _DomFallback  # unexpected EOF: general path raises
-    return doc
-
-
 def _first_text_fast(s: str, name: str) -> str | None:
-    """inner_text of the first element named ``name`` in _parse_dom_fast's
-    tree of ``s`` (None when there is none), from one token scan that
-    builds no tree: the projected form of parse_dom + select_first for
-    '//name' in -e mode.
+    """inner_text of the first element named ``name`` in ``s`` (None when
+    there is none), from one token scan that builds no tree: the projected
+    form of parse_dom + select_first for '//name' in -e mode.
 
-    Every check of _parse_dom_fast runs here too (same _DOM_TOKEN, text
-    check, xmlns bail, end tags against a name stack, unterminated PI,
-    EOF with open elements), and the scan runs to the end of the document
-    after the match, so it accepts exactly the documents _parse_dom_fast
-    accepts and raises _DomFallback on all others: the caller then takes
-    the tree path, which raises the error or repairs the input."""
+    The scan accepts a document only when every token is a _DOM_TOKEN
+    shape, no raw text run holds a control character, CR or ']]>', no
+    start tag binds a namespace ('xmlns'), every end tag closes the open
+    element of the same name, every PI is terminated and no element is
+    open at EOF. It runs to the end of the document after the match, so
+    a malformed tail still rejects. On every rejection it raises
+    _DomFallback and the caller runs the general token loop (parse_dom),
+    which raises the error or repairs the input. Within the accepted
+    subset the general loop builds the tree whose inner_text this is;
+    test_fuzz.py's test_projected_first_text_* pin the two against each
+    other."""
     stack: list[str] = []
     push = stack.append
     pop = stack.pop
@@ -279,12 +179,17 @@ def _first_text_fast(s: str, name: str) -> str | None:
     n = len(s)
     match = _DOM_TOKEN.match
     bad_text = _DOM_TEXT_BAD.search
-    check_text = bad_text(s) is not None  # as in _parse_dom_fast
+    # a text run is a substring of s: when s has no bad character or
+    # ']]>', no run has one, so the per-run check can be skipped
+    check_text = bad_text(s) is not None
     while pos < n:
         m = match(s, pos)
         if m is None:
             raise _DomFallback
         pos = m.end()
+        # lastindex identifies the alternative in one attribute access
+        # (3 = the trailing (/?) group of the start-tag branch, which
+        # always participates; 4=text 5=end 6=pi 7=comment 8=directive)
         kind = m.lastindex
         if kind == 3:
             tag, attrs_raw, selfclose = m.group(1, 2, 3)
@@ -349,23 +254,14 @@ def parse_dom(data: bytes | str, strict: bool = False) -> DomNode:
     else:
         text = data
 
-    # fused fast path: within its subset, strict and lenient agree (every
-    # strict-only error construct — entities, unquoted attrs, mismatched
-    # closes — falls back)
-    try:
-        return _parse_dom_fast(text)
-    except _DomFallback:
-        pass
-
     doc = DomNode(DOCUMENT)
     current = doc
+    # nodes are created in document (pre-)order, so the creation count is
+    # the XPath document-order index
     order = 0
-    # map resolved namespace URI (or raw prefix) back to the written prefix
     for token in GoXmlTokenizer(text, strict=strict).tokens():
-        order += 1
         if isinstance(token, StartElement):
             node = DomNode(ELEMENT, token.name.local, token.name.prefix, token.name.space)
-            node.order = order
             for attr in token.attrs:
                 node.attrs.append(
                     DomAttr(attr.name.space, attr.name.local, attr.value, attr.name.prefix)
@@ -375,26 +271,21 @@ def parse_dom(data: bytes | str, strict: bool = False) -> DomNode:
         elif isinstance(token, EndElement):
             if current.parent is not None:
                 current = current.parent
+            continue
         elif isinstance(token, CharData):
             node = DomNode(TEXT, token.text)
             node.cdata = token.cdata
-            node.order = order
             current.append(node)
         elif isinstance(token, Comment):
             node = DomNode(COMMENT, token.text)
-            node.order = order
             current.append(node)
         elif isinstance(token, ProcInst):
             kind = DECLARATION if token.target == "xml" else PI
             node = DomNode(kind, token.target)
             node.pi_inst = token.inst
-            node.order = order
             current.append(node)
-        elif isinstance(token, Directive):
-            continue
-    # assign document order by pre-order walk (stable for XPath sorting)
-    idx = 0
-    for n in doc.iter_descendants():
-        n.order = idx
-        idx += 1
+        else:
+            continue  # Directive: not part of the tree
+        node.order = order
+        order += 1
     return doc

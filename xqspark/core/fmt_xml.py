@@ -34,182 +34,12 @@ def _token_full_name(name: Name, ns_aliases: dict[str, str]) -> str:
 
 
 def format_xml(data: bytes | str, indent: str = "  ") -> str:
-    """Beautify an XML document. Raises XmlSyntaxError on malformed input.
-
-    A fused tokenizer+formatter handles the common shapes (ASCII
-    unprefixed tags, double-quoted attribute values with nothing to
-    escape, entity-free text, leading PI/doctype) in a single regex-driven
-    pass with no token objects; anything else falls back to the general
-    Go-faithful token path on the SAME input, so output bytes and error
-    behavior are unchanged (differential-tested in test_fuzz)."""
+    """Beautify an XML document. Raises XmlSyntaxError on malformed input."""
     if isinstance(data, bytes):
         text = decode_payload(data)
     else:
         text = data
-    try:
-        return _format_xml_fused(text, indent)
-    except _Fallback:
-        return format_xml_tokens(GoXmlTokenizer(text, strict=False).tokens(), indent)
-
-
-class _Fallback(Exception):
-    """Input uses a construct outside the fused fast path."""
-
-
-import re as _re
-
-# One alternation per token. Attribute values may contain nothing
-# escape_text would rewrite (no " & < > ' tab nl cr, controls, surrogates,
-# U+FFFE/FFFF); names are ASCII and colon-free (no namespace machinery).
-_FUSED_TOKEN = _re.compile(
-    r"(?:<(?P<start>[A-Za-z_][A-Za-z0-9_.\-]*)"
-    r"(?P<attrs>(?:[ \t\n]+[A-Za-z_][A-Za-z0-9_.\-]*="
-    "\"[^\"&<>'\\t\\n\\r\\x00-\\x1f\\ud800-\\udfff\\ufffe\\uffff]*\")*)"
-    r"[ \t\n]*(?P<selfclose>/?)>)"
-    r"|(?P<text>[^<&]+)"
-    r"|(?:</(?P<end>[A-Za-z_][A-Za-z0-9_.\-]*)[ \t\n]*>)"
-    r"|(?:<\?(?P<pi>[A-Za-z_][A-Za-z0-9_:.\-]*))"
-    r"|(?:<!(?P<directive>[A-Za-z][^>'\"<\[]*)>)"
-)
-# raw text the general tokenizer would reject or rewrite
-_FUSED_TEXT_BAD = _re.compile(r"[\r\x00-\x08\x0b\x0c\x0e-\x1f]|\]\]>")
-_FUSED_ATTR = _re.compile(r"([A-Za-z_][A-Za-z0-9_.\-]*)=\"([^\"]*)\"")
-
-
-def _format_xml_fused(s: str, indent: str) -> str:
-    out: list[str] = []
-    write = out.append
-    level = 0
-    has_content = False
-    space_content = ""
-    last_tag_name = ""
-    start_tag_closed = True
-    newline = "\n" if indent != "" else ""
-    stack: list[str] = []
-    pos = 0
-    n = len(s)
-    match = _FUSED_TOKEN.match
-    bad_text = _FUSED_TEXT_BAD.search
-    while pos < n:
-        m = match(s, pos)
-        if m is None:
-            raise _Fallback
-        pos = m.end()
-        kind = m.lastgroup  # "selfclose" = start-tag branch (trailing group)
-        if kind == "selfclose":
-            name = m.group("start")
-            space_content = ""
-            if not start_tag_closed:
-                write(">")
-                start_tag_closed = True
-            if level > 0:
-                write(newline + indent * level)
-            attrs_raw = m.group("attrs")
-            if attrs_raw:
-                if "xmlns" in attrs_raw:
-                    raise _Fallback  # namespace bindings: general path
-                if "\t" in attrs_raw or "\n" in attrs_raw or "  " in attrs_raw:
-                    # non-canonical separators: rebuild as single spaces
-                    attrs_raw = "".join(
-                        f' {k}="{v}"' for k, v in _FUSED_ATTR.findall(attrs_raw)
-                    )
-                write("<" + name + attrs_raw)
-            else:
-                write("<" + name)
-            if m.group("selfclose"):
-                write("/>")
-                start_tag_closed = True
-                last_tag_name = ""
-                has_content = False
-            else:
-                last_tag_name = name
-                start_tag_closed = False
-                level += 1
-                has_content = False
-                stack.append(name)
-            continue
-        if kind == "text":
-            t = m.group("text")
-            if bad_text(t):
-                raise _Fallback
-            c0 = t[0]
-            if c0 not in " \t\n\v\f" and c0 <= "\x7f" and t[-1] != " ":
-                # nothing for normalize_spaces to do (exact conditions:
-                # not all-space, no ^ *\n head, no \n +$ tail, no
-                # trailing-space strip)
-                sn = t
-            else:
-                sn = normalize_spaces(t, indent, level)
-            space_content = ""
-            if sn == "":
-                if t != "" and "\n" not in t and not start_tag_closed:
-                    space_content = t
-                has_content = False
-                continue
-            has_content = True
-            if not start_tag_closed:
-                write(">")
-                start_tag_closed = True
-            # sn cannot contain & or < here, so never CDATA-wrapped
-            write(sn)
-            continue
-        if kind == "end":
-            name = m.group("end")
-            if not stack or stack[-1] != name:
-                raise _Fallback  # repair/error path: general tokenizer
-            stack.pop()
-            level -= 1
-            if not has_content:
-                if last_tag_name != name:
-                    if not start_tag_closed:
-                        write(">")
-                        start_tag_closed = True
-                    write(newline + indent * level + "</" + name + ">")
-                elif space_content != "":
-                    write(">" + space_content + "</" + name + ">")
-                    start_tag_closed = True
-                else:
-                    write("/>")
-                    start_tag_closed = True
-            else:
-                write("</" + name + ">")
-            space_content = ""
-            has_content = False
-            last_tag_name = ""
-            continue
-        if kind == "pi":
-            target = m.group("pi")
-            if level != 0:
-                # general ProcInst branch has leave-start-tag-open quirks
-                raise _Fallback
-            idx = s.find("?>", pos)
-            if idx == -1:
-                raise _Fallback  # unterminated: general path errors
-            inst = s[pos:idx].lstrip(" \t\r\n")
-            pos = idx + 2
-            write("<?" + target)
-            pi = go_trim_space(inst)
-            if pi != "":
-                for attr in pi.split(" "):
-                    parts = attr.split("=", 1)
-                    if len(parts) == 2:
-                        write(" " + parts[0] + "=" + parts[1])
-                    else:
-                        write(" " + parts[0])
-            write("?>" + newline)
-            continue
-        if kind == "directive":
-            if level != 0:
-                raise _Fallback
-            space_content = ""
-            write("<!" + m.group("directive") + ">")
-            write(newline)
-            continue
-        raise _Fallback  # unreachable
-    if stack:
-        raise _Fallback  # unexpected EOF: general path raises
-    write("\n")
-    return "".join(out)
+    return format_xml_tokens(GoXmlTokenizer(text, strict=False).tokens(), indent)
 
 
 def format_xml_tokens(tokens, indent: str = "  ") -> str:

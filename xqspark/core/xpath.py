@@ -659,21 +659,8 @@ class XPathExpr:
     def __init__(self, query: str):
         self.query = query
         self.ast = _fold_ast(_Parser(query).parse())
-        # fast route for the ubiquitous absolute '//name' shape (no
-        # prefix, no predicates): descendant-or-self::node()/child::name
-        # over the document root is exactly "every element named `name`
-        # in document order" — a direct walk skips the whole step
-        # machinery (~10-15% of the extraction hot path)
-        self._fast_name = fast_desc_name(query)
 
     def evaluate(self, doc: DomNode):
-        if self._fast_name is not None and doc.type == DOCUMENT:
-            name = self._fast_name
-            return [
-                n
-                for n in doc.iter_descendants()
-                if n.type == ELEMENT and n.data == name
-            ]
         # path/step/union evaluation already dedups and doc-sorts; no
         # re-sort here so order-producing functions (reverse) survive
         ctx = _Context(doc, 1, 1, doc)
@@ -686,17 +673,7 @@ class XPathExpr:
         return result
 
     def select_first(self, doc: DomNode):
-        """First match in document order, or None. On the '//name' fast
-        route this EARLY-EXITS the walk (the -e single-node mode of the
-        extraction headline: //title matches near the top of a page, so
-        the rest of the document is never visited); everywhere else it
-        is exactly select()[0]."""
-        if self._fast_name is not None and doc.type == DOCUMENT:
-            name = self._fast_name
-            for n in doc.iter_descendants():
-                if n.type == ELEMENT and n.data == name:
-                    return n
-            return None
+        """First match in document order, or None."""
         nodes = self.select(doc)
         return nodes[0] if nodes else None
 
@@ -707,8 +684,8 @@ _FAST_DESC_NAME = re.compile(r"^//([A-Za-z_][A-Za-z0-9_.\-]*)\Z")
 
 
 def fast_desc_name(query: str) -> str | None:
-    """`name` when ``query`` is the absolute '//name' shape the fast
-    route takes (no prefix, no predicates), else None."""
+    """`name` when ``query`` is the absolute '//name' shape (no prefix, no
+    predicates) that api.xpath_query's -e projected scan takes, else None."""
     m = _FAST_DESC_NAME.match(query)
     return m.group(1) if m else None
 
