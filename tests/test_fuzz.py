@@ -331,17 +331,17 @@ _xmlish = st.text(
 
 
 def _tree_first_text(doc, query):
-    """-e output of the tree route: parse_dom -> select_first ->
+    """-e output of the tree route: parse_dom -> select()[0] ->
     _print_node_content, with the error text on a syntax error."""
     from xqspark.core.api import _print_node_content
     from xqspark.core.dom import parse_dom
     from xqspark.core.xpath import compile_xpath
 
     try:
-        node = compile_xpath(query).select_first(parse_dom(doc))
+        nodes = compile_xpath(query).select(parse_dom(doc))
     except XmlSyntaxError as e:
         return None, str(e)
-    return ("" if node is None else _print_node_content(node, False, "  ")), None
+    return (_print_node_content(nodes[0], False, "  ") if nodes else ""), None
 
 
 def _projected_first_text(doc, query):

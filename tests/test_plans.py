@@ -240,6 +240,27 @@ def test_lsh_pairs_reuses_signature_exchange_in_final_plan(spark):
     assert "ReusedExchange" in plan, plan[:3000]
 
 
+def test_dedup_keep_is_one_join(spark):
+    """Cleaned-corpus selection is ONE left join of the doc_id scan
+    against the connected-component labels: at the CC fixpoint every
+    node has one label, so kept = label NULL or label == doc_id. The
+    finalized plan must carry exactly one join operator (an anti-join
+    plus a flag join is two)."""
+    import re
+
+    df = QUERIES["dedup_keep"](spark, SF_DIR)
+    df.collect()  # materialize THIS df so its own AQE plan finalizes
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan, plan[:500]
+    final = plan.split("== Initial Plan ==")[0]
+    joins = re.findall(
+        r"(?:SortMerge|BroadcastHash|ShuffledHash|BroadcastNestedLoop)Join"
+        r"|CartesianProduct",
+        final,
+    )
+    assert len(joins) == 1, final[:3000]
+
+
 def test_ann_recall_floor(spark):
     """VERDICT r4 #2: oracle parity can't catch a quantizer regression —
     both engines agree on a degraded recall. Pin the absolute value: the

@@ -739,10 +739,10 @@ def test_connected_components_star_rounds(spark):
         + [(500, 400)]                               # reversed pair
     )
     df = spark.createDataFrame(edges, "u long, v long")
-    got = {
-        (r["u"], r["v"])
-        for r in _connected_components(df, max_iter=12).collect()
-    }
+    rows = _connected_components(df, max_iter=12).collect()
+    got = {(r["u"], r["v"]) for r in rows}
+    # one label per node: no node appears twice in the collected list
+    assert len(rows) == len({r["u"] for r in rows})
 
     parent: dict = {}
 
@@ -804,10 +804,9 @@ def test_connected_components_random_graphs(spark):
         if not edges:
             continue
         df = spark.createDataFrame(edges, "u long, v long")
-        got = {
-            (r["u"], r["v"])
-            for r in _connected_components(df, max_iter=15).collect()
-        }
+        rows = _connected_components(df, max_iter=15).collect()
+        got = {(r["u"], r["v"]) for r in rows}
+        assert len(rows) == len({r["u"] for r in rows}), trial
         parent: dict = {}
 
         def find(x):
@@ -1031,7 +1030,9 @@ def test_dedup_pipeline_cross_op_invariants(spark):
         r["doc_id"]: r["cluster_id"]
         for r in QUERIES["dedup_clusters"](spark, sf).collect()
     }
-    kept = {r["doc_id"]: r["is_cluster_rep"] for r in QUERIES["dedup_keep"](spark, sf).collect()}
+    kept_rows = QUERIES["dedup_keep"](spark, sf).collect()
+    kept = {r["doc_id"]: r["is_cluster_rep"] for r in kept_rows}
+    assert len(kept_rows) == len(kept)  # dedup_keep repeats no doc_id
     all_ids = {
         r["doc_id"]
         for r in spark.read.parquet(f"{sf}/documents.parquet").select("doc_id").collect()

@@ -235,17 +235,3 @@ def test_fast_descendant_name_route_matches_general():
     assert fast_desc_name("//title[1]") is None
     assert fast_desc_name("/r//title") is None
     assert fast_desc_name("//title/text()") is None
-
-
-def test_select_first_matches_select_head():
-    """select_first (the -e tree route) must agree with select()[0] on
-    '//name', general, and no-match shapes."""
-    from xqspark.core.dom import parse_dom
-    from xqspark.core.xpath import XPathExpr, compile_xpath
-
-    doc = parse_dom(b"<r><a>1</a><b><a>2</a></b><c/></r>")
-    for q in ("//a", "//c", "//missing", "/r/b/a", "//a[1]"):
-        expr = XPathExpr(q)
-        nodes = expr.select(doc)
-        first = expr.select_first(doc)
-        assert first is (nodes[0] if nodes else None), q

@@ -132,10 +132,8 @@ def xpath_query(
     expr = compile_xpath(query)
 
     if single_node:
-        node = expr.select_first(doc)
-        if node is not None:
-            return _print_node_content(node, with_tags, indent)
-        return ""
+        nodes = expr.select(doc)
+        return _print_node_content(nodes[0], with_tags, indent) if nodes else ""
     if with_tags:
         return "".join(
             _print_node_content(n, True, indent) for n in expr.select(doc)

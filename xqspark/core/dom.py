@@ -155,7 +155,7 @@ def _unescape_predefined(t: str) -> str:
 def _first_text_fast(s: str, name: str) -> str | None:
     """inner_text of the first element named ``name`` in ``s`` (None when
     there is none), from one token scan that builds no tree: the projected
-    form of parse_dom + select_first for '//name' in -e mode.
+    form of parse_dom + select()[0] for '//name' in -e mode.
 
     The scan accepts a document only when every token is a _DOM_TOKEN
     shape, no raw text run holds a control character, CR or ']]>', no

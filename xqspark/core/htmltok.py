@@ -40,19 +40,6 @@ RAW_TEXT_TAGS = frozenset(
 
 _WS = " \t\n\f\r"
 
-import re as _re
-
-# Fast path for common tag shapes: double-quoted attr values without
-# entities or CR. Anything else falls back to the general parser.
-_H_FAST_TAG = _re.compile(
-    r"<([A-Za-z][A-Za-z0-9-]*)"
-    r"((?:[ \t\n\f]+[A-Za-z0-9_:.\-]+=\"[^\"&<\r]*\")*)"
-    r"[ \t\n\f]*(/?)>"
-)
-_H_FAST_ATTR = _re.compile(r"([A-Za-z0-9_:.\-]+)=\"([^\"]*)\"")
-_H_FAST_END = _re.compile(r"</([A-Za-z][A-Za-z0-9-]*)[ \t\n\f\r]*>")
-
-
 @dataclass(slots=True)
 class HText:
     text: str  # convertNewlines'd; unescaped unless raw source
@@ -255,33 +242,11 @@ class HtmlTokenizer:
             self.pos = lt
             c = s[self.pos + 1]
             if c.isascii() and c.isalpha():
-                m = _H_FAST_TAG.match(s, self.pos)
-                if m is not None:
-                    self.pos = m.end()
-                    name = m.group(1).lower()
-                    attrs_raw = m.group(2)
-                    attrs = (
-                        [(k.lower(), v) for k, v in _H_FAST_ATTR.findall(attrs_raw)]
-                        if attrs_raw
-                        else []
-                    )
-                    self_closing = bool(m.group(3))
-                    # x/net/html sets rawTag BEFORE the self-closing check:
-                    # <script/> still swallows raw text to </script>
-                    if name in RAW_TEXT_TAGS:
-                        self.raw_tag = name
-                    yield HStartTag(name, attrs, self_closing)
-                    continue
                 tok = self._read_start_tag()
                 if tok is None:
                     return  # EOF inside tag
                 yield tok
             elif c == "/":
-                m = _H_FAST_END.match(s, self.pos)
-                if m is not None:
-                    self.pos = m.end()
-                    yield HEndTag(m.group(1).lower())
-                    continue
                 if self.pos + 2 >= n:
                     yield self._text_token("</", False)
                     self.pos = n

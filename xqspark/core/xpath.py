@@ -672,11 +672,6 @@ class XPathExpr:
             raise XPathError(f"expression is not a node-set: {self.query}")
         return result
 
-    def select_first(self, doc: DomNode):
-        """First match in document order, or None."""
-        nodes = self.select(doc)
-        return nodes[0] if nodes else None
-
 
 import functools
 

@@ -3187,23 +3187,24 @@ def dedup_clusters(spark, sf_dir, max_iter: int = 12):
     training-data pipeline runs AFTER pair-finding, to pick one
     representative per duplicate cluster and drop the rest.
 
-    Scale shape: every half-round shuffle is keyed on node id only
-    (the groupBy(u).min and the join sides all hashpartition on u, so
-    AQE reuses the exchange and a small mins side broadcasts);
-    the edge set only shrinks toward the star graph (node -> component
-    min), and the method converges in O(log n) rounds on any graph —
+    Scale shape: each half-round is ONE window over ``partitionBy(u)``
+    attaching ``m = least(min(v), u)`` to every edge of ``u`` (the
+    caps' per-key-aggregate mechanism), so its one shuffle is keyed on
+    node id; the edge set only shrinks toward the star graph (node ->
+    component min), and the method converges in O(log n) rounds on any graph —
     no giant-component blowup, because a hot node's edges are REPLACED
     by edges to the component min, not multiplied. Per-iteration
-    ``localCheckpoint`` truncates the join lineage so round k's plan
+    ``localCheckpoint`` truncates the lineage so round k's plan
     does not replay rounds 1..k-1 (the same bounded-training-state
     pattern as ann_ivf_lloyd; the only driver fetch per round is a
     (count, bit_xor checksum) row for the convergence test — bit_xor,
     not sum, per the ANSI xxhash64-overflow rule). Upstream band_cap
-    already bounds node degree, so no star op sees a quadratic group.
+    already bounds node degree, so no window partition is quadratic.
 
     Output: (doc_id, cluster_id) for every doc that has at least one
     near-dup, cluster_id = MIN doc_id of its component (deterministic
-    representative: keep cluster_id, drop the rest).
+    representative: keep cluster_id, drop the rest); each doc_id
+    appears once.
 
     Large-star: every neighbor v > u re-points to m = min(N(u) + {u}).
     Small-star over down-oriented edges (u > v): every v (and u)
@@ -3220,23 +3221,17 @@ def dedup_clusters(spark, sf_dir, max_iter: int = 12):
 
 def _connected_components(edges: DataFrame, max_iter: int = 12) -> DataFrame:
     """Alternating large-star/small-star to fixpoint over an (u, v)
-    edge DataFrame; returns (u=node, v=component-min label) for every
-    node of the graph. See dedup_clusters for the scale argument."""
+    edge DataFrame; returns (u=node, v=component-min label), one row
+    per node of the graph. See dedup_clusters for the scale argument."""
     # materialize the input once: round 1 references the edge plan from
-    # four subtrees (sym union x agg + join), which would re-run an
-    # expensive upstream (e.g. the LSH band join) that many times.
-    # eager=False (r6): the RDD node is shared by all four subtrees, so
+    # both branches of the symmetric union, which would re-run an
+    # expensive upstream (e.g. the LSH band join) twice.
+    # eager=False (r6): the RDD node is shared by both branches, so
     # the first round's checksum action both computes it once and
     # materializes the checkpoint — an eager checkpoint here was one
     # extra full job per call for no added reuse
     edges = edges.localCheckpoint(eager=False)
-
-    def star_mins(nbrs: DataFrame) -> DataFrame:
-        return (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
+    star_min = F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
 
     def checksum(e: DataFrame):
         row = e.agg(
@@ -3248,8 +3243,7 @@ def _connected_components(edges: DataFrame, max_iter: int = 12) -> DataFrame:
     prev = None
     for _ in range(max_iter):
         # large-star: strictly larger neighbors re-point to the min
-        nbrs = _sym(edges)
-        mins = star_mins(nbrs)
+        nbrs = _sym(edges).withColumn("m", star_min)
         # No mid-round distinct (r6): the small-star phase ends with
         # its own distinct, which bounds the edge set identically; the
         # large-star duplicates it would have removed are cheaper to
@@ -3257,17 +3251,14 @@ def _connected_components(edges: DataFrame, max_iter: int = 12) -> DataFrame:
         # (measured 4.5 -> 4.05 s at 10x sf0.1, identical output set —
         # min() and the membership checks are duplicate-insensitive).
         edges = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
+            nbrs.filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
         )
         # small-star: orient edges (hi -> lo), everyone points to the min
-        dn = edges.select(
+        pointed = edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).filter(F.col("u") != F.col("v"))
-        mins = star_mins(dn)
-        pointed = dn.join(mins, "u")
+        ).filter(F.col("u") != F.col("v")).withColumn("m", star_min)
         edges = (
             pointed.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(pointed.select("u", F.col("m").alias("v")))
@@ -3286,11 +3277,12 @@ def _connected_components(edges: DataFrame, max_iter: int = 12) -> DataFrame:
         raise RuntimeError(
             f"connected components: no fixpoint in {max_iter} rounds"
         )
-    # edges is the star graph (node -> component min); add the roots
+    # edges is the star graph (node -> component min), distinct with
+    # u != v; the roots are distinct with u = v, so the union is too
     roots = edges.select(F.col("v").alias("u")).distinct().select(
         "u", F.col("u").alias("v")
     )
-    return edges.union(roots).distinct()
+    return edges.union(roots)
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -3691,21 +3683,24 @@ def q_dedup_keep(spark, sf_dir):
     """Cleaned-corpus selection — the last step of the near-dup
     pipeline: keep ONE representative per duplicate cluster (the
     component-min doc_id from dedup_clusters) plus every doc with no
-    near-dup; flag which kept docs are cluster representatives. Scale
-    shape: only (doc_id, cluster_id) pairs move — the anti-join and the
-    flag join shuffle bare bigints; document text is never read (the
-    scan is doc_id-only, column-pruned)."""
-    clusters = dedup_clusters(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id")
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    reps = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
-        "doc_id", F.lit(True).alias("rep")
-    )
-    kept = docs.join(drop, "doc_id", "left_anti")
-    return kept.join(reps, "doc_id", "left").select(
-        "doc_id", F.coalesce("rep", F.lit(False)).alias("is_cluster_rep")
+    near-dup; flag which kept docs are cluster representatives. One
+    left join of the doc_id scan against the labels: at the CC
+    fixpoint every node has exactly one label, so a doc is kept when
+    its label is NULL (no near-dup) or its own id (representative).
+    Only bare bigints move; document text is never read (the scan is
+    doc_id-only, column-pruned) and not spread — the join shuffles it
+    by doc_id anyway."""
+    labels = dedup_clusters(spark, sf_dir)
+    docs = _docs(spark, sf_dir, spread=False).select("doc_id")
+    return (
+        docs.join(labels, "doc_id", "left")
+        .filter(
+            F.col("cluster_id").isNull()
+            | (F.col("cluster_id") == F.col("doc_id"))
+        )
+        .select(
+            "doc_id", F.col("cluster_id").isNotNull().alias("is_cluster_rep")
+        )
     )
 
 
