@@ -178,7 +178,6 @@ def _headline_bench(sf_dir: str, cpus: int, repeats: int = 3) -> dict:
         dropped: list[int] = []
 
         def lsh_16x4():
-            cache: list = []
             lsh_pairs(
                 spark,
                 sf_dir,
@@ -186,10 +185,7 @@ def _headline_bench(sf_dir: str, cpus: int, repeats: int = 3) -> dict:
                 n_rows=4,
                 band_cap=64,
                 on_dropped=dropped.append,
-                cache_out=cache,
             ).write.format("noop").mode("overwrite").save()
-            for c in cache:
-                c.unpersist()
 
         timed(lsh_16x4, "lsh_pairs_16x4")
         # extraction throughput on a synthetic pages table at bench scale
@@ -271,15 +267,12 @@ def _skewed_caps_bench(spark, sf_dir: str, n_boiler: int = 300) -> dict:
 
         def run(name, fn):
             dropped: list[int] = []
-            cache: list = []
             t0 = time.perf_counter()
-            df = fn(dropped.append, cache)
+            df = fn(dropped.append)
             n_boiler_pairs = df.filter(
                 (F.col("doc_a") > mx) & (F.col("doc_b") > mx)
             ).count()
             sec = time.perf_counter() - t0
-            for c in cache:
-                c.unpersist()
             assert dropped and dropped[-1] > 0, (name, dropped)
             assert n_boiler_pairs == 0, (name, n_boiler_pairs)
             out[name] = {
@@ -290,22 +283,17 @@ def _skewed_caps_bench(spark, sf_dir: str, n_boiler: int = 300) -> dict:
 
         run(
             "lsh_16x4",
-            lambda cb, cache: lsh_pairs(
-                spark, d, n_bands=16, n_rows=4, band_cap=64,
-                on_dropped=cb, cache_out=cache,
+            lambda cb: lsh_pairs(
+                spark, d, n_bands=16, n_rows=4, band_cap=64, on_dropped=cb
             ),
         )
         run(
             "simhash_pairs",
-            lambda cb, cache: simhash_pairs(
-                spark, d, on_dropped=cb, cache_out=cache
-            ),
+            lambda cb: simhash_pairs(spark, d, on_dropped=cb),
         )
         run(
             "winnow_pairs",
-            lambda cb, cache: winnow_pairs(
-                spark, d, on_dropped=cb, cache_out=cache
-            ),
+            lambda cb: winnow_pairs(spark, d, on_dropped=cb),
         )
         return out
     finally:

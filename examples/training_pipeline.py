@@ -75,10 +75,8 @@ def main() -> None:
     from xqspark.queries import _connected_components, lsh_pairs, pack_chunks_df
 
     dropped = []
-    lsh_cache = []
     pairs = lsh_pairs(
-        spark, tmp_dir, band_cap=args.band_cap, on_dropped=dropped.append,
-        cache_out=lsh_cache,
+        spark, tmp_dir, band_cap=args.band_cap, on_dropped=dropped.append
     )
     cc = _connected_components(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -89,9 +87,6 @@ def main() -> None:
     kept = exact.join(losers, "doc_id", "left_anti").persist()
     counts["hot_bands_dropped"] = dropped[0] if dropped else 0
     counts["after_near_dedup"] = kept.count()
-    # the LSH band cache served its self-join; kept is materialized now
-    for cached in lsh_cache:
-        cached.unpersist()
 
     # 4. deterministic CONTENT-hash split (same recipe as q_hash_split:
     # identical text lands in the same split on every engine and run,

@@ -322,34 +322,25 @@ def test_line_dedup_clean_pass_is_map_only(spark):
     assert nothing_hot.agg(F.sum("n_dropped")).collect()[0][0] == 0
 
 
-def test_line_dedup_broadcast_mode_parity_and_map_only(spark):
-    """VERDICT r4 #3: the broadcast fallback the inline docstring
-    promises must exist. Claims: (1) at default caps both modes agree
-    exactly; (2) when hot_cap truncates, the inline mode says so
-    (on_truncated fires with the TRUE hot count) while broadcast mode
-    ignores the cap and still drops everything hot; (3) the broadcast
-    clean pass stays map-only — text never shuffles."""
+def test_line_dedup_truncation_is_reported(spark):
+    """No silent caps: when hot_cap truncates the hot set, on_truncated
+    fires with the TRUE hot count, and the truncated run really under-
+    dedups (drops fewer lines than the default, untruncated run)."""
     from xqspark.queries import line_dedup
-
-    inline = {tuple(r) for r in line_dedup(spark, SF_DIR).collect()}
-    bcast_df = line_dedup(spark, SF_DIR, mode="broadcast")
-    bcast = {tuple(r) for r in bcast_df.collect()}
-    assert inline == bcast
-
-    plan = plan_of(bcast_df)
-    assert data_exchanges(plan) == 0, plan[:1500]
-    assert "Generate" not in plan, plan[:1500]
-    assert "ArrowEvalPython" in plan or "Python" in plan  # the bc-set UDF
 
     # sf0.01 has 8 hot lines (5 nav + 3 footer variants); cap at 2
     seen = []
     trunc = line_dedup(spark, SF_DIR, hot_cap=2, on_truncated=seen.append)
     n_trunc = trunc.agg(F.sum("n_dropped")).collect()[0][0]
     assert seen == [8]  # no-silent-caps: callback carries the true count
-    n_full = bcast_df.agg(F.sum("n_dropped")).collect()[0][0]
+    full = []
+    n_full = (
+        line_dedup(spark, SF_DIR, on_truncated=full.append)
+        .agg(F.sum("n_dropped"))
+        .collect()[0][0]
+    )
+    assert full == []  # the default cap holds all 8
     assert n_trunc < n_full  # truncation really under-dedups
-    # and broadcast == inline with a cap big enough to hold everything
-    assert bcast == {tuple(r) for r in line_dedup(spark, SF_DIR, hot_cap=256).collect()}
 
 
 def test_winnow_fp_is_map_only_and_detects_shared_passages(spark):

@@ -914,16 +914,17 @@ def minhash_sig_df(
     docs = docs.filter(F.size("t") >= 3)
     hashed = docs.select(id_col, F.expr(_gram_hash_expr(3)).alias("h"))
     if n_hashes >= 8:
-        # r6: at LSH slot counts the n_hashes separate
+        # at LSH slot counts the n_hashes separate
         # array_min(transform(...)) passes dominate (each allocates a
         # shingle-sized array per doc); the Arrow kernel computes all
         # permutations as one vectorized matrix op over the
         # JVM-computed base hashes — bit-identical signatures (same md5
-        # digests, exact int64 math). The small-n JVM path below stays:
-        # on the 5000-doc sf0.1 table (local[4], noop sink, 12
-        # alternating pairs) the 4-slot JVM branch took a median 0.75 s
-        # (quartiles 0.71-0.81) and the kernel at 4 slots 0.99 s
-        # (0.93-1.01), with bit-identical signatures.
+        # digests, exact int64 math). The fork is paid for by traffic
+        # that runs both sides: perfbench neardup_dedup runs lsh_pairs
+        # 16x4 (this kernel) and dedup_keep's 2x2 lsh_pairs (the JVM
+        # branch below). A kernel-only prototype lost there: 6
+        # alternating pairs (4 vCPU, local[4]), median 2312 docs/s with
+        # the fork vs 2229 kernel-only, the fork faster in 5 of 6.
         schema = f"{id_col} long, " + ", ".join(
             f"mh{j + 1} long" for j in range(n_hashes)
         )
@@ -1058,9 +1059,10 @@ def lsh_pairs(
     result is materialized once, as an eager local checkpoint, and
     ``on_dropped`` has run by the time this returns; the returned
     DataFrame reads the checkpointed pairs. None returns the lazy plan.
-    ``cache_out`` is kept for callers that pass it and receives nothing:
-    no banded rows are persisted, and Spark's context cleaner frees the
-    checkpoint's blocks once the returned DataFrame is unreferenced.
+    ``cache_out`` receives nothing and is kept only because perfbench's
+    ``neardup_dedup`` workload passes it: no banded rows are persisted,
+    and Spark's context cleaner frees the checkpoint's blocks once the
+    returned DataFrame is unreferenced.
     """
     sig = _minhash_sig(spark, sf_dir, n_hashes=n_bands * n_rows)
     # '#' separator inside band_keys_df: mh values are variable-width
@@ -1737,7 +1739,6 @@ def line_dedup(
     sf_dir,
     k: int = 32,
     hot_cap: int = 256,
-    mode: str = "inline",
     on_truncated=None,
 ):
     """C4-style corpus-level LINE deduplication: drop every line that
@@ -1745,25 +1746,15 @@ def line_dedup(
     footer/cookie banners), keep unique content. Scale shape: the only
     full shuffle carries (md5(line), partial count) — map-side combined.
 
-    ``mode="inline"`` (shipped in the catalog): the hot set (bounded by
-    total_lines/k, then capped deterministically at ``hot_cap`` by
-    count desc, hash asc) becomes PLAN LITERALS for a map-only filter
-    over the in-row line array, so document text never moves — the same
-    driver-fetch-of-training-state pattern as the IVF centroids
-    (queries.py:_seed_centroids). If the corpus has MORE than
-    ``hot_cap`` hot lines the cap truncates (everything past it is
-    kept, i.e. under-dedup); that is never silent: a warning is logged
-    and ``on_truncated(n_hot_total)`` fires with the true hot count.
-
-    ``mode="broadcast"`` (the fallback the inline docstring promises,
-    r5): NO cap — the full hot-hash set ships to executors as a Spark
-    BROADCAST variable and an Arrow-batched pandas UDF does set-
-    membership per line. Still map-only (a projection over the scan —
-    zero Exchange, text never shuffles, plan-asserted); the cost is one
-    Python hop, which is why the literal path stays the default for the
-    small vocabularies real boilerplate produces."""
-    if mode not in ("inline", "broadcast"):
-        raise ValueError(f"line_dedup mode must be inline|broadcast: {mode}")
+    The hot set (bounded by total_lines/k, then capped deterministically
+    at ``hot_cap`` by count desc, hash asc) becomes PLAN LITERALS for a
+    map-only filter over the in-row line array, so document text never
+    moves — the same driver-fetch-of-training-state pattern as the IVF
+    centroids (queries.py:_seed_centroids). If the corpus has MORE than
+    ``hot_cap`` hot lines the cap truncates (everything past it is kept,
+    i.e. under-dedup); that is never silent: a warning is logged and
+    ``on_truncated(n_hot_total)`` fires with the true hot count. Raise
+    ``hot_cap`` for exact corpus-wide dedup of a larger hot set."""
     lines_df = _doc_lines(spark, sf_dir)
     counts = (
         _explode_nonempty(lines_df, "lines", "line")
@@ -1773,53 +1764,33 @@ def line_dedup(
         .filter(F.col("c") > k)
         .orderBy(F.desc("c"), F.asc("h"))
     )
-    if mode == "inline":
-        # hot_cap+1 so truncation is detectable without a second action
-        hot = [r["h"] for r in counts.limit(hot_cap + 1).collect()]
-        if len(hot) > hot_cap:
-            # the true count needs its own action; only pay it on the
-            # already-rare truncation path
-            n_hot_total = counts.count()
-            _LOG.warning(
-                "line_dedup: hot set truncated at hot_cap=%d (%d hot lines"
-                " total) — lines past the cap are KEPT; use"
-                " mode='broadcast' for exact corpus-wide dedup",
-                hot_cap,
-                n_hot_total,
-            )
-            if on_truncated is not None:
-                on_truncated(n_hot_total)
-            hot = hot[:hot_cap]
-    else:
-        hot = [r["h"] for r in counts.collect()]
+    # hot_cap+1 so truncation is detectable without a second action
+    hot = [r["h"] for r in counts.limit(hot_cap + 1).collect()]
+    if len(hot) > hot_cap:
+        # the true count needs its own action; only pay it on the
+        # already-rare truncation path
+        n_hot_total = counts.count()
+        _LOG.warning(
+            "line_dedup: hot set truncated at hot_cap=%d (%d hot lines"
+            " total) — lines past the cap are KEPT; raise hot_cap for"
+            " exact corpus-wide dedup",
+            hot_cap,
+            n_hot_total,
+        )
+        if on_truncated is not None:
+            on_truncated(n_hot_total)
+        hot = hot[:hot_cap]
     out = lines_df.select(
         "doc_id", F.size("lines").cast("long").alias("n_lines"), "lines"
     )
     if not hot:
         clean = F.col("lines")
-    elif mode == "inline":
+    else:
         hot_lit = "array(" + ", ".join(f"'{h}'" for h in hot) + ")"
         clean = F.expr(
             f"filter(lines, x -> NOT array_contains({hot_lit}, "
             "md5(encode(x, 'UTF-8'))))"
         )
-    else:
-        hot_bc = spark.sparkContext.broadcast(frozenset(hot))
-
-        @F.pandas_udf("array<string>")
-        def _drop_hot(lines_s):
-            import hashlib
-
-            hot_set = hot_bc.value
-            return lines_s.map(
-                lambda lines: [
-                    x
-                    for x in lines
-                    if hashlib.md5(x.encode("utf-8")).hexdigest() not in hot_set
-                ]
-            )
-
-        clean = _drop_hot("lines")
     clean_df = out.select("doc_id", "n_lines", clean.alias("clean"))
     return clean_df.select(
         "doc_id",
@@ -2032,7 +2003,6 @@ def winnow_pairs(
     fp_cap: int = 64,
     min_shared: int = 2,
     on_dropped=None,
-    cache_out: list | None = None,
 ):
     """Local-copy candidate pairs — the actual MOSS use of winnowing:
     two docs sharing ANY selected fingerprint share a passage (of at
@@ -2046,10 +2016,10 @@ def winnow_pairs(
     3,271 pairs share exactly one fingerprint, the real copy tail runs
     2..40+).
 
-    ``on_dropped(n_hot_fps)`` / ``cache_out`` follow the lsh_pairs
-    contract: no-silent-caps reporting of how many corpus-wide
-    fingerprints the cap removed, observed on the pass that computes the
-    pairs (the result comes back as an eager local checkpoint)."""
+    ``on_dropped(n_hot_fps)`` follows the lsh_pairs contract: no-silent-
+    caps reporting of how many corpus-wide fingerprints the cap removed,
+    observed on the pass that computes the pairs (the result comes back
+    as an eager local checkpoint)."""
     ex = _explode_nonempty(
         _winnow_fps(spark, sf_dir, k, w), "fps", "fp", keep=("doc_id",)
     )
@@ -2161,9 +2131,7 @@ def embedding_neardup(
     sf_dir,
     label_cap: int = 1024,
     threshold: float = 0.35,
-    n_sub: int | None = None,
     on_dropped=None,
-    cache_out: list | None = None,
 ):
     """Embedding-cosine near-duplicate pairs: self-join bucketed on the
     coarse-quantizer label (near-dups share a coarse bucket — the IVF
@@ -2175,20 +2143,14 @@ def embedding_neardup(
     Hot buckets are bounded (VERDICT r2 #2 — real embedding label
     distributions are skewed, and a dominant "misc" cluster with k
     members emits k(k-1)/2 pairs): a label whose membership exceeds
-    ``label_cap`` is either DROPPED (``n_sub=None``, mirroring
-    lsh_pairs' band_cap) or SUB-BUCKETED into ``n_sub`` salted shards
-    keyed on a deterministic md5 of vec_id — each shard stays under
-    quadratic control and near-dup pairs within a shard survive; pairs
-    straddling shards are sacrificed (the standard bounded-recall trade;
-    the DuckDB oracle twins the exact same rule). The membership count
-    is a window over the same hashpartitioning(label) the drop-mode
-    self-join needs, so the cap costs no extra shuffle of the big side;
-    sub-bucket mode re-keys the join on (label, sub) and accepts one
-    extra exchange in return for not losing hot clusters outright.
+    ``label_cap`` is DROPPED, mirroring lsh_pairs' band_cap (the DuckDB
+    oracle twins the same rule). The membership count is a window over
+    the same hashpartitioning(label) the self-join needs, so the cap
+    costs no extra shuffle of the big side.
 
-    ``on_dropped(n_hot_labels)`` + ``cache_out`` follow the lsh_pairs
-    contract (counted on the pass that runs; the result comes back as an
-    eager local checkpoint; ``cache_out`` receives nothing)."""
+    ``on_dropped(n_hot_labels)`` follows the lsh_pairs contract (counted
+    on the pass that runs; the result comes back as an eager local
+    checkpoint)."""
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
@@ -2196,43 +2158,24 @@ def embedding_neardup(
         emb.withColumn("n_label", F.count("*").over(W.partitionBy("label"))),
         "n_label", label_cap, on_dropped,
     )
-    if n_sub is None:
-        ok = sized.filter(F.col("n_label") <= label_cap).select(
-            "vec_id", "v", "label"
-        )
-        key = ["label"]
-    else:
-        sub = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.encode(F.col("vec_id").cast("string"), "UTF-8")), 1, 4
-                ),
-                16,
-                10,
-            ).cast("int"),
-            F.lit(n_sub),
-        )
-        ok = sized.select(
-            "vec_id",
-            "v",
-            "label",
-            F.when(F.col("n_label") <= label_cap, F.lit(0)).otherwise(sub).alias("sub"),
-        )
-        key = ["label", "sub"]
-    ok = _with_norm(ok, "v", "vn")
+    ok = _with_norm(
+        sized.filter(F.col("n_label") <= label_cap).select("vec_id", "v", "label"),
+        "v",
+        "vn",
+    )
     a = ok.select(
         F.col("vec_id").alias("id_a"),
         F.col("v").alias("qv"),
         F.col("vn").alias("qn"),
-        *key,
+        "label",
     )
     b = ok.select(
         F.col("vec_id").alias("id_b"),
         F.col("v").alias("nv"),
         F.col("vn").alias("nn"),
-        *key,
+        "label",
     )
-    pairs = a.join(b, key).filter(F.col("id_a") < F.col("id_b"))
+    pairs = a.join(b, "label").filter(F.col("id_a") < F.col("id_b"))
     scored = pairs.select(
         "id_a",
         "id_b",
@@ -2245,31 +2188,15 @@ def q_embedding_neardup(spark, sf_dir):
     return embedding_neardup(spark, sf_dir)
 
 
-def embedding_neardup_sql(
-    label_cap: int = 1024, threshold: float = 0.35, n_sub: int | None = None
-) -> str:
-    if n_sub is None:
-        ok = (
-            "ok AS (SELECT vec_id, v, label FROM sized "
-            f"WHERE n_label <= {label_cap})"
-        )
-        on = "a.label = b.label"
-    else:
-        ok = (
-            "ok AS (SELECT vec_id, v, label, CASE WHEN n_label <= "
-            f"{label_cap} THEN 0 ELSE CAST(('0x' || substring("
-            f"md5(vec_id::VARCHAR), 1, 4)) AS INTEGER) % {n_sub} "
-            "END AS sub FROM sized)"
-        )
-        on = "a.label = b.label AND a.sub = b.sub"
+def embedding_neardup_sql(label_cap: int = 1024, threshold: float = 0.35) -> str:
     return (
         "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings), "
         "sized AS (SELECT vec_id, v, label, count(*) OVER (PARTITION BY label) "
         "AS n_label FROM e), "
-        + ok + " "
+        f"ok AS (SELECT vec_id, v, label FROM sized WHERE n_label <= {label_cap}) "
         "SELECT a.vec_id AS id_a, b.vec_id AS id_b, "
         "round(list_cosine_similarity(a.v, b.v), 4) AS sim "
-        f"FROM ok a JOIN ok b ON {on} AND a.vec_id < b.vec_id "
+        "FROM ok a JOIN ok b ON a.label = b.label AND a.vec_id < b.vec_id "
         f"WHERE round(list_cosine_similarity(a.v, b.v), 4) >= {threshold}"
     )
 
@@ -3092,7 +3019,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     word_cap: int = 256,
     on_dropped=None,
-    cache_out: list | None = None,
 ):
     """SimHash near-duplicate pairs — the Manku/Jain/Das Sarma (WWW'07)
     block technique: two 64-bit signatures within hamming distance <= 3
@@ -3105,9 +3031,9 @@ def simhash_pairs(
     trick as lsh_pairs' band_cap. At 100 TB: one shuffle keyed on the
     16-bit words, never quadratic outside capped buckets.
 
-    ``on_dropped(n_hot_words)`` / ``cache_out`` follow the lsh_pairs
-    contract: the hot (word_idx, word_val) count is observed on the pass
-    that computes the pairs."""
+    ``on_dropped(n_hot_words)`` follows the lsh_pairs contract: the hot
+    (word_idx, word_val) count is observed on the pass that computes the
+    pairs."""
     sig = q_simhash(spark, sf_dir)
     melted = sig.select(
         "doc_id",
@@ -3365,9 +3291,9 @@ def q_unigram_logprob(spark, sf_dir, vocab_k: int = 256):
     # the Python boundary once. Per-token scores stay exact integer
     # micro-log units, so the Python sum is bit-identical to the old
     # in-row aggregate; the only float ops (one division, one round)
-    # stay JVM-side, unchanged. This is also the line_dedup
-    # mode="broadcast" scale story: vocab_k is no longer bounded by
-    # plan-literal size (VERDICT r5 #2).
+    # stay JVM-side, unchanged. vocab_k is not bounded by plan-literal
+    # size (VERDICT r5 #2): the vocabulary is a lookup per token, where
+    # line_dedup's small hot set stays an inline literal filter.
     lp_bc = spark.sparkContext.broadcast((lp, floor_lp))
 
     @F.pandas_udf("long")
