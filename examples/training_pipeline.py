@@ -63,8 +63,10 @@ def main() -> None:
     counts["after_exact_dedup"] = exact.count()
 
     # 3. MinHash+LSH near-dup drop with CLUSTER-level representative
-    # selection (r5): label each pair-graph component via alternating
-    # large-star/small-star and keep only the component-min doc_id —
+    # selection (r5): label each pair-graph component with its
+    # component-min doc_id (one driver pass when the pair graph fits
+    # the broadcast threshold, alternating large-star/small-star
+    # otherwise) and keep only that doc_id —
     # the C4/RefinedWeb-style whole-cluster drop (transitive: a~b~c
     # keeps one doc even when a and c never paired directly). Stage 3
     # reads the MATERIALIZED stage-2 output back, so later stages never

@@ -261,6 +261,27 @@ def test_dedup_keep_is_one_join(spark):
     assert len(joins) == 1, final[:3000]
 
 
+def test_dedup_keep_small_graph_runs_fewer_jobs(spark, star_rounds):
+    """A pair graph that fits the broadcast threshold is labeled in one
+    driver pass instead of star rounds: dedup_keep returns the same rows
+    and runs strictly fewer Spark jobs than with the star rounds forced
+    (threshold -1), each round of which pays its own checksum job."""
+    sc = spark.sparkContext
+    seen = {}
+    for star in (False, True):
+        group = f"dedup-keep-star-{star}"
+        sc.setJobGroup(group, group)
+        try:
+            with star_rounds(star):
+                rows = QUERIES["dedup_keep"](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        seen[star] = (sorted(map(tuple, rows)), n_jobs)
+    assert seen[False][0] == seen[True][0] and len(seen[False][0]) > 0
+    assert seen[False][1] < seen[True][1], (seen[False][1], seen[True][1])
+
+
 def test_ann_recall_floor(spark):
     """VERDICT r4 #2: oracle parity can't catch a quantizer regression —
     both engines agree on a degraded recall. Pin the absolute value: the

@@ -713,28 +713,8 @@ def test_cap_report_when_every_key_is_hot(spark, tmp_path):
     assert got.collect() == [] and dropped == [32, 0]
 
 
-def test_connected_components_star_rounds(spark):
-    """dedup_clusters' core: alternating large-star/small-star must
-    label every node with its component MIN on adversarial shapes —
-    a long path (worst case for naive label propagation: diameter 19,
-    needs multiple rounds), a star, a triangle-with-tail, and isolated
-    pairs — cross-checked against a driver-side union-find."""
-    from pyspark.sql import functions as F
-
-    from xqspark.queries import _connected_components
-
-    edges = (
-        [(i, i + 1) for i in range(100, 120)]        # path, min=100
-        + [(7, n) for n in (3, 9, 11, 13)]           # star, min=3
-        + [(200, 201), (201, 202), (202, 200), (202, 203)]  # tri+tail
-        + [(500, 400)]                               # reversed pair
-    )
-    df = spark.createDataFrame(edges, "u long, v long")
-    rows = _connected_components(df, max_iter=12).collect()
-    got = {(r["u"], r["v"]) for r in rows}
-    # one label per node: no node appears twice in the collected list
-    assert len(rows) == len({r["u"] for r in rows})
-
+def _union_find_labels(edges):
+    """Driver-side reference: {(node, component-min)} for an edge list."""
     parent: dict = {}
 
     def find(x):
@@ -748,71 +728,113 @@ def test_connected_components_star_rounds(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {(x, find(x)) for x in parent}
-    assert got == want
-    # every component labels with its minimum member
-    assert (120, 100) in got and (13, 3) in got and (203, 200) in got
-    assert (500, 400) in got and (400, 400) in got
+    return {(x, find(x)) for x in parent}
 
 
-def test_dedup_clusters_oracle_shapes(spark):
+CC_PATHS = pytest.mark.parametrize(
+    "star", [False, True], ids=["default", "star"]
+)
+
+
+@CC_PATHS
+def test_connected_components_star_rounds(spark, star_rounds, star):
+    """dedup_clusters' core must label every node with its component
+    MIN on adversarial shapes, on both paths (the one-pass driver
+    labeling every test graph takes by default, and the star rounds,
+    forced): a long path (worst case for naive label propagation:
+    diameter 19, needs multiple rounds), a star, a triangle-with-tail,
+    and isolated pairs; the empty edge set; {1-5, 2-4, 3-4, 3-5}, whose
+    round-1 small-star output passes an unsound star test; and a
+    2,000-edge path over shuffled ids (the most pointer-jumping passes)
+    — cross-checked against a driver-side union-find."""
+    import random
+
+    from xqspark.queries import _connected_components
+
+    mixed = (
+        [(i, i + 1) for i in range(100, 120)]        # path, min=100
+        + [(7, n) for n in (3, 9, 11, 13)]           # star, min=3
+        + [(200, 201), (201, 202), (202, 200), (202, 203)]  # tri+tail
+        + [(500, 400)]                               # reversed pair
+    )
+    ids = list(range(10_000, 12_001))
+    random.Random(14).shuffle(ids)
+    long_path = list(zip(ids, ids[1:]))
+    shapes = {
+        "mixed": mixed,
+        "empty": [],
+        "unsound-star-test": [(1, 5), (2, 4), (3, 4), (3, 5)],
+        "long-path": long_path,
+    }
+    with star_rounds(star):
+        for name, edges in shapes.items():
+            df = spark.createDataFrame(edges, "u long, v long")
+            rows = _connected_components(df, max_iter=12).collect()
+            got = {(r["u"], r["v"]) for r in rows}
+            # one label per node: no node appears twice in the list
+            assert len(rows) == len({r["u"] for r in rows}), name
+            assert got == _union_find_labels(edges), name
+            if name == "mixed":
+                # every component labels with its minimum member
+                assert (120, 100) in got and (13, 3) in got
+                assert (203, 200) in got
+                assert (500, 400) in got and (400, 400) in got
+
+
+def test_dedup_clusters_oracle_shapes(spark, star_rounds):
     """The catalog entry must agree with the DuckDB recursive-CTE
-    oracle at sf0.01 (also covered by the driver harness; pinned here
-    so a star-op regression fails fast in pytest)."""
+    oracle at sf0.01 on both connected-component paths (also covered by
+    the driver harness, default path only; pinned here so a regression
+    on either path fails fast in pytest)."""
     import duckdb
 
     from xqspark.queries import ORACLES, QUERIES
 
     sf = "/root/testdata/sf0.01"
-    rows = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in QUERIES["dedup_clusters"](spark, sf).collect()
-    )
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )
     want = sorted(map(tuple, con.execute(ORACLES["dedup_clusters"]).fetchall()))
-    assert rows == want and len(rows) > 0
+    assert len(want) > 0
+    for star in (False, True):
+        with star_rounds(star):
+            rows = sorted(
+                (r["doc_id"], r["cluster_id"])
+                for r in QUERIES["dedup_clusters"](spark, sf).collect()
+            )
+        assert rows == want, star
 
 
-def test_connected_components_random_graphs(spark):
+@CC_PATHS
+def test_connected_components_random_graphs(spark, star_rounds, star):
     """Property check: on seeded random graphs (sparse, dense, and
-    multi-component), the star rounds must agree with a union-find —
+    multi-component), both paths must agree with a union-find —
     including label = component MIN under arbitrary edge orientation."""
     import random
 
     from xqspark.queries import _connected_components
 
     rng = random.Random(20260817)
-    for trial in range(6):
-        n = rng.randint(5, 60)
-        m = rng.randint(1, n * 2)
-        edges = [
-            (rng.randrange(n * 3), rng.randrange(n * 3)) for _ in range(m)
-        ]
-        edges = [(u, v) for u, v in edges if u != v]
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "u long, v long")
-        rows = _connected_components(df, max_iter=15).collect()
-        got = {(r["u"], r["v"]) for r in rows}
-        assert len(rows) == len({r["u"] for r in rows}), trial
-        parent: dict = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {(x, find(x)) for x in parent}
-        assert got == want, (trial, sorted(got - want)[:5], sorted(want - got)[:5])
+    with star_rounds(star):
+        for trial in range(6):
+            n = rng.randint(5, 60)
+            m = rng.randint(1, n * 2)
+            edges = [
+                (rng.randrange(n * 3), rng.randrange(n * 3))
+                for _ in range(m)
+            ]
+            edges = [(u, v) for u, v in edges if u != v]
+            if not edges:
+                continue
+            df = spark.createDataFrame(edges, "u long, v long")
+            rows = _connected_components(df, max_iter=15).collect()
+            got = {(r["u"], r["v"]) for r in rows}
+            assert len(rows) == len({r["u"] for r in rows}), trial
+            want = _union_find_labels(edges)
+            assert got == want, (
+                trial, sorted(got - want)[:5], sorted(want - got)[:5]
+            )
 
 
 def test_c4_filter_rules_engage(spark, tmp_path):
