@@ -386,6 +386,36 @@ def test_projected_first_text_differential():
         assert _projected_first_text(cut, "//t") == _tree_first_text(cut, "//t"), repr(cut)
 
 
+# every character of _DOM_TEXT_BAD's class, plus ']]>': the page-level
+# gate (a str.translate table) must fire wherever the regex would
+_GATE_BAD = [chr(c) for c in (*range(0x00, 0x09), *range(0x0B, 0x20))] + ["]]>"]
+
+
+@pytest.mark.parametrize(
+    "bad", _GATE_BAD, ids=[b if len(b) > 1 else f"{ord(b):#04x}" for b in _GATE_BAD]
+)
+def test_projected_first_text_bad_text_gate(bad):
+    """The scan skips its per-run bad-text check on pages the gate clears,
+    so each bad character (and ']]>') is placed in every token kind that
+    can hold it: text before, inside and after the match, a comment, a
+    PI and an attribute value. The scan must print what the tree route
+    prints for each."""
+    docs = [
+        f"<r>a{bad}b<t>x</t></r>",
+        f"<r><t>x{bad}y</t></r>",
+        f"<r><t>x<b>{bad}</b></t></r>",
+        f"<r><t>x</t>a{bad}b</r>",
+        f"<r><t>x</t><!--c{bad}d--></r>",
+        f"<r><!--c{bad}d--><t>x</t></r>",
+        f"<r><t>x</t><?pi a{bad}b?></r>",
+        f'<r><t a="v{bad}w">x</t></r>',
+        f'<r><b a="v{bad}w"/><t>x</t></r>',
+    ]
+    for doc in docs:
+        for d in (doc, doc.encode()):
+            assert _projected_first_text(d, "//t") == _tree_first_text(d, "//t"), repr(doc)
+
+
 @given(
     st.one_of(_xmlish, st.lists(st.sampled_from(_PROJECTED_FRAGS), max_size=12).map("".join)),
     st.sampled_from(["//a", "//t", "//x"]),

@@ -138,6 +138,9 @@ _DOM_TOKEN = _re.compile(
     r"|(?:<!(?P<directive>[A-Za-z][^>'\"<\[]*)>)"
 )
 _DOM_TEXT_BAD = _re.compile(r"[\r\x00-\x08\x0b\x0c\x0e-\x1f]|\]\]>")
+# _DOM_TEXT_BAD's character class as a str.translate deletion table:
+# 0x00-0x08 and 0x0B-0x1F (CR included)
+_DOM_BAD_CHARS = dict.fromkeys([*range(0x00, 0x09), *range(0x0B, 0x20)])
 
 
 def _unescape_predefined(t: str) -> str:
@@ -180,8 +183,9 @@ def _first_text_fast(s: str, name: str) -> str | None:
     match = _DOM_TOKEN.match
     bad_text = _DOM_TEXT_BAD.search
     # a text run is a substring of s: when s has no bad character or
-    # ']]>', no run has one, so the per-run check can be skipped
-    check_text = bad_text(s) is not None
+    # ']]>', no run has one, so the per-run check can be skipped (one
+    # C-level translate is ~5x cheaper than the regex over the page)
+    check_text = "]]>" in s or len(s.translate(_DOM_BAD_CHARS)) != n
     while pos < n:
         m = match(s, pos)
         if m is None:

@@ -11,8 +11,10 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
   collected; url and part_key pass through as Arrow arrays), one
   pure-Python core call per document, in
   ONE task wave (defaultParallelism partitions): every Python task pays
-  ~0.19 s of worker set-up on top of its rows, so the task count is the
-  cost
+  a fixed worker set-up on top of its rows (a trivial stage at local[4]
+  costs ~50 ms more per extra wave of 4 tasks with xqspark._daemon, which
+  skips PySpark's per-task import-cache flush, ~100 ms without it), so
+  2 waves cost more than they smooth
 - per-partition lineage rows (part_key, docs, bytes, errors, checksum)
   are emitted alongside results and aggregated with a built-in hash agg
 - checkpointed resume: a completed-manifest table keyed by deterministic
@@ -69,11 +71,20 @@ EXTRACT_SCHEMA = T.StructType(
 
 
 def build_session(cpus: int | None = None, app: str = "xqspark") -> SparkSession:
+    """A local session whose Python workers run ``xqspark._daemon``.
+
+    The daemon is imported before any task ships py-files, so the workers
+    also get the ``sys.path`` entry this package was imported from (a
+    directory, or the zip of ``spark-submit --py-files``); the session is
+    local, so that path exists where the workers run."""
     master = f"local[{cpus}]" if cpus else "local[*]"
     shuffle_parts = str(max(32, (cpus or os.cpu_count() or 8)))
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return (
         SparkSession.builder.master(master)
         .appName(app)
+        .config("spark.python.daemon.module", "xqspark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", pkg_root)
         .config("spark.sql.shuffle.partitions", shuffle_parts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -260,14 +271,16 @@ def extract_pages(
     An unknown ``mode`` raises ValueError here, before any Spark job.
 
     The repartition defaults to ``defaultParallelism`` partitions, one
-    task wave — the same rule as queries._spread. Do not raise it to
-    ``spark.sql.shuffle.partitions``: every Python task runs PySpark's
-    ``worker_util.setup_spark_files``, whose ``importlib.invalidate_caches()``
-    re-reads pyspark.zip's central directory once per cached zipimporter
-    (~190 ms a task on a 4-vCPU VM, Python 3.11), so 32 tasks on 4 cores
-    pay that 8 times a pass where one wave pays it once (the JVM-only
-    task floor of ~9 ms does not apply here). AQE does not help either:
-    a repartition to a fixed count is never coalesced.
+    task wave — the same rule as queries._spread. Every Python task pays
+    a fixed worker set-up; ``xqspark._daemon`` removes its largest part
+    (``importlib.invalidate_caches()`` re-reading pyspark.zip once per
+    cached zipimporter), and what is left still makes more waves lose:
+    on a 24,000-page ``xml_title_small`` corpus (4 vCPU, local[4]) this
+    stage plus lineage took 0.76 s at 1x, 0.83 s at 2x (1x faster in 11
+    of 12 alternating pairs), 0.83 s at 3x and 0.87 s at 4x. So do not
+    raise it to ``spark.sql.shuffle.partitions`` (32 on 4 cores = 8
+    waves). AQE does not help either: a repartition to a fixed count is
+    never coalesced.
     """
     extractor = _make_extractor(mode, query, indent)  # unknown mode raises here
     df = with_part_key(pages, n_buckets)
