@@ -136,6 +136,15 @@ pages = synthesize_pages(spark, 200)
 first = run_with_resume(pages, sys.argv[1], mode="xpath-single", query="//title", n_buckets=8)
 second = run_with_resume(pages, sys.argv[1], mode="xpath-single", query="//title", n_buckets=8)
 print("XQ_SUBMIT", first["processed"], second["processed"], second["skipped_parts"])
+
+
+def user_dep(it):
+    import xq_user_dep
+
+    yield xq_user_dep.VALUE
+
+
+print("XQ_USER_DEP", *sorted(set(spark.sparkContext.parallelize(range(2), 2).mapPartitions(user_dep).collect())))
 spark.stop()
 """
 
@@ -143,11 +152,14 @@ spark.stop()
 def test_spark_submit_py_files(tmp_path):
     """The deployment path: spark-submit --py-files xqspark.zip, run from
     a directory without xqspark/ and with no PYTHONPATH, so the workers
-    (and the daemon they start from) find the package only in the zip."""
+    (and the daemon they start from) find the package only in the zip.
+    A worker PYTHONPATH the user set with --conf keeps its entries."""
     with zipfile.ZipFile(tmp_path / "xqspark.zip", "w") as z:
         for path in sorted((REPO / "xqspark").rglob("*.py")):
             z.write(path, path.relative_to(REPO).as_posix())
     (tmp_path / "job.py").write_text(_SUBMIT_JOB)
+    (tmp_path / "deps").mkdir()
+    (tmp_path / "deps" / "xq_user_dep.py").write_text("VALUE = 'user-dep'\n")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     spark_home = os.environ.get("SPARK_HOME", "/opt/spark")
     proc = subprocess.run(
@@ -156,6 +168,7 @@ def test_spark_submit_py_files(tmp_path):
             "--master", "local[2]",
             "--driver-memory", "512m",
             "--py-files", "xqspark.zip",
+            "--conf", f"spark.executorEnv.PYTHONPATH={tmp_path / 'deps'}",
             "job.py", str(tmp_path / "out"),
         ],
         cwd=tmp_path,
@@ -164,5 +177,8 @@ def test_spark_submit_py_files(tmp_path):
         text=True,
         timeout=300,
     )
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("XQ_SUBMIT")]
-    assert lines == ["XQ_SUBMIT 200 0 8"], (proc.returncode, proc.stderr[-3000:])
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("XQ_")]
+    assert lines == ["XQ_SUBMIT 200 0 8", "XQ_USER_DEP user-dep"], (
+        proc.returncode,
+        proc.stderr[-3000:],
+    )

@@ -387,7 +387,8 @@ def test_projected_first_text_differential():
 
 
 # every character of _DOM_TEXT_BAD's class, plus ']]>': the page-level
-# gate (a str.translate table) must fire wherever the regex would
+# gate (a byte deletion over the page's UTF-8 form) must fire wherever
+# the regex would, on ASCII pages and on pages with other characters
 _GATE_BAD = [chr(c) for c in (*range(0x00, 0x09), *range(0x0B, 0x20))] + ["]]>"]
 
 
@@ -398,8 +399,8 @@ def test_projected_first_text_bad_text_gate(bad):
     """The scan skips its per-run bad-text check on pages the gate clears,
     so each bad character (and ']]>') is placed in every token kind that
     can hold it: text before, inside and after the match, a comment, a
-    PI and an attribute value. The scan must print what the tree route
-    prints for each."""
+    PI and an attribute value, on an ASCII page and on one with non-ASCII
+    text. The scan must print what the tree route prints for each."""
     docs = [
         f"<r>a{bad}b<t>x</t></r>",
         f"<r><t>x{bad}y</t></r>",
@@ -411,6 +412,7 @@ def test_projected_first_text_bad_text_gate(bad):
         f'<r><t a="v{bad}w">x</t></r>',
         f'<r><b a="v{bad}w"/><t>x</t></r>',
     ]
+    docs += [d.replace("<r>", "<r>\u00e9\u4e2d", 1) for d in docs]
     for doc in docs:
         for d in (doc, doc.encode()):
             assert _projected_first_text(d, "//t") == _tree_first_text(d, "//t"), repr(doc)

@@ -35,7 +35,7 @@ def _files_key():
     root = SparkFiles._root_directory
     try:
         mtime = os.stat(root).st_mtime_ns
-    except (OSError, TypeError):
+    except OSError:
         mtime = None
     return tuple(sys.path), root, mtime
 

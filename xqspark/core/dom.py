@@ -116,6 +116,13 @@ class _DomFallback(Exception):
 
 import re as _re
 
+# The characters no raw text run or attribute value may hold: the
+# controls 0x00-0x08 and 0x0B-0x1F (CR included), as bytes and as a
+# regex class. In UTF-8 each is one byte, and no multi-byte sequence
+# holds a byte below 0x80.
+_DOM_BAD_BYTES = bytes([*range(0x00, 0x09), *range(0x0B, 0x20)])
+_DOM_BAD_CLASS = "".join(rf"\x{c:02x}" for c in _DOM_BAD_BYTES)
+
 # Token shapes of the projected '//name' scan (_first_text_fast): ASCII
 # colon-free names, double-quoted attribute values without entities/CR,
 # text whose only entities are the five predefined ones, PIs, comments,
@@ -128,7 +135,7 @@ import re as _re
 _DOM_TOKEN = _re.compile(
     r"(?:<(?P<start>[A-Za-z_][A-Za-z0-9_.\-]*)"
     r"(?P<attrs>(?:[ \t\n]+[A-Za-z_][A-Za-z0-9_.\-]*="
-    "\"[^\"&<\\r\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]*\")*)"
+    "\"[^\"&<" + _DOM_BAD_CLASS + "]*\")*)"
     r"[ \t\n]*(?P<selfclose>/?)>)"
     r"|(?P<text>[^<&]+(?:&(?:amp|lt|gt|quot|apos);[^<&]*)*"
     r"|(?:&(?:amp|lt|gt|quot|apos);[^<&]*)+)"
@@ -137,10 +144,7 @@ _DOM_TOKEN = _re.compile(
     r"|(?:<!--(?P<comment>(?:[^-]|-(?!->))*)-->)"
     r"|(?:<!(?P<directive>[A-Za-z][^>'\"<\[]*)>)"
 )
-_DOM_TEXT_BAD = _re.compile(r"[\r\x00-\x08\x0b\x0c\x0e-\x1f]|\]\]>")
-# _DOM_TEXT_BAD's character class as a str.translate deletion table:
-# 0x00-0x08 and 0x0B-0x1F (CR included)
-_DOM_BAD_CHARS = dict.fromkeys([*range(0x00, 0x09), *range(0x0B, 0x20)])
+_DOM_TEXT_BAD = _re.compile("[" + _DOM_BAD_CLASS + r"]|\]\]>")
 
 
 def _unescape_predefined(t: str) -> str:
@@ -183,9 +187,12 @@ def _first_text_fast(s: str, name: str) -> str | None:
     match = _DOM_TOKEN.match
     bad_text = _DOM_TEXT_BAD.search
     # a text run is a substring of s: when s has no bad character or
-    # ']]>', no run has one, so the per-run check can be skipped (one
-    # C-level translate is ~5x cheaper than the regex over the page)
-    check_text = "]]>" in s or len(s.translate(_DOM_BAD_CHARS)) != n
+    # ']]>', no run has one, so the per-run check can be skipped. The
+    # page test deletes the bad bytes from its UTF-8 form: ~3-4 us on a
+    # 2 KB page, ASCII or not, where the regex takes ~22 us and
+    # str.translate ~97 us once the page has one non-ASCII character
+    b = s.encode("utf-8", "surrogatepass")
+    check_text = "]]>" in s or len(b.translate(None, _DOM_BAD_BYTES)) != len(b)
     while pos < n:
         m = match(s, pos)
         if m is None:

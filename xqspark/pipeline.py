@@ -73,18 +73,19 @@ EXTRACT_SCHEMA = T.StructType(
 def build_session(cpus: int | None = None, app: str = "xqspark") -> SparkSession:
     """A local session whose Python workers run ``xqspark._daemon``.
 
-    The daemon is imported before any task ships py-files, so the workers
-    also get the ``sys.path`` entry this package was imported from (a
-    directory, or the zip of ``spark-submit --py-files``); the session is
+    Like the SQL settings below, ``spark.python.daemon.module`` is set
+    over any value from spark-submit or spark-defaults. The daemon is
+    imported before any task ships py-files, so the workers' PYTHONPATH
+    also gets the ``sys.path`` entry this package was imported from (a
+    directory, or the zip of ``spark-submit --py-files``), appended to
+    any ``spark.executorEnv.PYTHONPATH`` already set; the session is
     local, so that path exists where the workers run."""
     master = f"local[{cpus}]" if cpus else "local[*]"
     shuffle_parts = str(max(32, (cpus or os.cpu_count() or 8)))
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app)
         .config("spark.python.daemon.module", "xqspark._daemon")
-        .config("spark.executorEnv.PYTHONPATH", pkg_root)
         .config("spark.sql.shuffle.partitions", shuffle_parts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -95,6 +96,14 @@ def build_session(cpus: int | None = None, app: str = "xqspark") -> SparkSession
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # the environment every Python function ships to its workers, read
+    # from spark.executorEnv.* when the context was made
+    env = spark.sparkContext.environment
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if pkg_root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, pkg_root])
+    return spark
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
