@@ -90,6 +90,65 @@ def test_queries_and_oracles_key_order_identical():
     assert list(e.queries()) == list(e.oracle_sql())
 
 
+def test_every_xqspark_module_is_reached():
+    """Every module under xqspark/ is reached from a non-test entry point
+    through imports (absolute, relative, function-local) or an
+    "xqspark.<mod>" string (xqspark._daemon is reached only through
+    spark.python.daemon.module). A module only tests import is code that
+    nothing here runs: delete it, or add the workload that runs it."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    modules = {}
+    for p in (root / "xqspark").rglob("*.py"):
+        parts = p.relative_to(root).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        modules[".".join(parts)] = p
+
+    def package_of(name):
+        return name if modules[name].name == "__init__.py" else name.rpartition(".")[0]
+
+    def names_in(path, importer):
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    if importer is None:
+                        continue
+                    pkg = package_of(importer).split(".")
+                    pkg = pkg[: len(pkg) - node.level + 1]
+                    base = ".".join(pkg + ([base] if base else []))
+                yield base
+                yield from (f"{base}.{a.name}" for a in node.names)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                yield from re.findall(r"\bxqspark(?:\.\w+)+", node.value)
+
+    roots = [root / "__spark_entry__.py", root / "bench.py", root / "bench_extra.py"]
+    roots += sorted((root / "perfbench").rglob("*.py"))
+    roots += sorted((root / "examples").glob("*.py"))
+    roots += sorted((root / "tools").glob("*.py"))
+    todo = [(p, None) for p in roots]
+    todo += [(modules[m], m) for m in ("xqspark.cli", "xqspark.__main__")]
+    reached = {"xqspark.cli", "xqspark.__main__"}
+    while todo:
+        path, importer = todo.pop()
+        for name in names_in(path, importer):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                mod = ".".join(parts[:i])
+                if mod in modules and mod not in reached:
+                    reached.add(mod)
+                    todo.append((modules[mod], mod))
+
+    assert sorted(set(modules) - reached) == []
+
+
 # Every token op, on texts whose whitespace edges Spark's split(trim(...))
 # turns into '' tokens: a leading newline, a trailing tab, empty text
 # (twice in a row, so jaccard_adjacent divides two empty sets) and

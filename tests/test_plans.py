@@ -140,36 +140,6 @@ def test_whole_stage_codegen_on_relational_path(spark):
     assert "*(" in plan and "isFinalPlan=true" in plan
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path_factory):
-    """Co-located join: two tables bucketed on the same key join with NO
-    Exchange in the plan (the 100 TB strategy for repeated key joins)."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from xqspark.pipeline import write_bucketed
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # a fresh in-memory metastore can't see orphaned locations from a
-    # previous session — clear them
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in ("bkt_a", "bkt_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    a = spark.range(1000).withColumnRenamed("id", "part_key")
-    b = spark.range(1000).withColumnRenamed("id", "part_key").withColumn(
-        "v", F.col("part_key") * 2
-    )
-    write_bucketed(a, "bkt_a", n_buckets=8)
-    write_bucketed(b, "bkt_b", n_buckets=8)
-    joined = spark.table("bkt_a").join(spark.table("bkt_b"), "part_key")
-    plan = plan_of(joined)
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    assert "Exchange" not in plan  # bucketing makes the join co-located
-    assert joined.count() == 1000
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
 def test_pack_chunks_no_global_data_window(spark):
     """Two-phase distributed cumsum: every window sorted over the data
     (doc_id) must be bin-partitioned; only the n_bins-row offsets table

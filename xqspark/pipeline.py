@@ -182,21 +182,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_bucketed(
-    df: DataFrame, table: str, bucket_col: str = "part_key", n_buckets: int = 64
-) -> None:
-    """Persist a table bucketed on its join/agg key: repeated joins and
-    aggregations on ``bucket_col`` then run shuffle-free (co-located),
-    which is the 100 TB play for results/manifest/golden-compare tables
-    that are joined every round."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
-
-
 def with_host_salt(df: DataFrame, salts: int | None = None) -> DataFrame:
     """url-host + deterministic salt columns for skew-defusing repartition.
 
@@ -299,10 +284,10 @@ def extract_pages(
         nparts = repartition_to or df.sparkSession.sparkContext.defaultParallelism
         df = df.repartition(nparts, "host", "salt")
     # repartition_to == 0: caller already partitioned the input (e.g. the
-    # steady-state bench times the UDF stage without the one-time exchange,
-    # and streaming avoids a per-microbatch stateful exchange) — host/salt
-    # are never computed. Either way map_docs projects the input down to
-    # url, part_key and html, so the Arrow batches carry only those.
+    # steady-state bench times the UDF stage without the one-time
+    # exchange) — host/salt are never computed. Either way map_docs
+    # projects the input down to url, part_key and html, so the Arrow
+    # batches carry only those.
 
     def one(payload):
         if payload is None:

@@ -901,19 +901,12 @@ def _minhash_sig(spark, sf_dir, n_hashes: int = 4) -> DataFrame:
     return minhash_sig_df(_docs(spark, sf_dir), n_hashes=n_hashes)
 
 
-def minhash_sig_df(
-    df: DataFrame,
-    n_hashes: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The signature stage over an arbitrary DataFrame (batch OR a
-    foreachBatch microbatch) — same map-only projection as _minhash_sig;
-    shared so incremental ingestion signs documents with bit-identical
-    constants to the batch catalog."""
-    docs = df.select(id_col, _tokens(text_col).alias("t"))
+def minhash_sig_df(df: DataFrame, n_hashes: int = 4) -> DataFrame:
+    """The signature stage of _minhash_sig over any (doc_id, text)
+    DataFrame: (doc_id, mh1..mhN)."""
+    docs = df.select("doc_id", _tokens("text").alias("t"))
     docs = docs.filter(F.size("t") >= 3)
-    hashed = docs.select(id_col, F.expr(_gram_hash_expr(3)).alias("h"))
+    hashed = docs.select("doc_id", F.expr(_gram_hash_expr(3)).alias("h"))
     if n_hashes >= 8:
         # at LSH slot counts the n_hashes separate
         # array_min(transform(...)) passes dominate (each allocates a
@@ -926,11 +919,11 @@ def minhash_sig_df(
         # branch below). A kernel-only prototype lost there: 6
         # alternating pairs (4 vCPU, local[4]), median 2312 docs/s with
         # the fork vs 2229 kernel-only, the fork faster in 5 of 6.
-        schema = f"{id_col} long, " + ", ".join(
+        schema = "doc_id long, " + ", ".join(
             f"mh{j + 1} long" for j in range(n_hashes)
         )
         return map_arrow(
-            hashed, ["h"], _minhash_kernel(n_hashes), schema, keep=(id_col,)
+            hashed, ["h"], _minhash_kernel(n_hashes), schema, keep=("doc_id",)
         )
     mh = [
         F.expr(
@@ -938,31 +931,7 @@ def minhash_sig_df(
         ).alias(f"mh{k}")
         for k, (a, b) in enumerate(_mh_params(n_hashes), start=1)
     ]
-    return hashed.select(id_col, *mh)
-
-
-def band_keys_df(
-    sig: DataFrame, n_bands: int = 2, n_rows: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, band) stream from a signature DataFrame — the '#'-separated
-    md5 band keys lsh_pairs uses, factored so incremental ingestion
-    buckets into the SAME band space as the batch pair-finder."""
-    band_exprs = [
-        F.md5(
-            F.encode(
-                F.concat_ws(
-                    "#",
-                    *[
-                        F.col(f"mh{b * n_rows + r + 1}").cast("string")
-                        for r in range(n_rows)
-                    ],
-                ),
-                "UTF-8",
-            )
-        )
-        for b in range(n_bands)
-    ]
-    return sig.select(id_col, F.explode(F.array(*band_exprs)).alias("band"))
+    return hashed.select("doc_id", *mh)
 
 
 def _minhash_sql_body(n_hashes: int = 4) -> str:
@@ -1066,9 +1035,24 @@ def lsh_pairs(
     returned DataFrame is unreferenced.
     """
     sig = _minhash_sig(spark, sf_dir, n_hashes=n_bands * n_rows)
-    # '#' separator inside band_keys_df: mh values are variable-width
-    # decimals, so plain concat would alias ("1","23") with ("12","3")
-    bands = band_keys_df(sig, n_bands, n_rows)
+    # '#' separator: mh values are variable-width decimals, so plain
+    # concat would alias ("1","23") with ("12","3")
+    band_exprs = [
+        F.md5(
+            F.encode(
+                F.concat_ws(
+                    "#",
+                    *[
+                        F.col(f"mh{b * n_rows + r + 1}").cast("string")
+                        for r in range(n_rows)
+                    ],
+                ),
+                "UTF-8",
+            )
+        )
+        for b in range(n_bands)
+    ]
+    bands = sig.select("doc_id", F.explode(F.array(*band_exprs)).alias("band"))
     sized, finish = _report_hot(
         bands.withColumn("n_band", F.count("*").over(W.partitionBy("band"))),
         "n_band", band_cap, on_dropped,
