@@ -477,6 +477,190 @@ def test_projected_first_text_bench_pages(tmp_path):
     assert sum("&" in (o[0] or "") for o in outs) > 0  # title entities decode
 
 
+
+# pages whose match settles early and whose tail expat refuses while the
+# scan's loop accepts it: the C tail check says no, and the same loop
+# goes on from where it stopped
+_TAIL_REFUSED = [
+    "<r><t>x</t></r><r/>",  # a second root
+    "<r><t>x</t></r>tail",  # text after the root
+    "<r><t>x</t><!--a--b--></r>",  # '--' inside a comment
+    "<r><t>x</t><?pi!x?></r>",  # no space after the PI target
+    '<r><t>x</t><b c="1" c="2"/></r>',  # a duplicate attribute
+    "<r><t>x</t></r><!DOCTYPE r>",  # a doctype after the root
+]
+# whole elements: the scan's loop accepts only the first two; expat also
+# accepts the namespace binding and the CR, which the C tail check must
+# therefore never see (the page gate and the "xmlns" test keep them out)
+_TAIL_WELL_FORMED = ['<b>y</b>', '<c d="e"/>', '<a xmlns="u"/>', '<b>\r\n</b>', '<b>]]></b>']
+
+
+def _count_tail(monkeypatch):
+    """Wrap dom._tail_accepts; the returned Counter counts its answers."""
+    from collections import Counter
+
+    from xqspark.core import dom
+
+    seen = Counter()
+    real = dom._tail_accepts
+
+    def counted(s, pos, b):
+        ok = real(s, pos, b)
+        seen[ok] += 1
+        return ok
+
+    monkeypatch.setattr(dom, "_tail_accepts", counted)
+    return seen
+
+
+def test_projected_first_text_tail_resumes(monkeypatch):
+    """The C tail check accepts a well-formed tail; on each refused tail
+    the loop resumes and still prints what the tree route prints."""
+    from xqspark.core.dom import _first_text_fast
+
+    seen = _count_tail(monkeypatch)
+    for doc in _TAIL_REFUSED:
+        assert _first_text_fast(doc, "t") == "x", doc  # the loop accepted it
+        assert _projected_first_text(doc, "//t") == _tree_first_text(doc, "//t"), doc
+    assert seen == {False: 2 * len(_TAIL_REFUSED)}
+    for doc in ("<r><t>x</t><b/>y</r>", '<r><t/><b c="1">&amp;</b><?pi x?><!--c--></r>'):
+        assert _projected_first_text(doc, "//t") == _tree_first_text(doc, "//t"), doc
+    assert seen[True] == 2
+    # rejected by both checks: the loop raises and the tree route answers
+    for doc in ("<r><t>x</t><a></b></r>", "<r><t>x</t><a>", "<r><t>x</t>&#65;</r>"):
+        assert _projected_first_text(doc, "//t") == _tree_first_text(doc, "//t"), doc
+    assert seen[True] == 2
+
+
+def _scan_outcome(doc, name):
+    """_first_text_fast's answer, with _DomFallback standing for a raise."""
+    from xqspark.core.dom import _DomFallback, _first_text_fast
+
+    try:
+        return _first_text_fast(doc, name)
+    except _DomFallback:
+        return _DomFallback
+
+
+def test_projected_first_text_tail_differential(monkeypatch):
+    """Random soups over the fragment lists, each after a settled match:
+    the scan with its C tail check answers (text or fallback) what the
+    scan's loop alone answers, prints what the tree route prints, and both
+    outcomes of the check occur."""
+    import random
+
+    from xqspark.core import dom
+
+    seen = _count_tail(monkeypatch)
+    counted = dom._tail_accepts
+    random.seed(1717)
+    frags = _PROJECTED_FRAGS + _TAIL_REFUSED + _TAIL_WELL_FORMED
+    for _ in range(3000):
+        tail = "".join(random.choice(frags) for _ in range(random.randint(1, 6)))
+        doc = "<r><t>x</t>" + tail + random.choice(["</r>", ""])
+        monkeypatch.setattr(dom, "_tail_accepts", lambda s, pos, b: False)
+        loop_only = _scan_outcome(doc, "t")
+        monkeypatch.setattr(dom, "_tail_accepts", counted)
+        assert _scan_outcome(doc, "t") == loop_only, repr(doc)
+        assert _projected_first_text(doc, "//t") == _tree_first_text(doc, "//t"), repr(doc)
+    assert seen[True] > 100 and seen[False] > 100, seen
+
+
+def _token_walk_end(s, pos):
+    """Where the scan's loop stops tokenizing s from pos: _DOM_TOKEN
+    token by token, a PI running to the first '?>'."""
+    from xqspark.core.dom import _DOM_TOKEN
+
+    while pos < len(s):
+        m = _DOM_TOKEN.match(s, pos)
+        if m is None:
+            return pos
+        end = m.end()
+        if m.lastindex == 6:
+            idx = s.find("?>", end)
+            if idx == -1:
+                return pos
+            end = idx + 2
+        pos = end
+    return pos
+
+
+def test_projected_tail_regex_matches_token_walk():
+    """_DOM_TAIL and _DOM_TOKEN are built from the same shapes; on the
+    differential corpus, from every offset, one _DOM_TAIL.match stops
+    where the token-by-token walk stops."""
+    import random
+
+    from xqspark.core.dom import _DOM_TAIL
+
+    random.seed(5151)
+    frags = _PROJECTED_FRAGS + _TAIL_REFUSED
+    for _ in range(1500):
+        doc = "".join(random.choice(frags) for _ in range(random.randint(1, 10)))
+        for pos in range(len(doc) + 1):
+            assert _DOM_TAIL.match(doc, pos).end() == _token_walk_end(doc, pos), (
+                repr(doc),
+                pos,
+            )
+
+
+def test_projected_first_text_entity_pages(monkeypatch):
+    """DTD entity pages (a billion-laughs page, an internal entity used in
+    the match) print what the tree route prints, fast, and expat never
+    reads a DTD: the tail regex refuses any '[' in a directive first."""
+    import time
+
+    from xqspark.core import dom
+
+    lol = "".join(
+        f'<!ENTITY lol{i} "{f"&lol{i - 1};" * 10}">' for i in range(1, 10)
+    )
+    dtd = f'<!DOCTYPE lolz [<!ENTITY lol0 "lol">{lol}]>'
+    docs = [
+        f"<?xml version=\"1.0\"?>\n{dtd}\n<lolz><title>&lol9;</title></lolz>",
+        '<!DOCTYPE r [<!ENTITY e "x">]><r><title>&e;</title></r>',
+        f"<lolz><title>t</title></lolz>{dtd}",
+        f"<lolz><title>t</title>{dtd}<x>&lol9;</x></lolz>",
+    ]
+    parsers = []
+    real = dom._expat_parser
+    monkeypatch.setattr(dom, "_expat_parser", lambda enc: parsers.append(enc) or real(enc))
+    for doc in docs:
+        for d in (doc, doc.encode()):
+            t0 = time.perf_counter()
+            assert _projected_first_text(d, "//title") == _tree_first_text(d, "//title"), d
+            assert time.perf_counter() - t0 < 1.0
+    assert parsers == []
+    assert _projected_first_text("<r><title>t</title><x/></r>", "//title") == ("t\n", None)
+    assert parsers == ["utf-8"]
+
+
+def test_projected_first_text_big_page_memory(monkeypatch):
+    """A ~5 MB well-formed feed page goes through the C tail check, and
+    the traced peak stays within a small multiple of the page size."""
+    import tracemalloc
+
+    seen = _count_tail(monkeypatch)
+    items = "".join(
+        f'<item id="{i}"><title>t {i} &amp; x</title><link>http://e/{i}</link>'
+        f"<description>some words here {i}</description></item>\n"
+        for i in range(40000)
+    )
+    page = (
+        '<?xml version="1.0" encoding="utf-8"?>\n<rss version="2.0"><channel>'
+        "<title>Feed</title>" + items + "</channel></rss>"
+    )
+    assert len(page) > 5_000_000
+    tracemalloc.start()
+    try:
+        out = xpath_query(page, "//title", single_node=True)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out == "Feed\n"
+    assert seen == {True: 1}
+    assert peak < 3 * len(page), peak
+
 @settings(max_examples=150, deadline=None)
 @given(st.text(max_size=200), st.text(max_size=40))
 def test_robots_total(doc, path):

@@ -4,8 +4,9 @@ import pathlib
 
 import pytest
 
+from xqspark.core.api import to_json
 from xqspark.core.dom import parse_dom
-from xqspark.core.xml2json import node_to_json, text_to_json, xml_to_json
+from xqspark.core.xml2json import node_to_json
 from xqspark.core.xmltok import XmlSyntaxError
 
 FIXTURES = pathlib.Path(__file__).parent / "fixtures" / "xml2json"
@@ -23,7 +24,7 @@ FIXTURES = pathlib.Path(__file__).parent / "fixtures" / "xml2json"
 def test_xml2json_golden(src, expected, depth):
     data = (FIXTURES / src).read_bytes()
     want = (FIXTURES / expected).read_bytes().decode("utf-8")
-    assert xml_to_json(data, depth=depth) == want
+    assert to_json(data, depth=depth) == want
 
 
 def test_cdata_support():
@@ -39,10 +40,11 @@ def test_process_as_json_cases():
     doc = parse_dom("<html><body><p>text</p></body></html>", strict=True)
     assert node_to_json(doc, -1) == {"html": {"body": {"p": "text"}}}
 
-    assert text_to_json("text") == '{\n  "text": "text"\n}\n'
+    # the text branch: -j reaches it only on an empty read, like the reference
+    assert to_json("") == '{\n  "text": ""\n}\n'
 
     with pytest.raises(XmlSyntaxError):
-        xml_to_json("thinking>\nI'll analyze each command and its output:\n</thinking>")
+        to_json("thinking>\nI'll analyze each command and its output:\n</thinking>")
 
     combined = "Thank you\n<thinking>\n1. woop\n</thinking>\n\nBye."
     doc = parse_dom(combined, strict=True)

@@ -115,6 +115,7 @@ class _DomFallback(Exception):
 
 
 import re as _re
+from pyexpat import ExpatError as _ExpatError, ParserCreate as _expat_parser
 
 # The characters no raw text run or attribute value may hold: the
 # controls 0x00-0x08 and 0x0B-0x1F (CR included), as bytes and as a
@@ -131,18 +132,41 @@ _DOM_BAD_CLASS = "".join(rf"\x{c:02x}" for c in _DOM_BAD_BYTES)
 # input) raises _DomFallback, and the caller runs the general token loop
 # on the same input. The text branch is unrolled (runs of [^<&] between
 # whole entities), so an ordinary run costs one character class, not a
-# per-character alternation.
-_DOM_TOKEN = _re.compile(
-    r"(?:<(?P<start>[A-Za-z_][A-Za-z0-9_.\-]*)"
-    r"(?P<attrs>(?:[ \t\n]+[A-Za-z_][A-Za-z0-9_.\-]*="
+# per-character alternation. The shapes are written once: _DOM_TOKEN
+# captures their parts for the scan's loop, _DOM_TAIL is the same
+# alternatives without groups for the C tail check.
+_DOM_NAME = r"[A-Za-z_][A-Za-z0-9_.\-]*"
+# [^<&] written as ranges: sre then tests a bitmap, ~3.5 ns a character
+# where its negated two-literal form takes ~7.6 ns, and text is most of
+# a page
+_DOM_TEXT_CHAR = r"[\x00-%'-;=-\U0010ffff]"
+_DOM_ENTITY = "&(?:amp|lt|gt|quot|apos);"
+_DOM_PI = r"<\?(?P<pi>[A-Za-z_][A-Za-z0-9_:.\-]*)"
+_DOM_SHAPES = (
+    "<(?P<start>" + _DOM_NAME + ")"
+    r"(?P<attrs>(?:[ \t\n]+" + _DOM_NAME + "="
     "\"[^\"&<" + _DOM_BAD_CLASS + "]*\")*)"
-    r"[ \t\n]*(?P<selfclose>/?)>)"
-    r"|(?P<text>[^<&]+(?:&(?:amp|lt|gt|quot|apos);[^<&]*)*"
-    r"|(?:&(?:amp|lt|gt|quot|apos);[^<&]*)+)"
-    r"|(?:</(?P<end>[A-Za-z_][A-Za-z0-9_.\-]*)[ \t\n]*>)"
-    r"|(?:<\?(?P<pi>[A-Za-z_][A-Za-z0-9_:.\-]*))"
-    r"|(?:<!--(?P<comment>(?:[^-]|-(?!->))*)-->)"
-    r"|(?:<!(?P<directive>[A-Za-z][^>'\"<\[]*)>)"
+    r"[ \t\n]*(?P<selfclose>/?)>",
+    f"(?P<text>{_DOM_TEXT_CHAR}+(?:{_DOM_ENTITY}{_DOM_TEXT_CHAR}*)*"
+    f"|(?:{_DOM_ENTITY}{_DOM_TEXT_CHAR}*)+)",
+    "</(?P<end>" + _DOM_NAME + r")[ \t\n]*>",
+    _DOM_PI,
+    r"<!--(?P<comment>(?:[^-]|-(?!->))*)-->",
+    r"<!(?P<directive>[A-Za-z][^>'\"<\[]*)>",
+)
+_DOM_TOKEN = _re.compile("|".join(f"(?:{p})" for p in _DOM_SHAPES))
+# (?>T)*+ over the same alternatives: the atomic group commits each token
+# to the match _DOM_TOKEN.match would return, and the possessive repeat
+# stops where the scan's loop would first fail, so .end() == len(s)
+# exactly when the loop would tokenize the rest of s. The PI alternative
+# runs to the first '?>', as the loop's s.find("?>") does.
+_DOM_TAIL = _re.compile(
+    "(?>"
+    + "|".join(
+        _re.sub(r"\(\?P<\w+>", "(?:", p + (r"(?s:.*?)\?>" if p is _DOM_PI else ""))
+        for p in _DOM_SHAPES
+    )
+    + ")*+"
 )
 _DOM_TEXT_BAD = _re.compile("[" + _DOM_BAD_CLASS + r"]|\]\]>")
 
@@ -159,6 +183,26 @@ def _unescape_predefined(t: str) -> str:
     )
 
 
+def _tail_accepts(s: str, pos: int, b: bytes) -> bool:
+    """True when the scan's loop would accept s[pos:] after a settled
+    match, from two C calls instead of the per-token loop. The
+    _DOM_TAIL call comes first, and that order is an invariant: it
+    admits only _DOM_TOKEN shapes, whose directives hold no '[', so
+    expat never reads a DTD internal subset or an entity declaration.
+    Within those shapes, expat accepting the page's UTF-8 form ``b``
+    (its declared encoding overridden) means every end tag closes the
+    open element of its name and none is open at EOF. Expat also refuses
+    pages the loop accepts (two roots, text outside the root, '--' in a
+    comment, a duplicate attribute); False then only sends the loop on."""
+    if _DOM_TAIL.match(s, pos).end() != len(s):
+        return False
+    try:
+        _expat_parser("utf-8").Parse(b, True)
+    except _ExpatError:
+        return False
+    return True
+
+
 def _first_text_fast(s: str, name: str) -> str | None:
     """inner_text of the first element named ``name`` in ``s`` (None when
     there is none), from one token scan that builds no tree: the projected
@@ -168,13 +212,18 @@ def _first_text_fast(s: str, name: str) -> str | None:
     shape, no raw text run holds a control character, CR or ']]>', no
     start tag binds a namespace ('xmlns'), every end tag closes the open
     element of the same name, every PI is terminated and no element is
-    open at EOF. It runs to the end of the document after the match, so
-    a malformed tail still rejects. On every rejection it raises
-    _DomFallback and the caller runs the general token loop (parse_dom),
-    which raises the error or repairs the input. Within the accepted
-    subset the general loop builds the tree whose inner_text this is;
-    test_fuzz.py's test_projected_first_text_* pin the two against each
-    other."""
+    open at EOF. A malformed tail after the match still rejects. Once the
+    match is settled (closed, or self-closed) on a page the bad-text gate
+    cleared and that holds no "xmlns", _tail_accepts checks the rest in C:
+    _DOM_TAIL first, then expat, an order that is an invariant (the regex
+    keeps DTD internal subsets and entity declarations away from expat).
+    When it refuses, the same loop goes on from where it stopped, so the
+    returned text always comes from this loop. On every rejection it
+    raises _DomFallback and the caller runs the general token loop
+    (parse_dom), which raises the error or repairs the input. Within the
+    accepted subset the general loop builds the tree whose inner_text this
+    is; test_fuzz.py's test_projected_first_text_* pin the two against
+    each other."""
     stack: list[str] = []
     push = stack.append
     pop = stack.pop
@@ -193,6 +242,8 @@ def _first_text_fast(s: str, name: str) -> str | None:
     # str.translate ~97 us once the page has one non-ASCII character
     b = s.encode("utf-8", "surrogatepass")
     check_text = "]]>" in s or len(b.translate(None, _DOM_BAD_BYTES)) != len(b)
+    # whether the settled match may hand the rest of the page to C
+    tail_c = not check_text and "xmlns" not in s
     while pos < n:
         m = match(s, pos)
         if m is None:
@@ -210,6 +261,8 @@ def _first_text_fast(s: str, name: str) -> str | None:
                 if tag == want:
                     want = None
                     found = ""
+                    if tail_c and pos < n and _tail_accepts(s, pos, b):
+                        return found
             else:
                 if tag == want:
                     want = None
@@ -231,6 +284,8 @@ def _first_text_fast(s: str, name: str) -> str | None:
                 found = "".join(parts)
                 parts = None
                 close_at = -1
+                if tail_c and pos < n and _tail_accepts(s, pos, b):
+                    return found
             continue
         if kind == 6:
             idx = s.find("?>", pos)

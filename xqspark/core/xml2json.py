@@ -7,15 +7,15 @@ NodeToJSON re-expression (internal/utils/jsonutil.go:13-125):
 - repeated element names coalesce into arrays (jsonutil.go:111-125)
 - depth==0 flattens to the "\\n"-joined text content (jsonutil.go:62-64,95-109)
 
-The -j pipeline (cmd/root.go:296-341) parses XML/HTML STRICTLY
-(xmlquery.Parse with default decoder; malformed input must error,
-cmd/root_test.go:169-172), marshals (Go sorts map keys) and re-indents.
+The -j pipeline (cmd/root.go:296-341) is api.to_json: it parses XML/HTML
+STRICTLY (xmlquery.Parse with default decoder; malformed input must error,
+cmd/root_test.go:169-172), converts with node_to_json, marshals (Go sorts
+map keys) and re-indents.
 """
 
 from __future__ import annotations
 
-from .dom import DOCUMENT, ELEMENT, TEXT, DomNode, parse_dom
-from .fmt_json import format_value
+from .dom import DOCUMENT, ELEMENT, TEXT, DomNode
 from .textutil import go_trim_space
 
 
@@ -91,17 +91,3 @@ def _add_to_result(result: dict, key: str, value) -> None:
     else:
         result[key] = value
 
-
-def xml_to_json(data: bytes | str, depth: int = -1, compact: bool = False) -> str:
-    """-j on XML/HTML input: strict parse -> NodeToJSON -> marshal+format.
-    Raises XmlSyntaxError on malformed input (cmd/root_test.go:169-172)."""
-    doc = parse_dom(data, strict=True)
-    result = node_to_json(doc, depth)
-    indent = "" if compact else "  "
-    return format_value(result, indent) + "\n"
-
-
-def text_to_json(content: str, compact: bool = False) -> str:
-    """-j on plain text: {"text": content} (cmd/root.go:322-330)."""
-    indent = "" if compact else "  "
-    return format_value({"text": content}, indent) + "\n"
