@@ -411,7 +411,11 @@ def skew_ratio(spark, rows: int = 20000) -> dict:
     """max/median per-partition extraction time on the Zipf-skewed corpus:
     the proof that salted repartitioning actually levels hot hosts (an
     unsalted partitioning puts the top host's whole tail in one task).
-    One output row per partition via mapInPandas."""
+    One output row per partition via mapInPandas. Each partition's time
+    is the CPU time of its core calls only (``time.thread_time``): wall
+    time would also count the wait for its Arrow batches and the time
+    the host gives other processes, which measure the JVM feed and the
+    host's load, not the partition's work."""
     import statistics
 
     import pandas as pd
@@ -429,13 +433,15 @@ def skew_ratio(spark, rows: int = 20000) -> dict:
     def timed(batches):
         from xqspark.core.api import xpath_query
 
-        t0 = time.perf_counter()
         n = 0
+        sec = 0.0
         for b in batches:
+            t0 = time.thread_time()
             for payload in b["html"]:
                 xpath_query(bytes(payload), "//title", True)
-                n += 1
-        yield pd.DataFrame({"n": [n], "sec": [time.perf_counter() - t0]})
+            sec += time.thread_time() - t0
+            n += len(b)
+        yield pd.DataFrame({"n": [n], "sec": [sec]})
 
     res = df.mapInPandas(timed, "n long, sec double").collect()
     times = sorted(r["sec"] for r in res if r["n"] > 0)

@@ -493,6 +493,22 @@ _TAIL_REFUSED = [
 # accepts the namespace binding and the CR, which the C tail check must
 # therefore never see (the page gate and the "xmlns" test keep them out)
 _TAIL_WELL_FORMED = ['<b>y</b>', '<c d="e"/>', '<a xmlns="u"/>', '<b>\r\n</b>', '<b>]]></b>']
+# tail constructs expat accepts that the C tail check must refuse before
+# expat runs (the scan's loop refuses them, or, for '<' in a comment, the
+# guard is stricter than the loop), and a PI target both accept
+_TAIL_FORBIDDEN = [
+    "<e b='c'/>",  # a single-quoted value
+    '<e b = "c"/>',  # '=' with spaces around it
+    '<e xml:lang="en"/>',  # a colon in an attribute name
+    "<\u00e9/>",  # a non-ASCII element name
+    "<x:y/>",  # a colon in an element name
+    "&#65;",  # character references in text
+    "&#x41;",
+    '<e a="&amp;"/>',  # a reference in an attribute value
+    '<e a="&#65;"/>',
+    "<?p\u00e9 x?>",  # a non-ASCII PI target: the loop skips it too
+    "<!-- a < b -->",  # '<' inside a comment
+]
 
 
 def _count_tail(monkeypatch):
@@ -546,7 +562,8 @@ def test_projected_first_text_tail_differential(monkeypatch):
     """Random soups over the fragment lists, each after a settled match:
     the scan with its C tail check answers (text or fallback) what the
     scan's loop alone answers, prints what the tree route prints, and both
-    outcomes of the check occur."""
+    outcomes of the check occur. Mutations of _tail_accepts this catches:
+    no '&#' test, single quotes allowed in the guard's start-tag shape."""
     import random
 
     from xqspark.core import dom
@@ -554,9 +571,13 @@ def test_projected_first_text_tail_differential(monkeypatch):
     seen = _count_tail(monkeypatch)
     counted = dom._tail_accepts
     random.seed(1717)
-    frags = _PROJECTED_FRAGS + _TAIL_REFUSED + _TAIL_WELL_FORMED
-    for _ in range(3000):
-        tail = "".join(random.choice(frags) for _ in range(random.randint(1, 6)))
+    frags = _PROJECTED_FRAGS + _TAIL_REFUSED + _TAIL_WELL_FORMED + _TAIL_FORBIDDEN
+    # half the soups hold only fragments expat accepts, so that the guard,
+    # not expat, is what stands between a forbidden construct and True
+    clean = _TAIL_WELL_FORMED[:2] + _TAIL_FORBIDDEN
+    for i in range(4000):
+        pool = clean if i % 2 else frags
+        tail = "".join(random.choice(pool) for _ in range(random.randint(1, 6)))
         doc = "<r><t>x</t>" + tail + random.choice(["</r>", ""])
         monkeypatch.setattr(dom, "_tail_accepts", lambda s, pos, b: False)
         loop_only = _scan_outcome(doc, "t")
@@ -566,48 +587,35 @@ def test_projected_first_text_tail_differential(monkeypatch):
     assert seen[True] > 100 and seen[False] > 100, seen
 
 
-def _token_walk_end(s, pos):
-    """Where the scan's loop stops tokenizing s from pos: _DOM_TOKEN
-    token by token, a PI running to the first '?>'."""
-    from xqspark.core.dom import _DOM_TOKEN
+def test_projected_tail_guard_forbidden(monkeypatch):
+    """Each _TAIL_FORBIDDEN fragment after a settled match: expat accepts
+    the page, so the guard and the '&#' test alone keep the check from
+    answering True where the scan's loop refuses; the scan answers what
+    its loop alone answers and prints what the tree route prints."""
+    from pyexpat import ParserCreate
 
-    while pos < len(s):
-        m = _DOM_TOKEN.match(s, pos)
-        if m is None:
-            return pos
-        end = m.end()
-        if m.lastindex == 6:
-            idx = s.find("?>", end)
-            if idx == -1:
-                return pos
-            end = idx + 2
-        pos = end
-    return pos
+    from xqspark.core import dom
 
-
-def test_projected_tail_regex_matches_token_walk():
-    """_DOM_TAIL and _DOM_TOKEN are built from the same shapes; on the
-    differential corpus, from every offset, one _DOM_TAIL.match stops
-    where the token-by-token walk stops."""
-    import random
-
-    from xqspark.core.dom import _DOM_TAIL
-
-    random.seed(5151)
-    frags = _PROJECTED_FRAGS + _TAIL_REFUSED
-    for _ in range(1500):
-        doc = "".join(random.choice(frags) for _ in range(random.randint(1, 10)))
-        for pos in range(len(doc) + 1):
-            assert _DOM_TAIL.match(doc, pos).end() == _token_walk_end(doc, pos), (
-                repr(doc),
-                pos,
-            )
+    seen = _count_tail(monkeypatch)
+    counted = dom._tail_accepts
+    for frag in _TAIL_FORBIDDEN:
+        doc = f"<r><t>x</t>{frag}</r>"
+        ParserCreate("utf-8").Parse(doc.encode(), True)  # well-formed
+        monkeypatch.setattr(dom, "_tail_accepts", lambda s, pos, b: False)
+        loop_only = _scan_outcome(doc, "t")
+        monkeypatch.setattr(dom, "_tail_accepts", counted)
+        assert _scan_outcome(doc, "t") == loop_only, frag
+        assert _projected_first_text(doc, "//t") == _tree_first_text(doc, "//t"), frag
+    # only the PI target passes the guard; the rest are refused before
+    # expat (each page is scanned twice: directly, then through xpath_query)
+    assert seen == {False: 2 * (len(_TAIL_FORBIDDEN) - 1), True: 2}, seen
 
 
 def test_projected_first_text_entity_pages(monkeypatch):
     """DTD entity pages (a billion-laughs page, an internal entity used in
     the match) print what the tree route prints, fast, and expat never
-    reads a DTD: the tail regex refuses any '[' in a directive first."""
+    reads a DTD: the guard refuses every directive in the tail first.
+    This catches _tail_accepts running expat before the guard."""
     import time
 
     from xqspark.core import dom

@@ -19,6 +19,7 @@ from xqspark.pipeline import (
     synthesize_pages,
     with_host_salt,
 )
+from test_plans import SF_DIR as PLANS_SF_DIR
 from xqspark.udfs import (
     content_type_col,
     doc_udf,
@@ -1060,3 +1061,143 @@ def test_dedup_pipeline_cross_op_invariants(spark):
         by_cluster.setdefault(c, []).append(d)
     for c, members in by_cluster.items():
         assert c == min(members)  # representative is the member min
+
+
+# the generated sf corpora (TESTDATA.md): test_plans.SF_DIR and its siblings
+TESTDATA = pathlib.Path(PLANS_SF_DIR).parent
+UNENCODABLE = b"<r><title>a\xff</title></r>"  # text keeps a lone surrogate
+
+
+def _unencodable_pages(spark):
+    rows = [("bad", None, UNENCODABLE, "", "en"), ("ok", None, b"<r><title>t</title></r>", "", "en")]
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "mode, query, ok",
+    [
+        ("xpath", "//title", "t\n"),
+        ("xpath-single", "//title", "t\n"),
+        ("beautify", "", "<r>\n  <title>t</title>\n</r>\n"),
+    ],
+    ids=["xpath", "xpath-single", "beautify"],
+)
+def test_extract_pages_contains_unencodable_text(spark, mode, query, ok):
+    """Extracted text that keeps an undecodable input byte has no UTF-8
+    form: that row gets NULL and an error, the batch's other rows and the
+    task go on."""
+    got = {r["url"]: r for r in extract_pages(_unencodable_pages(spark), mode, query).collect()}
+    assert got["bad"]["extracted"] is None
+    assert got["bad"]["error"].startswith("UnicodeEncodeError: "), got["bad"]["error"]
+    assert got["bad"]["n_bytes"] == len(UNENCODABLE)
+    assert (got["ok"]["extracted"], got["ok"]["error"]) == (ok, None)
+
+
+def test_utf8_arrays_escapes_unencodable_errors():
+    from xqspark.udfs import utf8_arrays
+
+    texts, errors = utf8_arrays(["a", "b\udcff", None], [None, None, "E: c\udcff"])
+    assert texts.to_pylist() == ["a", None, None]
+    assert errors.to_pylist()[0] is None
+    assert errors.to_pylist()[1].startswith("UnicodeEncodeError: ")
+    assert errors.to_pylist()[2] == "E: c\\udcff"
+
+
+def test_doc_udfs_contain_unencodable_text(spark):
+    """doc_udf and the xpath values factory give NULL for a result with
+    no UTF-8 form instead of failing the task."""
+    from xqspark.core.api import xpath_query
+
+    df = _unencodable_pages(spark)
+    for udf, ok in (
+        (doc_udf(lambda p: xpath_query(p, "//title", single_node=True)), "t\n"),
+        (make_xpath_values_udf("//title"), ["t"]),
+    ):
+        got = dict(df.select("url", udf("html")).collect())
+        assert got == {"bad": None, "ok": ok}
+
+
+@pytest.mark.parametrize("scale", ["0.001", "0.01", "0.1"])
+def test_declared_table_schemas_match_inferred(spark, scale):
+    """Every catalog table reads with the schema Spark would infer from
+    its file, so declaring it changes nothing a query sees."""
+    from xqspark.queries import _TABLE_DDL, _read
+
+    sf = str(TESTDATA / f"sf{scale}")
+    for table in _TABLE_DDL:
+        inferred = spark.read.parquet(f"{sf}/{table}.parquet").schema
+        assert _read(spark, sf, table).schema == inferred, table
+
+
+@pytest.fixture(scope="module")
+def pages_file(tmp_path_factory):
+    """A generated xml_title_small pages file (perfbench's writer)."""
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).parent.parent))
+    from perfbench.gen import generate
+
+    return generate("xml_title_small", 7, 300, str(tmp_path_factory.mktemp("pages")))["path"]
+
+
+def test_read_pages_schema_matches_inferred(spark, pages_file):
+    from xqspark.pipeline import read_pages
+
+    assert read_pages(spark, pages_file).schema == spark.read.parquet(pages_file).schema
+
+
+def test_building_a_pass_runs_no_job(spark, pages_file):
+    """read_pages -> extract_pages -> lineage, and each catalog table
+    read, plan without a Spark job: no schema inference on any read."""
+    from xqspark.pipeline import read_pages
+    from xqspark.queries import _TABLE_DDL, _read
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-only", "build a pass without running it")
+    try:
+        lineage(extract_pages(read_pages(spark, pages_file), "xpath-single", "//title"))
+        for table in _TABLE_DDL:
+            _read(spark, PLANS_SF_DIR, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("plan-only") == []
+
+
+def test_read_pages_tolerates_layout(spark, pages_file, tmp_path):
+    """A pages file with html stored as a string, or with its columns
+    reordered and extra ones added, reads to the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xqspark.pipeline import read_pages
+
+    def rows(path):
+        return sorted(tuple(r) for r in read_pages(spark, path).collect())
+
+    base = pq.read_table(pages_file)
+    # keep the pages that are valid UTF-8, which a string column can hold
+    keep = [h is None or _is_utf8(h) for h in base.column("html").to_pylist()]
+    base = base.filter(pa.array(keep))
+    pq.write_table(base, tmp_path / "base.parquet")
+    html = pa.array(
+        [None if h is None else h.decode() for h in base.column("html").to_pylist()],
+        pa.string(),
+    )
+    as_string = base.set_column(base.schema.get_field_index("html"), "html", html)
+    pq.write_table(as_string, tmp_path / "string.parquet")
+    shuffled = base.select(["lang", "html", "warc_ts", "url", "text"]).append_column(
+        "extra", pa.array(range(base.num_rows), pa.int64())
+    )
+    pq.write_table(shuffled, tmp_path / "shuffled.parquet")
+    want = rows(str(tmp_path / "base.parquet"))
+    assert len(want) > 250
+    assert rows(str(tmp_path / "string.parquet")) == want
+    assert rows(str(tmp_path / "shuffled.parquet")) == want
+
+
+def _is_utf8(b: bytes) -> bool:
+    try:
+        b.decode()
+        return True
+    except UnicodeDecodeError:
+        return False

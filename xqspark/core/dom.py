@@ -133,8 +133,8 @@ _DOM_BAD_CLASS = "".join(rf"\x{c:02x}" for c in _DOM_BAD_BYTES)
 # on the same input. The text branch is unrolled (runs of [^<&] between
 # whole entities), so an ordinary run costs one character class, not a
 # per-character alternation. The shapes are written once: _DOM_TOKEN
-# captures their parts for the scan's loop, _DOM_TAIL is the same
-# alternatives without groups for the C tail check.
+# captures their parts for the scan's loop, and _DOM_GUARD reuses the
+# start-tag shape for the C tail check.
 _DOM_NAME = r"[A-Za-z_][A-Za-z0-9_.\-]*"
 # [^<&] written as ranges: sre then tests a bitmap, ~3.5 ns a character
 # where its negated two-literal form takes ~7.6 ns, and text is most of
@@ -155,18 +155,16 @@ _DOM_SHAPES = (
     r"<!(?P<directive>[A-Za-z][^>'\"<\[]*)>",
 )
 _DOM_TOKEN = _re.compile("|".join(f"(?:{p})" for p in _DOM_SHAPES))
-# (?>T)*+ over the same alternatives: the atomic group commits each token
-# to the match _DOM_TOKEN.match would return, and the possessive repeat
-# stops where the scan's loop would first fail, so .end() == len(s)
-# exactly when the loop would tokenize the rest of s. The PI alternative
-# runs to the first '?>', as the loop's s.find("?>") does.
-_DOM_TAIL = _re.compile(
-    "(?>"
-    + "|".join(
-        _re.sub(r"\(\?P<\w+>", "(?:", p + (r"(?s:.*?)\?>" if p is _DOM_PI else ""))
-        for p in _DOM_SHAPES
-    )
-    + ")*+"
+# The first '<' in s[pos:] that opens none of the loop's tail shapes: an
+# end tag, a PI, a comment or a start tag (_DOM_SHAPES[0] without its
+# groups). A directive, CDATA, a colon or non-ASCII name, a single-quoted
+# or spaced attribute, '&' or '<' in an attribute value all stop here.
+# sre finds each '<' with its literal-prefix scan, so the text between
+# them costs no per-token match.
+_DOM_GUARD = _re.compile(
+    "<(?!/" + _DOM_NAME + r"[ \t\n]*>|\?[A-Za-z_]|!--|"
+    + _re.sub(r"\(\?P<\w+>", "(?:", _DOM_SHAPES[0][1:])
+    + ")"
 )
 _DOM_TEXT_BAD = _re.compile("[" + _DOM_BAD_CLASS + r"]|\]\]>")
 
@@ -185,16 +183,38 @@ def _unescape_predefined(t: str) -> str:
 
 def _tail_accepts(s: str, pos: int, b: bytes) -> bool:
     """True when the scan's loop would accept s[pos:] after a settled
-    match, from two C calls instead of the per-token loop. The
-    _DOM_TAIL call comes first, and that order is an invariant: it
-    admits only _DOM_TOKEN shapes, whose directives hold no '[', so
-    expat never reads a DTD internal subset or an entity declaration.
-    Within those shapes, expat accepting the page's UTF-8 form ``b``
-    (its declared encoding overridden) means every end tag closes the
-    open element of its name and none is open at EOF. Expat also refuses
+    match, from C calls instead of the per-token loop: no _DOM_GUARD
+    hit and no '&#' in the tail, then expat accepting the page's UTF-8
+    form ``b`` (its declared encoding overridden).
+
+    The guard comes first, and that order is an invariant: the tail then
+    holds no '<!' but comments, so expat never reads a DTD internal
+    subset, an entity declaration or CDATA from it (the head, which the
+    loop already accepted, holds no '[' or quote in a directive either).
+
+    Why True is exact, on a page the bad-text gate cleared and that
+    holds no "xmlns": every '<' of the tail opens an end tag, a PI, a
+    comment or a start tag of the loop's own shapes, so the loop reads
+    the same tags; what lies between them is text (or comment or PI
+    bodies, which the loop skips as expat does, to the first '-->' or
+    '?>'). The tail constructs expat accepts and the loop refuses are
+    character references (no '&#'), colon or non-ASCII names,
+    single-quoted values, '=' with spaces around it, '&' in an attribute
+    value and '<!' directives (none passes the guard). A named entity can
+    only be one of the five predefined ones the loop decodes: there is no
+    DTD subset or external ID, and expat refuses undeclared entities.
+    Expat accepting the page then means every end tag closes the open
+    element of its name and none is open at EOF. Expat also refuses
     pages the loop accepts (two roots, text outside the root, '--' in a
-    comment, a duplicate attribute); False then only sends the loop on."""
-    if _DOM_TAIL.match(s, pos).end() != len(s):
+    comment, a duplicate attribute), and the guard refuses some (a '<'
+    in a comment body): False then only sends the loop on."""
+    if _DOM_GUARD.search(s, pos) is not None:
+        return False
+    # a one-character find is a memchr (~0.2 us on a 2 KB tail), a
+    # two-character one a per-character loop (~2.4 us); most tails hold
+    # no '&' at all
+    amp = s.find("&", pos)
+    if amp >= 0 and s.find("&#", amp) >= 0:
         return False
     try:
         _expat_parser("utf-8").Parse(b, True)
@@ -215,8 +235,10 @@ def _first_text_fast(s: str, name: str) -> str | None:
     open at EOF. A malformed tail after the match still rejects. Once the
     match is settled (closed, or self-closed) on a page the bad-text gate
     cleared and that holds no "xmlns", _tail_accepts checks the rest in C:
-    _DOM_TAIL first, then expat, an order that is an invariant (the regex
-    keeps DTD internal subsets and entity declarations away from expat).
+    _DOM_GUARD and a '&#' search first, then expat, an order that is an
+    invariant (the guard keeps directives, and so DTD internal subsets
+    and entity declarations, away from expat); its docstring gives why an
+    accepted tail is one the loop would accept.
     When it refuses, the same loop goes on from where it stopped, so the
     returned text always comes from this loop. On every rejection it
     raises _DomFallback and the caller runs the general token loop

@@ -6,10 +6,10 @@ North-rule contract (BASELINE.json): over an Iceberg-style table
 - salted repartitioning on url-host defuses domain skew BEFORE the
   Python-UDF compute (AQE splits shuffle partitions by bytes, not by
   UDF CPU cost, so explicit salting is required)
-- extraction runs in mapInArrow through udfs.map_docs, the per-row form
-  of udfs.map_arrow (iterator of Arrow batches — streaming, never
-  collected; url and part_key pass through as Arrow arrays), one
-  pure-Python core call per document, in
+- extraction runs in mapInArrow through udfs.map_arrow (iterator of
+  Arrow batches — streaming, never collected; url and part_key pass
+  through as Arrow arrays), one pure-Python core call per document
+  (text with no UTF-8 form is contained per row by udfs.utf8_arrays), in
   ONE task wave (defaultParallelism partitions): every Python task pays
   a fixed worker set-up on top of its rows (a trivial stage at local[4]
   costs ~50 ms more per extra wave of 4 tasks with xqspark._daemon, which
@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .udfs import map_docs
+from .udfs import map_arrow, utf8_arrays
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -107,10 +107,15 @@ def build_session(cpus: int | None = None, app: str = "xqspark") -> SparkSession
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Iceberg when a catalog is configured; identical-schema parquet else."""
+    """Iceberg when a catalog is configured; identical-schema parquet else.
+
+    The parquet read declares PAGES_SCHEMA, so Spark plans it without a
+    schema-inference job (one 1-task job, 50-100 ms a read at local[4]).
+    Columns are matched by name: extra columns are not read, and an
+    ``html`` column stored as a string reads as its UTF-8 bytes."""
     if path.startswith("iceberg:"):
         return spark.read.format("iceberg").load(path[len("iceberg:"):])
-    return spark.read.parquet(path)
+    return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -260,7 +265,7 @@ def extract_pages(
     """pages -> (url, part_key, extracted, error, n_bytes).
 
     Plan shape: scan(url, html) [column-pruned] -> salted repartition on
-    (host, salt) -> MapInArrow (``udfs.map_docs`` over ``udfs.map_arrow``).
+    (host, salt) -> MapInArrow (``udfs.map_arrow``, one core call a row).
     Exactly one shuffle.
     An unknown ``mode`` raises ValueError here, before any Spark job.
 
@@ -285,7 +290,7 @@ def extract_pages(
         df = df.repartition(nparts, "host", "salt")
     # repartition_to == 0: caller already partitioned the input (e.g. the
     # steady-state bench times the UDF stage without the one-time
-    # exchange) — host/salt are never computed. Either way map_docs
+    # exchange) — host/salt are never computed. Either way map_arrow
     # projects the input down to url, part_key and html, so the Arrow
     # batches carry only those.
 
@@ -297,7 +302,11 @@ def extract_pages(
         except Exception as exc:  # per-row containment, never task failure
             return None, f"{type(exc).__name__}: {exc}"[:500], len(payload)
 
-    return map_docs(df, "html", one, EXTRACT_SCHEMA, keep=("url", "part_key"))
+    def rows(col):
+        extracted, error, n_bytes = zip(*[one(v) for v in col.to_pylist()])
+        return (*utf8_arrays(extracted, error), n_bytes)
+
+    return map_arrow(df, ["html"], rows, EXTRACT_SCHEMA, keep=("url", "part_key"))
 
 
 def lineage(extracted: DataFrame) -> DataFrame:
@@ -333,9 +342,10 @@ def run_with_resume(
     keyed = with_part_key(pages, n_buckets)  # host/salt not needed here
     # probe via the Spark reader, NOT os.path: the manifest may live on
     # distributed storage (hdfs://, s3a://) invisible to the driver's
-    # local filesystem
+    # local filesystem. Only part_key is read, declared, so the probe runs
+    # no schema-inference job.
     try:
-        done_parts = spark.read.parquet(manifest_path).select("part_key").distinct()
+        done_parts = spark.read.schema("part_key bigint").parquet(manifest_path).distinct()
         done_parts.first()  # force existence check now
     except AnalysisException as exc:
         # ONLY a missing manifest means "first run" — a transient storage

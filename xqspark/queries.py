@@ -105,6 +105,30 @@ def _tokens(col: str = "text"):
     return F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda x: x != "")
 
 
+# The catalog tables' columns, as Spark infers them from the corpora's
+# parquet files (timestamps without a time zone read as timestamp_ntz).
+# Declared, a read runs no schema-inference job.
+_TABLE_DDL = {
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+}
+
+
+def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``sf_dir``'s ``table`` with its columns declared (_TABLE_DDL)."""
+    return spark.read.schema(_TABLE_DDL[table]).parquet(f"{sf_dir}/{table}.parquet")
+
+
 def _docs(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
@@ -115,7 +139,7 @@ def _docs(
     per-row work is heavy — UDF parses and per-token HOFs (simhash
     17.0 -> 1.5 s, repetition 3.6 -> 0.57 s, quality_score
     2.4 -> 0.54 s). Aggregate-first consumers pass spread=False."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _read(spark, sf_dir, "documents")
     return _spread(df) if spread else df
 
 
@@ -125,7 +149,7 @@ def _emb(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     there the spread exchange only adds 64 near-empty tasks per job at
     bench scale, while the JVM per-pair cosine of the search join still
     wants the parallelism (spread=True)."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = _read(spark, sf_dir, "embeddings")
     return _spread(df) if spread else df
 
 
@@ -660,7 +684,7 @@ def q_dedup_groups_sql():
 
 
 def q_latest_event_per_user(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = _read(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         events.withColumn("rn", F.row_number().over(w))
@@ -695,7 +719,7 @@ def q_lineage_buckets_sql():
 
 
 def q_pricing_summary(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _read(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -723,8 +747,8 @@ def q_pricing_summary_sql():
 
 
 def q_supplier_revenue(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = _read(spark, sf_dir, "lineitem")
+    sup = _read(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
             "revenue"
@@ -746,7 +770,7 @@ def q_supplier_revenue_sql():
 
 
 def q_events_hourly(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = _read(spark, sf_dir, "events")
     return events.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(

@@ -16,17 +16,19 @@ Vectorized UDFs throughout, never per-row Python UDFs. Two boundaries:
   output columns, for the numpy kernels in ``queries``; ``list_parts``
   decodes an Arrow list column for them. ``map_docs(df, payload, fn,
   schema, keep)`` is its per-row form (one row in, one row of several
-  columns out) for extract_pages and the multimodal decoders. ``fn``
-  owns its NULL and error policy on both.
+  columns out) for the multimodal decoders. ``fn`` owns its NULL and
+  error policy on both; ``utf8_arrays`` contains text with no UTF-8
+  form per row for extract_pages, which maps its rows itself.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from xqspark.core.api import xpath_values
 from xqspark.core.dom import parse_dom
@@ -42,7 +44,7 @@ def _as_payload(v):
     return str(v)
 
 
-def _series_map(series: pd.Series, fn) -> pd.Series:
+def _series_map(series: pd.Series, fn) -> list:
     """Apply fn per document inside the Arrow batch; None on error."""
     out = []
     for v in series:
@@ -54,18 +56,67 @@ def _series_map(series: pd.Series, fn) -> pd.Series:
             out.append(fn(payload))
         except Exception:
             out.append(None)
-    return pd.Series(out, dtype=object)
+    return out
+
+
+def _arrow_or_none(values: list, arrow_type) -> list:
+    """``values`` with each one that has no Arrow form of ``arrow_type``
+    replaced by None. Text that keeps undecodable input bytes (lone
+    surrogates from ``surrogateescape``) has no UTF-8 form, and one such
+    value would fail the whole task at the Arrow boundary. A batch that
+    converts is checked by one C call; only a batch that fails is tried
+    row by row."""
+    try:
+        pa.array(values, type=arrow_type)
+        return values
+    except UnicodeEncodeError:
+        pass
+    out = []
+    for v in values:
+        try:
+            pa.array([v], type=arrow_type)
+            out.append(v)
+        except UnicodeEncodeError:
+            out.append(None)
+    return out
 
 
 def doc_udf(fn, return_type=T.StringType()):
     """Per-document UDF over one payload column: NULL in gives NULL out,
-    and an exception in ``fn`` gives NULL for that row."""
+    and an exception in ``fn``, or a result with no UTF-8 form, gives
+    NULL for that row."""
+    arrow_type = to_arrow_type(return_type)
 
     @pandas_udf(return_type)
     def per_doc(payload: pd.Series) -> pd.Series:
-        return _series_map(payload, fn)
+        out = _series_map(payload, fn)
+        return pd.Series(_arrow_or_none(out, arrow_type), dtype=object)
 
     return per_doc
+
+
+def utf8_arrays(texts, errors):
+    """Per-row ``texts`` and ``errors`` (str or None) as two Arrow string
+    arrays. A text with no UTF-8 form (lone surrogates kept from
+    undecodable input) becomes NULL and its row's error names the
+    ``UnicodeEncodeError``; an error string with no UTF-8 form keeps its
+    surrogates as backslash escapes. A batch that encodes cleanly is
+    converted once, in C; only a batch that fails is walked row by row."""
+    try:
+        return pa.array(texts, pa.string()), pa.array(errors, pa.string())
+    except UnicodeEncodeError:
+        pass
+    texts, errors = list(texts), list(errors)
+    for i, t in enumerate(texts):
+        try:
+            if t is not None:
+                t.encode("utf-8")
+        except UnicodeEncodeError as exc:
+            texts[i] = None
+            errors[i] = f"{type(exc).__name__}: {exc}"[:500]
+        if errors[i] is not None:
+            errors[i] = errors[i].encode("utf-8", "backslashreplace").decode("utf-8")
+    return pa.array(texts, pa.string()), pa.array(errors, pa.string())
 
 
 def map_arrow(df, inputs, fn, schema, keep=()):
@@ -76,17 +127,16 @@ def map_arrow(df, inputs, fn, schema, keep=()):
     ``len(keep)`` fields are the ``keep`` columns, passed through as the
     batch's Arrow arrays. ``fn(*[batch.column(c) for c in inputs])``
     returns one sequence per remaining field, each built as one Arrow
-    array of the field's exact type. With ``keep=()`` the output need not
-    have one row per input row. Empty batches are skipped. ``fn`` owns the
-    NULL and error policy: an exception it raises fails the task."""
+    array of the field's exact type (an Arrow array of that type is
+    used as it is). With ``keep=()`` the output need not have one row
+    per input row. Empty batches are skipped. ``fn`` owns the NULL and
+    error policy: an exception it raises fails the task."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     computed = list(arrow_schema)[len(keep):]
 
     def run(batches):
-        import pyarrow as pa
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
